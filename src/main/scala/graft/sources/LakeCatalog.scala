@@ -541,13 +541,13 @@ object LakeCatalog {
     * the replacing move: it updates a record it just read. */
   private[graft] def writePending(dir: String, p: Pending,
                                   failIfExists: Boolean = false): Unit = {
-    val json = s"""{"schema":"${enc(p.schema.toDDL)}"""" +
-      p.layoutBy.map(c => s""","layoutBy":"${enc(c)}"""").getOrElse("") +
-      (if (p.statsBy.isEmpty) ""
-       else s""","statsBy":"${enc(p.statsBy.mkString(","))}"""") +
-      p.check.map(c => s""","check":"${enc(c)}"""").getOrElse("") + "}"
+    // values stay URL-encoded, the encoding every pending file has used
+    val fields = Seq("schema" -> Some(p.schema.toDDL),
+      "layoutBy" -> p.layoutBy,
+      "statsBy" -> Some(p.statsBy.mkString(",")).filter(_.nonEmpty),
+      "check" -> p.check).collect { case (k, Some(v)) => k -> enc(v) }
     val tmp = Paths.get(dir, s".pending-${java.util.UUID.randomUUID()}.tmp")
-    Files.write(tmp, json.getBytes("UTF-8"))
+    Files.write(tmp, LakeManifest.mapper.writeValueAsBytes(fields.toMap))
     if (failIfExists) {
       try Files.createLink(pendingPath(dir), tmp)
       finally Files.deleteIfExists(tmp)
@@ -579,10 +579,9 @@ object LakeCatalog {
     val p = pendingPath(dir)
     if (!Files.exists(p)) None
     else {
-      val json = new String(Files.readAllBytes(p), "UTF-8")
-      def field(k: String): Option[String] =
-        ("\"" + k + "\":\"([^\"]*)\"").r.findFirstMatchIn(json)
-          .map(m => dec(m.group(1)))
+      val json = LakeManifest.mapper.readValue(Files.readAllBytes(p),
+        classOf[Map[String, String]])
+      def field(k: String): Option[String] = json.get(k).map(dec)
       field("schema").map(ddl => Pending(StructType.fromDDL(ddl),
         field("layoutBy"),
         field("statsBy").toSeq.flatMap(_.split(',')).filter(_.nonEmpty),
@@ -612,7 +611,7 @@ class LakeV2Table(val dir: String, ident: String,
     val recorded = versionAsOf
       .map(v => LakeTable.logicalSchemaOf(dir, v))
       .getOrElse(LakeTable.currentLogicalSchema(dir))
-    if (recorded.nonEmpty) StructType.fromDDL(recorded.mkString(", "))
+    if (recorded.nonEmpty) LakeTable.structOf(recorded)
     else LakeCatalog.readPending(dir) match {
       // a CREATE'd-but-unborn table carries its declared schema
       case Some(p) if versionAsOf.isEmpty &&

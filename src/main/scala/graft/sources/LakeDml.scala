@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual, Literal, Not, Or}
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, InheritAnalysisRules, IsNotNull, IsNull, LessThan, LessThanOrEqual, Literal, Not, Or}
 import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteAction, DeleteFromTable, InsertAction, InsertStarAction, LogicalPlan, MergeAction, MergeIntoTable, UpdateAction, UpdateStarAction, UpdateTable}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
@@ -50,10 +50,20 @@ class LakeUpdateRule(session: SparkSession) extends Rule[LogicalPlan] {
   /** `.sql` of the expression with attribute QUALIFIERS stripped — the
     * analyzed tree renders `cat.ns.tbl.col`, which cannot re-resolve
     * against the bare table frame the command reads. */
-  private def bareSql(e: Expression): String =
+  private def bareSql(e: Expression): String = unqualified(e).sql
+
+  private def unqualified(e: Expression): Expression =
     e.transform {
       case a: AttributeReference => a.withQualifier(Seq.empty)
-    }.sql
+      // BETWEEN, IFNULL, NVL, … render their ORIGINAL parameters, which
+      // are constructor arguments but not children (the child is the
+      // replacement), so `transform` alone never reaches them
+      case r: InheritAnalysisRules =>
+        r.makeCopy(r.productIterator.map {
+          case c: Expression => unqualified(c)
+          case other => other.asInstanceOf[AnyRef]
+        }.toArray)
+    }
 
   override def apply(plan: LogicalPlan): LogicalPlan =
     plan.resolveOperators {

@@ -85,7 +85,7 @@ private[sources] object LakeFeedTable {
   private[sources] def feedSchemaOf(dir: String): StructType = {
     val base = {
       val recorded = LakeTable.currentLogicalSchema(dir)
-      if (recorded.nonEmpty) StructType.fromDDL(recorded.mkString(", "))
+      if (recorded.nonEmpty) LakeTable.structOf(recorded)
       else LakeCatalog.readPending(dir).map(_.schema).getOrElse(
         LakeTable.read(SparkSession.active, dir).schema)
     }

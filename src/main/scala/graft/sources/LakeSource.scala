@@ -339,7 +339,7 @@ class LakeRelation(ctx: SQLContext, dir: String, versionAsOf: Option[Long],
     val version = liveVersion
     // LOGICAL names (r13 column mapping)
     val recorded = LakeTable.logicalSchemaOf(dir, version)
-    if (recorded.nonEmpty) StructType.fromDDL(recorded.mkString(", "))
+    if (recorded.nonEmpty) LakeTable.structOf(recorded)
     else LakeTable.readVersion(ctx.sparkSession, dir, version).schema
   }
 
@@ -422,7 +422,7 @@ class LakeRelation(ctx: SQLContext, dir: String, versionAsOf: Option[Long],
       val physical = {
         val recorded = LakeTable.schemaOf(dir, version)
         if (recorded.isEmpty) schema
-        else StructType.fromDDL(recorded.mkString(", "))
+        else LakeTable.structOf(recorded)
       }
       // planned from manifest metadata alone (r15): the pruned file
       // list + recorded byte sizes feed FileListShim — zero FS calls

@@ -291,7 +291,7 @@ object LakeStreamSource {
   private[sources] def feedSchema(ctx: SQLContext, dir: String): StructType = {
     val table = {
       val recorded = LakeTable.currentLogicalSchema(dir)
-      if (recorded.nonEmpty) StructType.fromDDL(recorded.mkString(", "))
+      if (recorded.nonEmpty) LakeTable.structOf(recorded)
       else LakeTable.read(ctx.sparkSession, dir).schema
     }
     StructType(table.fields ++ Array(

@@ -7,6 +7,10 @@ import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import scala.util.Using
 
+import com.fasterxml.jackson.annotation.{JsonIgnoreProperties, JsonProperty,
+  JsonPropertyOrder}
+import com.fasterxml.jackson.databind.annotation.{JsonDeserialize,
+  JsonSerialize}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, expr, lit}
 import org.apache.spark.sql.types.StructType
@@ -89,18 +93,33 @@ object LakeTable {
     * column list, derived DETERMINISTICALLY (base-manifest schema merged
     * with the fresh files' schema — never a footer race over mixed files).
     * `op` names the action for the change feed ([[changesBetween]]):
-    * "optimize" versions rewrite layout only and emit no logical changes. */
+    * "optimize" versions rewrite layout only and emit no logical changes.
+    * The Jackson annotations map this class onto the full-snapshot
+    * manifest record ([[LakeManifest]]); `dir` is not serialized. */
+  @JsonIgnoreProperties(Array("dir"))
+  @JsonPropertyOrder(Array("version", "base", "op", "batches", "schema",
+    "stats", "dv", "renames", "dropped", "rowcounts", "hidden",
+    "bytecounts", "files"))
   final case class Staged(dir: String, version: Long, files: Seq[String],
+                          @JsonDeserialize(contentAs = classOf[java.lang.Long])
                           batches: Map[String, Long] = Map.empty,
                           schema: Seq[String] = Seq.empty,
                           stats: Seq[String] = Seq.empty,
-                          baseVersion: Long = 0L,
+                          @JsonProperty("base") baseVersion: Long = 0L,
                           op: String = "overwrite",
                           dv: Seq[String] = Seq.empty,
                           renames: Map[String, String] = Map.empty,
                           dropped: Seq[String] = Seq.empty,
+                          @JsonProperty("rowcounts")
+                          @JsonSerialize(using = classOf[LakeManifest.CountsSer])
+                          @JsonDeserialize(using = classOf[LakeManifest.CountsDe])
                           rows: Map[String, Long] = Map.empty,
+                          @JsonSerialize(using = classOf[LakeManifest.CountsSer])
+                          @JsonDeserialize(using = classOf[LakeManifest.CountsDe])
                           hidden: Map[String, Long] = Map.empty,
+                          @JsonProperty("bytecounts")
+                          @JsonSerialize(using = classOf[LakeManifest.CountsSer])
+                          @JsonDeserialize(using = classOf[LakeManifest.CountsDe])
                           bytes: Map[String, Long] = Map.empty)
 
   /** List a directory's entries with the stream CLOSED on exit —
@@ -213,15 +232,17 @@ object LakeTable {
   // a vacuum retains, so a resolution chain never crosses a reclaimed
   // version). Readers RESOLVE a version by folding checkpoint + delta
   // suffix — O(touched) amortized, O(K·touched + live/K) worst-case
-  // cold — through [[readManifest]], which still hands every caller the
-  // exact full-snapshot JSON the old format stored (same renderer, same
-  // field encodings), so the forty-odd accessor call sites and every
-  // pre-r15 manifest on disk keep working unchanged. Resolved snapshots
-  // are immutable once published and cache process-wide (byte-budgeted
-  // LRU). Commits whose delta would not be smaller than the snapshot
-  // (overwrites, clones, restores) write the full form directly — the
-  // delta is an optimization, never a requirement: any commit may write
-  // a full manifest and the chain simply anchors there.
+  // cold — through [[readManifest]], which hands every caller the typed
+  // [[Staged]] snapshot. Records are decoded and encoded by
+  // [[LakeManifest]], the one JSON codec, so no caller touches manifest
+  // bytes, and full-era and delta-era manifests resolve through the same
+  // decoder. Resolved snapshots are immutable once published and cache
+  // process-wide (byte-budgeted LRU); a full snapshot is serialized only
+  // when a full manifest or a checkpoint is written. Commits whose delta
+  // would not be smaller than the snapshot (overwrites, clones,
+  // restores) write the full form directly — the delta is an
+  // optimization, never a requirement: any commit may write a full
+  // manifest and the chain simply anchors there.
 
   /** Commits between full checkpoints (the Delta-protocol default). */
   private def checkpointInterval: Int =
@@ -229,27 +250,26 @@ object LakeTable {
       .flatMap(s => scala.util.Try(s.toInt).toOption)
       .filter(_ > 0).getOrElse(10)
 
-  private def isDeltaRecord(raw: String): Boolean =
-    raw.contains("\"delta\":1")
-
-  private def recordBase(raw: String): Long =
-    "\"base\":(-?\\d+)".r.findFirstMatchIn(raw).map(_.group(1).toLong)
-      .getOrElse(0L)
-
-  // resolved-snapshot cache: (canonical dir)#v(version) -> (full JSON,
+  // resolved-snapshot cache: (canonical dir)#v(version) -> (snapshot,
   // chain depth). Entries are immutable once written — manifests never
   // change under their name — so the cache needs no invalidation, only
   // a byte budget (a stream walking a long history would otherwise pin
-  // O(versions × live files) of JSON).
+  // O(versions × live files) of metadata).
   private val resolveCache =
-    new java.util.LinkedHashMap[String, (String, Int)](64, 0.75f, true)
+    new java.util.LinkedHashMap[String, (Staged, Int)](64, 0.75f, true)
   private var resolveCacheBytes = 0L
   private val resolveCacheBudget = 64L << 20
 
   private def cacheKey(dir: String, v: Long): String =
     Paths.get(dir).toAbsolutePath.normalize.toString + "#v" + v
 
-  private def cacheGet(k: String): Option[(String, Int)] =
+  /** Approximate footprint of a cached snapshot: its member strings. */
+  private def weightOf(s: Staged): Long =
+    (s.files.iterator ++ s.stats ++ s.dv ++ s.rows.keysIterator ++
+      s.hidden.keysIterator ++ s.bytes.keysIterator)
+      .map(_.length + 16L).sum
+
+  private def cacheGet(k: String): Option[(Staged, Int)] =
     resolveCache.synchronized(Option(resolveCache.get(k)))
 
   /** Test seam: force the next resolution COLD (a fresh JVM's view). */
@@ -259,208 +279,56 @@ object LakeTable {
       resolveCacheBytes = 0L
     }
 
-  private def cachePut(k: String, v: (String, Int)): Unit =
+  private def cachePut(k: String, v: (Staged, Int)): Unit =
     resolveCache.synchronized {
       val old = resolveCache.put(k, v)
       resolveCacheBytes +=
-        v._1.length.toLong - Option(old).map(_._1.length.toLong).getOrElse(0L)
+        weightOf(v._1) - Option(old).map(o => weightOf(o._1)).getOrElse(0L)
       val it = resolveCache.entrySet().iterator()
       while (resolveCacheBytes > resolveCacheBudget && it.hasNext) {
         val e = it.next()
         if (e.getKey != k) {
-          resolveCacheBytes -= e.getValue._1.length.toLong
+          resolveCacheBytes -= weightOf(e.getValue._1)
           it.remove()
         }
       }
     }
 
-  /** Resolve version `v` to its FULL snapshot JSON + chain depth (0 =
+  /** Resolve version `v` to its FULL snapshot + chain depth (0 =
     * anchored here: a full manifest or a checkpoint). The caller has
     * checked the manifest exists; a broken chain (delta against a
     * version that is gone without a checkpoint) throws loudly — it
     * means the table directory was altered outside the protocol. */
-  private def resolveFull(dir: String, v: Long): (String, Int) = {
+  private def resolveFull(dir: String, v: Long): (Staged, Int) = {
     val key = cacheKey(dir, v)
     cacheGet(key).getOrElse {
       val ck = checkpointPath(dir, v)
-      val out =
-        if (Files.exists(ck)) (new String(Files.readAllBytes(ck), UTF_8), 0)
-        else {
-          val raw = new String(
-            Files.readAllBytes(manifestPath(dir, v)), UTF_8)
-          if (!isDeltaRecord(raw)) (raw, 0)
-          else {
-            val b = recordBase(raw)
-            if (b <= 0L || (!Files.exists(manifestPath(dir, b)) &&
-                            !Files.exists(checkpointPath(dir, b))))
-              throw new IllegalStateException(
-                s"manifest chain broken in $dir: v$v is a delta against " +
-                s"v$b, which has neither manifest nor checkpoint — the " +
-                "directory was altered outside the commit/vacuum protocol")
-            val (bj, bd) = resolveFull(dir, b)
-            (applyDelta(dir, bj, raw, v), bd + 1)
-          }
-        }
+      val out = LakeManifest.decode(dir, Files.readAllBytes(
+        if (Files.exists(ck)) ck else manifestPath(dir, v))) match {
+        case Right(full) => (full, 0)
+        case Left(d) =>
+          val b = d.base
+          if (b <= 0L || (!Files.exists(manifestPath(dir, b)) &&
+                          !Files.exists(checkpointPath(dir, b))))
+            throw new IllegalStateException(
+              s"manifest chain broken in $dir: v$v is a delta against " +
+              s"v$b, which has neither manifest nor checkpoint — the " +
+              "directory was altered outside the commit/vacuum protocol")
+          val (bs, bd) = resolveFull(dir, b)
+          (LakeManifest.fold(bs, d), bd + 1)
+      }
       cachePut(key, out)
       out
     }
   }
 
-  /** Parse a FULL snapshot JSON back into its [[Staged]]-shaped state —
-    * the fold seed for delta application and the diff base for delta
-    * rendering. */
-  private def stateOf(dir: String, json: String): Staged =
-    Staged(dir, 0L, manifestFiles(json),
-           batches = manifestBatches(json),
-           schema = manifestSchema(json),
-           stats = manifestStats(json),
-           baseVersion = recordBase(json),
-           op = manifestOp(json),
-           dv = manifestDv(json),
-           renames = manifestRenames(json),
-           dropped = manifestDropped(json),
-           rows = manifestRows(json),
-           hidden = manifestHidden(json),
-           bytes = manifestBytes(json))
-
-  // delta-record field parsers — `d_`-prefixed names so no full-format
-  // regex can ever match them (and vice versa)
-  private def dStrs(json: String, field: String): Seq[String] =
-    ("\"" + field + "\":\\[([^\\]]*)\\]").r.findFirstMatchIn(json)
-      .map(_.group(1))
-      .map(s => "\"([^\"]+)\"".r.findAllMatchIn(s).map(_.group(1)).toSeq)
-      .getOrElse(Seq.empty)
-
-  private def dPairs(json: String, field: String): Map[String, Long] =
-    ("\"" + field + "\":\\[([^\\]]*)\\]").r.findFirstMatchIn(json)
-      .map(_.group(1))
-      .map(s => "\"([^\"]+)\\|(-?\\d+)\"".r.findAllMatchIn(s)
-        .map(m => m.group(1) -> m.group(2).toLong).toMap)
-      .getOrElse(Map.empty)
-
-  private def dLongMap(json: String, field: String): Map[String, Long] =
-    ("\"" + field + "\":\\{([^}]*)\\}").r.findFirstMatchIn(json)
-      .map(_.group(1))
-      .map(s => "\"([^\"]*)\":(-?\\d+)".r.findAllMatchIn(s)
-        .map(m => m.group(1) -> m.group(2).toLong).toMap)
-      .getOrElse(Map.empty)
-
-  /** Fold one delta record over its base's full snapshot and re-render
-    * the full form — by construction byte-identical to what the old
-    * full-manifest writer would have stored for this version
-    * ([[deltaJson]] refuses to write a delta whose fold would not
-    * reproduce the staged state exactly). */
-  private def applyDelta(dir: String, baseJson: String, delta: String,
-                         v: Long): String = {
-    val base = stateOf(dir, baseJson)
-    val rmf = dStrs(delta, "d_rmf").toSet
-    val rmdv = dStrs(delta, "d_rmdv").toSet
-    val rmstats = dStrs(delta, "d_rmstats").toSet
-    def fold(b: Map[String, Long], setF: String, delF: String) =
-      b -- dStrs(delta, delF) ++ dPairs(delta, setF)
-    manifestJson(Staged(dir, v,
-      files = base.files.filterNot(rmf) ++ dStrs(delta, "d_addf"),
-      batches = base.batches -- dStrs(delta, "d_delbatches") ++
-        dLongMap(delta, "d_setbatches"),
-      schema = manifestSchema(delta),
-      stats = base.stats.filterNot(rmstats) ++ dStrs(delta, "d_addstats"),
-      baseVersion = recordBase(delta),
-      op = manifestOp(delta),
-      dv = base.dv.filterNot(rmdv) ++ dStrs(delta, "d_adddv"),
-      renames = manifestRenames(delta),
-      dropped = manifestDropped(delta),
-      rows = fold(base.rows, "d_setrows", "d_delrows"),
-      hidden = fold(base.hidden, "d_sethidden", "d_delhidden"),
-      bytes = fold(base.bytes, "d_setbytes", "d_delbytes")), v)
-  }
-
-  /** Render `staged` as a DELTA against its base's resolved state —
-    * None when the fold would not reproduce the staged member ORDER
-    * exactly (restores and other order-shuffling commits write full
-    * manifests, keeping resolution byte-identical to the legacy
-    * format), or when the delta would not be smaller than the full
-    * snapshot (overwrites: the removal list IS the old file list). */
-  private def deltaJson(staged0: Staged, base: Staged,
-                        v: Long): Option[String] = {
-    // normalize exactly as manifestJson renders: hidden drops zeros
-    val staged = staged0.copy(hidden = staged0.hidden.filter(_._2 > 0L))
-    def arrDiff(bs: Seq[String], ss: Seq[String])
-        : Option[(Seq[String], Seq[String])] = {
-      val sSet = ss.toSet
-      val bSet = bs.toSet
-      val rm = bs.filterNot(sSet.contains)
-      val add = ss.filterNot(bSet.contains)
-      val rmSet = rm.toSet
-      if ((bs.filterNot(rmSet.contains) ++ add) == ss) Some((add, rm))
-      else None
-    }
-    def mapDiff(b: Map[String, Long], s: Map[String, Long])
-        : (Seq[(String, Long)], Seq[String]) = {
-      val set = s.toSeq.filter { case (k, n) => !b.get(k).contains(n) }
-      val del = b.keysIterator.filterNot(s.contains).toSeq
-      (set, del)
-    }
-    for {
-      (addf, rmf) <- arrDiff(base.files, staged.files)
-      (adddv, rmdv) <- arrDiff(base.dv, staged.dv)
-      (addstats, rmstats) <- arrDiff(base.stats, staged.stats)
-      (setRows, delRows) = mapDiff(base.rows, staged.rows)
-      (setHid, delHid) = mapDiff(base.hidden, staged.hidden)
-      (setBytes, delBytes) = mapDiff(base.bytes, staged.bytes)
-      (setBatches, delBatches) = mapDiff(base.batches, staged.batches)
-      deltaN = addf.size + rmf.size + adddv.size + rmdv.size +
-        addstats.size + rmstats.size + setRows.size + delRows.size +
-        setHid.size + delHid.size + setBytes.size + delBytes.size +
-        setBatches.size + delBatches.size
-      fullN = staged.files.size + staged.dv.size + staged.stats.size +
-        staged.rows.size + staged.hidden.size + staged.bytes.size +
-        staged.batches.size
-      if deltaN < fullN
-    } yield {
-      def sArr(field: String, xs: Seq[String]): String =
-        if (xs.isEmpty) ""
-        else xs.map("\"" + _ + "\"").mkString(s""""$field":[""", ",", "],")
-      def sPairs(field: String, xs: Seq[(String, Long)]): String =
-        if (xs.isEmpty) ""
-        else xs.sorted.map { case (f, n) => s""""$f|$n"""" }
-          .mkString(s""""$field":[""", ",", "],")
-      def sMap(field: String, xs: Seq[(String, Long)]): String =
-        if (xs.isEmpty) ""
-        else xs.sorted.map { case (k, n) => s""""$k":$n""" }
-          .mkString(s""""$field":{""", ",", "},")
-      val schemaField = staged.schema.map("\"" + _ + "\"")
-        .mkString("\"schema\":[", ",", "],")
-      val renamesField =
-        if (staged.renames.isEmpty) ""
-        else staged.renames.toSeq.sorted
-          .map { case (p, l) => s""""$p":"$l"""" }
-          .mkString("\"renames\":{", ",", "},")
-      val droppedField =
-        if (staged.dropped.isEmpty) ""
-        else staged.dropped.sorted.map("\"" + _ + "\"")
-          .mkString("\"dropped\":[", ",", "],")
-      s"""{"version":$v,"base":${staged.baseVersion},""" +
-        s""""op":"${staged.op}","delta":1,""" +
-        schemaField + renamesField + droppedField +
-        sArr("d_addf", addf) + sArr("d_rmf", rmf) +
-        sArr("d_adddv", adddv) + sArr("d_rmdv", rmdv) +
-        sArr("d_addstats", addstats) + sArr("d_rmstats", rmstats) +
-        sPairs("d_setrows", setRows) + sArr("d_delrows", delRows) +
-        sPairs("d_sethidden", setHid) + sArr("d_delhidden", delHid) +
-        sPairs("d_setbytes", setBytes) + sArr("d_delbytes", delBytes) +
-        sMap("d_setbatches", setBatches) +
-        sArr("d_delbatches", delBatches) +
-        "\"end\":1}"
-    }
-  }
-
   /** Write `checkpoint-v{N}.json` atomically (create-new; a concurrent
     * writer of the same immutable content simply loses the race). */
-  private def writeCheckpoint(dir: String, v: Long, full: String): Unit = {
+  private def writeCheckpoint(dir: String, v: Long, full: Staged): Unit = {
     val tmp = Paths.get(dir,
       s".checkpoint-${java.util.UUID.randomUUID()}.tmp")
     try {
-      Files.write(tmp, full.getBytes(UTF_8))
+      Files.write(tmp, LakeManifest.encode(full))
       try Files.createLink(checkpointPath(dir, v), tmp)
       catch { case _: FileAlreadyExistsException => () }
     } finally { Files.deleteIfExists(tmp); () }
@@ -476,108 +344,58 @@ object LakeTable {
       if (Files.exists(checkpointPath(dir, v))) return false
       val mp = manifestPath(dir, v)
       if (!Files.exists(mp)) return true // legacy hole: anchor above it
-      val raw = new String(Files.readAllBytes(mp), UTF_8)
-      if (!isDeltaRecord(raw)) return false
-      val b = recordBase(raw)
-      if (b <= 0L || drop.contains(b)) return b > 0L
-      v = b
+      LakeManifest.decode(dir, Files.readAllBytes(mp)) match {
+        case Right(_) => return false
+        case Left(d) =>
+          if (d.base <= 0L || drop.contains(d.base)) return d.base > 0L
+          v = d.base
+      }
     }
     false
   }
 
-  private def readManifest(dir: String, version: Long): Option[String] = {
-    val m = manifestPath(dir, version)
-    if (Files.exists(m)) Some(resolveFull(dir, version)._1)
+  /** Version `version`'s resolved snapshot, if its manifest exists. */
+  private def readManifest(dir: String, version: Long): Option[Staged] =
+    if (Files.exists(manifestPath(dir, version)))
+      Some(resolveFull(dir, version)._1.copy(dir = dir))
     else None
-  }
 
-  private def manifestFiles(json: String): Seq[String] =
-    "\"([^\"]+\\.parquet)\"".r.findAllMatchIn(json).map(_.group(1)).toSeq
-
-  /** Recorded `name TYPE` column list of a manifest. */
-  private def manifestSchema(json: String): Seq[String] =
-    "\"schema\":\\[([^\\]]*)\\]".r.findFirstMatchIn(json).map(_.group(1))
-      .map(s => "\"([^\"]+)\"".r.findAllMatchIn(s).map(_.group(1)).toSeq)
-      .getOrElse(Seq.empty)
-
-  /** Recorded per-file stats entries (`file|col|kind|min|max`). */
-  private def manifestStats(json: String): Seq[String] =
-    "\"stats\":\\[([^\\]]*)\\]".r.findFirstMatchIn(json).map(_.group(1))
-      .map(s => "\"([^\"]+)\"".r.findAllMatchIn(s).map(_.group(1)).toSeq)
-      .getOrElse(Seq.empty)
-
-  /** Recorded per-sink applied-batch watermarks. */
-  private def manifestBatches(json: String): Map[String, Long] =
-    "\"batches\":\\{([^}]*)\\}".r.findFirstMatchIn(json).map(_.group(1))
-      .map(s => "\"([^\"]*)\":(-?\\d+)".r.findAllMatchIn(s)
-        .map(m => m.group(1) -> m.group(2).toLong).toMap)
-      .getOrElse(Map.empty)
-
-  /** Per-file recorded ROW COUNTS (r14, verdict ask #4):
-    * `"rows":["<file>|<n>", …]` over data files AND `.dv` sidecars —
-    * the stats-entry encoding, so a member path ending `.parquet` is
-    * followed by `|`, never a closing quote, and the file-list regex
-    * can't mistake a rows entry for a file. With an entry for every
-    * listed member, the live cardinality is manifest ARITHMETIC —
-    * Σ(data rows) − Σ(sidecar positions) — and the DV DML
-    * count-equation audits cost zero table scans at commit time.
-    * Manifests written before r14 lack the field; every derivation
-    * falls back to counting when any entry is missing. */
-  private def manifestRows(json: String): Map[String, Long] =
-    "\"rowcounts\":\\[([^\\]]*)\\]".r.findFirstMatchIn(json)
-      .map(_.group(1))
-      .map(s => "\"([^\"]+)\\|(\\d+)\"".r.findAllMatchIn(s)
-        .map(m => m.group(1) -> m.group(2).toLong).toMap)
-      .getOrElse(Map.empty)
-
+  /** Per-member ROW COUNTS (r14, verdict ask #4) over data files AND
+    * `.dv` sidecars. With an entry for every listed member, the live
+    * cardinality is manifest ARITHMETIC — Σ(data rows) − Σ(sidecar
+    * positions) — and the DV DML count-equation audits cost zero table
+    * scans at commit time. Manifests written before r14 lack the field;
+    * every derivation falls back to counting when any entry is missing. */
   private[graft] def rowsOf(dir: String, version: Long): Map[String, Long] =
-    readManifest(dir, version).map(manifestRows).getOrElse(Map.empty)
+    readManifest(dir, version).fold(Map.empty[String, Long])(_.rows)
 
-  /** Per-member BYTE SIZES (r15, verdict ask #4): `"bytecounts":
-    * ["<file>|<n>", …]` over data files and sidecars — the same
-    * encoding as `rowcounts`. Synthesized at CLAIM time ([[claimAt]]):
-    * carried members copy the base manifest's entry, new members cost
-    * one driver-side stat each — O(touched) per commit, and the
-    * streaming admission control can then budget micro-batches by
-    * ADDED bytes (`maxBytesPerTrigger`) without per-trigger file-system
-    * stats. Manifests written before r15 lack the field; consumers
-    * fall back to `Files.size`. */
-  private def manifestBytes(json: String): Map[String, Long] =
-    "\"bytecounts\":\\[([^\\]]*)\\]".r.findFirstMatchIn(json)
-      .map(_.group(1))
-      .map(s => "\"([^\"]+)\\|(\\d+)\"".r.findAllMatchIn(s)
-        .map(m => m.group(1) -> m.group(2).toLong).toMap)
-      .getOrElse(Map.empty)
-
+  /** Per-member BYTE SIZES (r15, verdict ask #4) over data files and
+    * sidecars. Synthesized at CLAIM time ([[withBytes]]): carried
+    * members copy the base manifest's entry, new members cost one
+    * driver-side stat each — O(touched) per commit, and the streaming
+    * admission control can then budget micro-batches by ADDED bytes
+    * (`maxBytesPerTrigger`) without per-trigger file-system stats.
+    * Manifests written before r15 lack the field; consumers fall back
+    * to `Files.size`. */
   private[graft] def bytesOf(dir: String, version: Long): Map[String, Long] =
-    readManifest(dir, version).map(manifestBytes).getOrElse(Map.empty)
+    readManifest(dir, version).fold(Map.empty[String, Long])(_.bytes)
 
-  /** A manifest's recorded rows map restricted to the members a new
-    * version still lists — the carry-forward of [[manifestRows]]. */
-  private def carryRows(json: String,
-                        keep: Seq[String]): Map[String, Long] = {
-    val rows = manifestRows(json)
-    if (rows.isEmpty) rows
+  /** A snapshot's recorded rows map restricted to the members a new
+    * version still lists — the carry-forward of [[rowsOf]]. */
+  private def carryRows(s: Staged, keep: Seq[String]): Map[String, Long] =
+    if (s.rows.isEmpty) s.rows
     else {
       val k = keep.toSet
-      rows.filter { case (f, _) => k.contains(f) }
+      s.rows.filter { case (f, _) => k.contains(f) }
     }
-  }
 
-  /** Per-LIVE-data-file DV-HIDDEN position counts (r14):
-    * `"hidden":["<file>|<n>", …]` — cumulative across the file's
-    * sidecar entries. Keyed by the TARGET data file, not the sidecar,
-    * because a carried sidecar can hold INERT positions (naming files a
-    * partial rewrite removed from the manifest) — per-target entries
-    * drop with their file, so Σ(hidden over listed files) is exactly
-    * the live deficit while Σ(sidecar rows) would overcount. */
-  private def manifestHidden(json: String): Map[String, Long] =
-    "\"hidden\":\\[([^\\]]*)\\]".r.findFirstMatchIn(json)
-      .map(_.group(1))
-      .map(s => "\"([^\"]+)\\|(\\d+)\"".r.findAllMatchIn(s)
-        .map(m => m.group(1) -> m.group(2).toLong).toMap)
-      .getOrElse(Map.empty)
-
+  // `Staged.hidden` — per-LIVE-data-file DV-HIDDEN position counts (r14),
+  // cumulative across the file's sidecar entries. Keyed by the TARGET
+  // data file, not the sidecar, because a carried sidecar can hold INERT
+  // positions (naming files a partial rewrite removed from the manifest)
+  // — per-target entries drop with their file, so Σ(hidden over listed
+  // files) is exactly the live deficit while Σ(sidecar rows) would
+  // overcount.
   private def mergeHidden(base: Map[String, Long],
                           add: Map[String, Long]): Map[String, Long] =
     add.foldLeft(base) { case (m, (f, n)) =>
@@ -589,16 +407,11 @@ object LakeTable {
     * has a recorded count and — when deletion vectors ride the version
     * — the per-file hidden map was recorded too (tables whose whole
     * history was written by r14+ code). None → the caller counts. */
-  private def liveCountFromManifest(json: String): Option[Long] = {
-    val rows = manifestRows(json)
-    val files = manifestFiles(json)
-    val dv = manifestDv(json)
-    val hidden = manifestHidden(json)
-    if (files.forall(rows.contains) && (dv.isEmpty || hidden.nonEmpty))
-      Some(files.iterator.map(rows).sum -
-           files.iterator.map(f => hidden.getOrElse(f, 0L)).sum)
+  private def liveCountFromManifest(s: Staged): Option[Long] =
+    if (s.files.forall(s.rows.contains) && (s.dv.isEmpty || s.hidden.nonEmpty))
+      Some(s.files.iterator.map(s.rows).sum -
+           s.files.iterator.map(f => s.hidden.getOrElse(f, 0L)).sum)
     else None
-  }
 
   /** A version's LIVE row count by manifest arithmetic (r14) — None on
     * pre-r14 history where counts are unrecorded. The observability
@@ -623,22 +436,13 @@ object LakeTable {
       .orElse(sys.props.get("graft.lake.paranoidAudit"))
       .exists(_.trim.equalsIgnoreCase("true"))
 
-  private def manifestOp(json: String): String =
-    "\"op\":\"([^\"]*)\"".r.findFirstMatchIn(json).map(_.group(1))
-      .getOrElse("overwrite")
-
   /** Recorded deletion-vector sidecar paths (r11 DV prototype). Sidecars
     * are parquet files of `(file STRING, pos BIGINT)` deleted-row
-    * positions, named `*.dv` ON PURPOSE: the file-list regex requires a
-    * closing quote right after `.parquet`, so a sidecar entry can never
-    * be mistaken for a data file. */
-  private def manifestDv(json: String): Seq[String] =
-    "\"dv\":\\[([^\\]]*)\\]".r.findFirstMatchIn(json).map(_.group(1))
-      .map(s => "\"([^\"]+)\"".r.findAllMatchIn(s).map(_.group(1)).toSeq)
-      .getOrElse(Seq.empty)
-
+    * positions, named `*.dv` so a directory sweep ([[vacuum]]) and a
+    * reader of the table directory can tell them from data files; the
+    * manifest lists them in their own `dv` field. */
   private[graft] def dvOf(dir: String, version: Long): Seq[String] =
-    readManifest(dir, version).map(manifestDv).getOrElse(Seq.empty)
+    readManifest(dir, version).fold(Seq.empty[String])(_.dv)
 
   /** COLUMN MAPPING (r13): `"renames":{"<physical>":"<logical>"}` — the
     * display map of renamed columns. The manifest's `schema` and `stats`
@@ -647,27 +451,16 @@ object LakeTable {
     * first write — Delta's column-mapping invariant), so a rename is a
     * METADATA-ONLY commit and every already-written file stays readable;
     * logical names surface only at the user read/DML boundary. */
-  private def manifestRenames(json: String): Map[String, String] =
-    "\"renames\":\\{([^}]*)\\}".r.findFirstMatchIn(json).map(_.group(1))
-      .map(s => "\"([^\"]+)\":\"([^\"]+)\"".r.findAllMatchIn(s)
-        .map(m => m.group(1) -> m.group(2)).toMap)
-      .getOrElse(Map.empty)
-
   private[graft] def renamesOf(dir: String, version: Long)
       : Map[String, String] =
-    readManifest(dir, version).map(manifestRenames).getOrElse(Map.empty)
+    readManifest(dir, version).fold(Map.empty[String, String])(_.renames)
 
   /** DROPPED physical names (r13): tombstones that make `DROP COLUMN`
     * metadata-only AND safe — a later ADD/RENAME may never reuse a
     * dropped physical name, because carried files still hold its data
     * and a same-named column would silently resurrect it. */
-  private def manifestDropped(json: String): Seq[String] =
-    "\"dropped\":\\[([^\\]]*)\\]".r.findFirstMatchIn(json).map(_.group(1))
-      .map(s => "\"([^\"]+)\"".r.findAllMatchIn(s).map(_.group(1)).toSeq)
-      .getOrElse(Seq.empty)
-
   private[graft] def droppedOf(dir: String, version: Long): Seq[String] =
-    readManifest(dir, version).map(manifestDropped).getOrElse(Seq.empty)
+    readManifest(dir, version).fold(Seq.empty[String])(_.dropped)
 
   private[graft] def currentRenames(dir: String): Map[String, String] =
     currentVersion(dir).map(renamesOf(dir, _)).getOrElse(Map.empty)
@@ -677,8 +470,16 @@ object LakeTable {
   private[graft] def toLogical(df: DataFrame,
                         renames: Map[String, String]): DataFrame =
     if (renames.isEmpty) df
-    else df.select(df.columns.toSeq.map(n =>
-      col(n).as(renames.getOrElse(n, n))): _*)
+    else df.toDF(df.columns.toSeq.map(n => renames.getOrElse(n, n)): _*)
+
+  /** Recorded `name TYPE` entries as a schema. Each entry splits at its
+    * first space and the name is back-quoted for the DDL parser, so any
+    * column name reads back (`q.parquet`, `a"b` and `c}d` included). */
+  private[graft] def structOf(entries: Seq[String]): StructType =
+    StructType.fromDDL(entries.map { e =>
+      val a = e.split(" ", 2)
+      s"`${a(0).replace("`", "``")}` ${a(1)}"
+    }.mkString(", "))
 
   /** `name TYPE` entries with physical names replaced by logical. */
   private[sources] def logicalSchema(recorded: Seq[String],
@@ -709,32 +510,29 @@ object LakeTable {
     * is exactly "epoch N's merge is visible". Each concurrent sink onto
     * one table has its own key; the maps merge forward through [[stage]]. */
   def appliedBatch(dir: String, sink: String = ""): Option[Long] =
-    currentVersion(dir).flatMap(readManifest(dir, _))
-      .flatMap(manifestBatches(_).get(sink))
+    currentVersion(dir).flatMap(batchesOf(dir, _).get(sink))
 
   /** File list of the currently-published manifest. */
   def currentFiles(dir: String): Seq[String] =
-    currentVersion(dir).flatMap(readManifest(dir, _))
-      .map(manifestFiles).getOrElse(Seq.empty)
+    currentVersion(dir).fold(Seq.empty[String])(filesOf(dir, _))
 
   /** Schema (`name TYPE` per column) of the currently-published version. */
   def currentSchema(dir: String): Seq[String] =
-    currentVersion(dir).flatMap(readManifest(dir, _))
-      .map(manifestSchema).getOrElse(Seq.empty)
+    currentVersion(dir).fold(Seq.empty[String])(schemaOf(dir, _))
 
   // ---- per-version manifest accessors (the [[LakeSource]] read seam) ----
 
   private[sources] def schemaOf(dir: String, version: Long): Seq[String] =
-    readManifest(dir, version).map(manifestSchema).getOrElse(Seq.empty)
+    readManifest(dir, version).fold(Seq.empty[String])(_.schema)
 
   private[graft] def filesOf(dir: String, version: Long): Seq[String] =
-    readManifest(dir, version).map(manifestFiles).getOrElse(Seq.empty)
+    readManifest(dir, version).fold(Seq.empty[String])(_.files)
 
   private[graft] def opOf(dir: String, version: Long): String =
-    readManifest(dir, version).map(manifestOp).getOrElse("overwrite")
+    readManifest(dir, version).fold("overwrite")(_.op)
 
   private def batchesOf(dir: String, version: Long): Map[String, Long] =
-    readManifest(dir, version).map(manifestBatches).getOrElse(Map.empty)
+    readManifest(dir, version).fold(Map.empty[String, Long])(_.batches)
 
   // ---- typed per-file column stats (r9: multi-column, typed) ----------
 
@@ -748,6 +546,9 @@ object LakeTable {
     def maxLong: Option[Long] = if (kind == 'L') Some(mx.toLong) else None
   }
 
+  /** String stat values are URL-encoded with `.` → `%2E` and `|` →
+    * `%7C`: `|` separates the entry's fields, and `%2E` is the encoding
+    * every manifest on disk already uses, so it stays. */
   private[graft] def encodeStatString(s: String): String =
     URLEncoder.encode(s, "UTF-8").replace(".", "%2E").replace("|", "%7C")
   private[graft] def decodeStatString(s: String): String =
@@ -757,7 +558,7 @@ object LakeTable {
     * call. Legacy 4-field entries (`file|col|min|max`) parse as kind L. */
   private[graft] def statsOf(dir: String, version: Long)
       : Map[(String, String), ColStat] =
-    readManifest(dir, version).map(manifestStats).getOrElse(Seq.empty)
+    readManifest(dir, version).fold(Seq.empty[String])(_.stats)
       .flatMap { e =>
         e.split('|') match {
           case Array(f, c, k, mn, mx) if k.length == 1 =>
@@ -832,7 +633,7 @@ object LakeTable {
     if (recorded.isEmpty)
       spark.read.parquet(rels.map(f => Paths.get(dir, f).toString): _*)
     else org.apache.spark.sql.graftshim.FileListShim.parquetFrame(
-      spark, StructType.fromDDL(recorded.mkString(", ")),
+      spark, structOf(recorded),
       rels.map { f =>
         val p = Paths.get(dir, f)
         p.toString -> sizes.getOrElse(f, Files.size(p))
@@ -844,13 +645,11 @@ object LakeTable {
     * position capture off `_metadata` BEFORE any projection, prior-DV
     * anti-join, then the logical rename boundary. Returns
     * (frame, fileCol, posCol). */
-  private def liveTagged(spark: SparkSession, dir: String, json: String)
+  private def liveTagged(spark: SparkSession, dir: String, snap: Staged)
       : (DataFrame, String, String) = {
-    val files = manifestFiles(json)
-    val recorded = manifestSchema(json)
-    val renames = manifestRenames(json)
-    val reader = knownFrame(spark, dir, files, recorded,
-                            manifestBytes(json))
+    val files = snap.files
+    val renames = snap.renames
+    val reader = knownFrame(spark, dir, files, snap.schema, snap.bytes)
     val cols = reader.columns.toSeq
     val taken = cols ++ renames.values
     def free(b: String): String = {
@@ -873,7 +672,7 @@ object LakeTable {
       else reader
         .withColumn(fCol, relFileCol)
         .withColumn(pCol, col("_metadata.row_index"))
-    val prevDv = manifestDv(json)
+    val prevDv = snap.dv
     val live =
       if (prevDv.isEmpty) tagged
       else tagged.join(
@@ -886,34 +685,31 @@ object LakeTable {
     (out, fCol, pCol)
   }
 
-  private def readFiles(spark: SparkSession, dir: String, json: String,
+  private def readFiles(spark: SparkSession, dir: String, snap: Staged,
                         what: String): DataFrame = {
-    val files = manifestFiles(json).map(f => Paths.get(dir, f).toString)
-    val recorded = manifestSchema(json)
+    val recorded = snap.schema
     // a ZERO-FILE version with a recorded schema is a legal live state
     // since r15 (behavior 34's full-truncate CDC epoch): the schema
     // rides the manifest, so readers get the right empty shape instead
     // of a refusal, and the next epoch repopulates normally
-    if (files.isEmpty && recorded.nonEmpty)
+    if (snap.files.isEmpty && recorded.nonEmpty)
       return toLogical(
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType.fromDDL(recorded.mkString(", "))),
-        manifestRenames(json))
-    require(files.nonEmpty, s"$what lists no files in $dir")
+          structOf(recorded)),
+        snap.renames)
+    require(snap.files.nonEmpty, s"$what lists no files in $dir")
     // read under the RECORDED schema: columns come back in the
     // manifest-recorded order regardless of physical file layout, and a
     // carried pre-evolution file null-fills the columns it predates —
     // deterministic reads on evolved tables (no footer race). Planned
     // from manifest metadata alone (r15, knownFrame): zero FS calls.
-    val base = knownFrame(spark, dir, manifestFiles(json), recorded,
-                          manifestBytes(json))
+    val base = knownFrame(spark, dir, snap.files, recorded, snap.bytes)
     // DV-bearing versions filter deleted positions; DV-free versions
     // (the overwhelmingly common case) take the identical plan as before;
     // renamed columns surface under their LOGICAL names (r13 — applyDv
     // captures its _metadata positions before this projection)
-    toLogical(applyDv(spark, dir, base, manifestDv(json)),
-              manifestRenames(json))
+    toLogical(applyDv(spark, dir, base, snap.dv), snap.renames)
   }
 
   /** Read the table THROUGH the manifest — the only sanctioned read path.
@@ -932,10 +728,10 @@ object LakeTable {
     * layout is nothing more than following an older manifest. An evolved
     * table time-travels with each version's OWN recorded schema. */
   def readVersion(spark: SparkSession, dir: String, version: Long): DataFrame = {
-    val json = readManifest(dir, version)
-    require(json.nonEmpty,
+    val snap = readManifest(dir, version)
+    require(snap.nonEmpty,
       s"version $version not published (or vacuumed) in $dir")
-    readFiles(spark, dir, json.get, s"version $version")
+    readFiles(spark, dir, snap.get, s"version $version")
   }
 
   /** VACUUM: reclaim history. Keeps the newest `keepVersions` PUBLISHED
@@ -1036,8 +832,8 @@ object LakeTable {
     // reclaim.
     val dropSet = drop.toSet
     val keptFiles = manifestVersions(dir).filterNot(dropSet.contains)
-      .flatMap(v => readManifest(dir, v).map(j =>
-        manifestFiles(j) ++ manifestDv(j)).getOrElse(Nil))
+      .flatMap(v => readManifest(dir, v).fold(Seq.empty[String])(s =>
+        s.files ++ s.dv))
       .toSet
     // INCREMENTAL-MANIFEST GUARD (r15): a retained claim whose delta
     // chain passes through a version being dropped must get a full
@@ -1189,8 +985,7 @@ object LakeTable {
     val l2p = renames.map(_.swap)
     val df =
       if (l2p.isEmpty) df0
-      else df0.select(df0.columns.toSeq.map(n =>
-        col(n).as(l2p.getOrElse(n, n))): _*)
+      else df0.toDF(df0.columns.toSeq.map(n => l2p.getOrElse(n, n)): _*)
     val layoutCols = layoutColsOf(layoutBy0).map(c => l2p.getOrElse(c, c))
     val statsBy = statsBy0.map(c => l2p.getOrElse(c, c))
     val uuid = java.util.UUID.randomUUID().toString
@@ -1635,16 +1430,6 @@ object LakeTable {
       .relativize(name.toAbsolutePath.normalize).toString
   }
 
-  /** The base version's stats entries for files being carried over. */
-  private def carriedStats(dir: String, base: Long,
-                           carry: Seq[String]): Seq[String] =
-    if (carry.isEmpty || base <= 0L) Seq.empty
-    else {
-      val carrySet = carry.toSet
-      readManifest(dir, base).map(manifestStats).getOrElse(Seq.empty)
-        .filter(e => carrySet.contains(e.split('|').head))
-    }
-
   /** Deterministic staged schema: the base version's recorded columns (in
     * their recorded order) merged with the fresh files' columns. A fresh
     * column that COLLIDES with a base column at a different type records
@@ -1705,42 +1490,33 @@ object LakeTable {
     * more staging passes' outputs, and a carry list. */
   private def assemble(dir: String, base: Long, fresh: Fresh,
                        carry: Seq[String], op: String): Staged = {
-    val baseSchema = if (base > 0L) schemaOf(dir, base) else Seq.empty
-    val carriedDv = if (carry.nonEmpty && base > 0L) dvOf(dir, base)
-                    else Seq.empty
-    val baseJson = if (base > 0L) readManifest(dir, base) else None
-    val carriedRows = baseJson
-      .map(j => carryRows(j, carry ++ carriedDv))
-      .getOrElse(Map.empty[String, Long])
-    // hidden entries follow their data file: carried files keep theirs,
-    // rewritten/removed files' entries drop — which is exactly what
-    // keeps the live-count arithmetic exact when carried sidecars hold
-    // inert positions (r14)
-    val carriedHidden =
-      if (carriedDv.isEmpty) Map.empty[String, Long]
-      else {
-        val keep = carry.toSet
-        baseJson.map(manifestHidden).getOrElse(Map.empty)
-          .filter { case (f, _) => keep.contains(f) }
-      }
-    Staged(dir, base + 1L, carry ++ fresh.files,
-           batches = if (base > 0L) batchesOf(dir, base) else Map.empty,
+    // version 0 is the empty table
+    val b = readManifest(dir, base).getOrElse(Staged(dir, 0L, Seq.empty))
+    val keep = carry.toSet
+    val carriedDv = if (carry.nonEmpty) b.dv else Seq.empty
+    // the staged version inherits the base's batch watermarks, and the
+    // column-mapping display names and drop tombstones always travel
+    // (physical names in files are forever)
+    b.copy(dir = dir, version = base + 1L, files = carry ++ fresh.files,
            schema =
              if (carry.isEmpty) fresh.schema
-             else mergeSchemas(baseSchema, fresh.schema),
-           stats = carriedStats(dir, base, carry) ++ fresh.stats,
+             else mergeSchemas(b.schema, fresh.schema),
+           stats = b.stats.filter(e => keep.contains(e.split('|').head)) ++
+             fresh.stats,
            baseVersion = base, op = op,
            // a carry commit preserves the base's deletes (an append must
            // not resurrect DV'd rows of carried files); a fresh rewrite
            // (overwrite, OPTIMIZE) starts DV-free — OPTIMIZE is thereby
            // the DV PURGE: its snapshot read already applied the vectors
            dv = carriedDv,
-           rows = carriedRows ++ fresh.rows,
-           hidden = carriedHidden,
-           // column-mapping display names and drop tombstones always
-           // travel (physical names in files are forever)
-           renames = if (base > 0L) renamesOf(dir, base) else Map.empty,
-           dropped = if (base > 0L) droppedOf(dir, base) else Seq.empty)
+           rows = carryRows(b, carry ++ carriedDv) ++ fresh.rows,
+           // hidden entries follow their data file: carried files keep
+           // theirs, rewritten/removed files' entries drop — which is
+           // exactly what keeps the live-count arithmetic exact when
+           // carried sidecars hold inert positions (r14)
+           hidden =
+             if (carriedDv.isEmpty) Map.empty
+             else b.hidden.filter { case (f, _) => keep.contains(f) })
   }
 
   /** Files of the live version whose recorded [lo, hi] stats range for an
@@ -1837,16 +1613,13 @@ object LakeTable {
           if (staged.files.isEmpty && staged.schema.nonEmpty)
             spark.createDataFrame(
               spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              StructType.fromDDL(staged.schema.mkString(", ")))
+              structOf(staged.schema))
           else
             // carried members' sizes come from the base manifest, fresh
             // ones cost one stat each (r15 knownFrame — the audit frame
             // over a wide carry list no longer pays per-path globs)
             knownFrame(spark, staged.dir, staged.files, staged.schema,
-              if (staged.baseVersion > 0L)
-                readManifest(staged.dir, staged.baseVersion)
-                  .map(manifestBytes).getOrElse(Map.empty)
-              else Map.empty)
+                       bytesOf(staged.dir, staged.baseVersion))
         // the check sees LOGICAL names — user-declared constraints and
         // key-based audit callbacks are written against them (r13)
         val df = toLogical(applyDv(spark, staged.dir, raw, staged.dv),
@@ -1860,66 +1633,6 @@ object LakeTable {
   }
 
   // ---- publish ---------------------------------------------------------
-
-  private def manifestJson(staged: Staged, v: Long): String = {
-    val batchesField =
-      if (staged.batches.isEmpty) ""
-      else staged.batches.toSeq.sortBy(_._1)
-        .map { case (s, b) => s""""$s":$b""" }
-        .mkString("\"batches\":{", ",", "},")
-    val schemaField = staged.schema.map("\"" + _ + "\"")
-      .mkString("\"schema\":[", ",", "],")
-    // per-file stats entries (`file|col|kind|min|max`); the files regex
-    // requires a closing quote right after `.parquet`, and stat string
-    // values encode '.' as %2E, so no stats entry can ever be mistaken
-    // for a file-list member
-    val statsField =
-      if (staged.stats.isEmpty) ""
-      else staged.stats.map("\"" + _ + "\"")
-        .mkString("\"stats\":[", ",", "],")
-    // DV sidecar paths end ".dv", never ".parquet" — invisible to the
-    // file-list regex by construction (r11 DV prototype)
-    val dvField =
-      if (staged.dv.isEmpty) ""
-      else staged.dv.map("\"" + _ + "\"")
-        .mkString("\"dv\":[", ",", "],")
-    // column-mapping display names (r13): physical -> logical
-    val renamesField =
-      if (staged.renames.isEmpty) ""
-      else staged.renames.toSeq.sorted
-        .map { case (p, l) => s""""$p":"$l"""" }
-        .mkString("\"renames\":{", ",", "},")
-    // dropped-physical-name tombstones (r13)
-    val droppedField =
-      if (staged.dropped.isEmpty) ""
-      else staged.dropped.sorted.map("\"" + _ + "\"")
-        .mkString("\"dropped\":[", ",", "],")
-    // per-member row counts (r14): `<file>|<n>` entries — `.parquet` is
-    // followed by `|`, so the file-list regex can never match one
-    val rowsField =
-      if (staged.rows.isEmpty) ""
-      else staged.rows.toSeq.sorted
-        .map { case (f, n) => s""""$f|$n"""" }
-        .mkString("\"rowcounts\":[", ",", "],")
-    // per-data-file DV-hidden position counts (r14) — same encoding
-    val hiddenField = {
-      val nz = staged.hidden.filter(_._2 > 0L)
-      if (nz.isEmpty) ""
-      else nz.toSeq.sorted
-        .map { case (f, n) => s""""$f|$n"""" }
-        .mkString("\"hidden\":[", ",", "],")
-    }
-    // per-member byte sizes (r15) — same encoding as rowcounts
-    val bytesField =
-      if (staged.bytes.isEmpty) ""
-      else staged.bytes.toSeq.sorted
-        .map { case (f, n) => s""""$f|$n"""" }
-        .mkString("\"bytecounts\":[", ",", "],")
-    staged.files.map("\"" + _ + "\"")
-      .mkString(s"""{"version":$v,"base":${staged.baseVersion},""" +
-                s""""op":"${staged.op}",$batchesField$schemaField""" +
-                s"""$statsField$dvField$renamesField$droppedField$rowsField$hiddenField$bytesField"files":[""", ",", "]}")
-  }
 
   /** Publish a staged version: claim a version number via the manifest
     * CAS, then mark it published. Returns the ACTUAL version minted —
@@ -1960,11 +1673,7 @@ object LakeTable {
     * statted (should not happen — staged files are immutable) records
     * no entry and consumers fall back to `Files.size`. */
   private def withBytes(dir: String, staged: Staged): Staged = {
-    val carried: Map[String, Long] =
-      if (staged.baseVersion > 0L)
-        readManifest(dir, staged.baseVersion)
-          .map(manifestBytes).getOrElse(Map.empty)
-      else Map.empty
+    val carried = bytesOf(dir, staged.baseVersion)
     val bytes = (staged.files ++ staged.dv).flatMap { f =>
       carried.get(f)
         .orElse(scala.util.Try(Files.size(Paths.get(dir, f))).toOption)
@@ -1975,33 +1684,34 @@ object LakeTable {
 
   /** Render the claim payload: the delta form when the base resolves
     * and the delta is both exact and smaller, the full form otherwise.
-    * Returns (bytes to write, full snapshot, chain depth). */
+    * Returns (bytes to write, the snapshot they resolve to, chain
+    * depth). */
   private def renderForClaim(dir: String, staged0: Staged, v: Long)
-      : (String, String, Int) = {
-    val staged = withBytes(dir, staged0)
-    val full = manifestJson(staged, v)
-    if (staged.baseVersion <= 0L) (full, full, 0)
-    else if (!Files.exists(manifestPath(dir, staged.baseVersion)) &&
-             !Files.exists(checkpointPath(dir, staged.baseVersion)))
-      (full, full, 0) // base gone (raw replay seam): self-contained
-    else {
-      val (bj, bd) = resolveFull(dir, staged.baseVersion)
-      deltaJson(staged, stateOf(dir, bj), v) match {
-        case Some(d) => (d, full, bd + 1)
-        case None => (full, full, 0)
+      : (Array[Byte], Staged, Int) = {
+    val staged = LakeManifest.canonical(withBytes(dir, staged0), v)
+    val b = staged.baseVersion
+    // a base that is gone (raw replay seam) leaves a self-contained
+    // full manifest
+    val delta =
+      if (b <= 0L || (!Files.exists(manifestPath(dir, b)) &&
+                      !Files.exists(checkpointPath(dir, b)))) None
+      else {
+        val (base, depth) = resolveFull(dir, b)
+        LakeManifest.diff(base, staged).map(d =>
+          (LakeManifest.encode(d), staged, depth + 1))
       }
-    }
+    delta.getOrElse((LakeManifest.encode(staged), staged, 0))
   }
 
   /** Claim EXACTLY version `v` — true iff this call created the manifest.
-    * The winner seeds the resolution cache with the full snapshot it
-    * already holds and, every [[checkpointInterval]] chain links, writes
-    * the `checkpoint-v{N}.json` anchor that bounds cold-resolution depth
+    * The winner seeds the resolution cache with the snapshot it already
+    * holds and, every [[checkpointInterval]] chain links, writes the
+    * `checkpoint-v{N}.json` anchor that bounds cold-resolution depth
     * (and amortizes full-snapshot serialization to one in K commits). */
   private def claimAt(dir: String, staged: Staged, v: Long,
                       tmp: Path): Boolean = {
     val (payload, full, depth) = renderForClaim(dir, staged, v)
-    Files.write(tmp, payload.getBytes(UTF_8))
+    Files.write(tmp, payload)
     val won =
       try { Files.createLink(manifestPath(dir, v), tmp); true }
       catch { case _: FileAlreadyExistsException => false }
@@ -2218,8 +1928,7 @@ object LakeTable {
         .map(_.toAbsolutePath.normalize).sortBy(_.toString)
     def keyOf(p: Path): String = "copy:" + encodeStatString(p.toString)
     val appliedNow = currentVersion(dir)
-      .flatMap(v => readManifest(dir, v)).map(manifestBatches(_).keySet)
-      .getOrElse(Set.empty[String])
+      .fold(Set.empty[String])(batchesOf(dir, _).keySet)
     val newFiles = candidates.filterNot(p => appliedNow.contains(keyOf(p)))
     if (newFiles.isEmpty)
       return Right((currentVersion(dir).getOrElse(0L), 0L, 0L))
@@ -2233,7 +1942,7 @@ object LakeTable {
       case other =>
         val s0 =
           if (logical.nonEmpty)
-            Some(StructType.fromDDL(logical.mkString(", ")))
+            Some(structOf(logical))
           else declaredSchema
         val s = s0.getOrElse(
           return Left(s"COPY INTO FILEFORMAT=$other needs the target's " +
@@ -2479,14 +2188,12 @@ object LakeTable {
     val r = commitSerialized(dir) { base =>
       if (base == 0L) Left(s"no published version to delete from in $dir")
       else {
-        val json = readManifest(dir, base).get
-        val files = manifestFiles(json)
-        val recorded = manifestSchema(json)
-        val prevDv = manifestDv(json)
+        val snap = readManifest(dir, base).get
+        val (files, prevDv) = (snap.files, snap.dv)
         // the LIVE tagged frame (r13): predicate applies over LOGICAL
         // names, positions were captured pre-projection, prior DVs are
         // already excluded — no separate anti-join needed
-        val (live, fCol, pCol) = liveTagged(spark, dir, json)
+        val (live, fCol, pCol) = liveTagged(spark, dir, snap)
         val freshPos = live.filter(predicate)
           .select(col(fCol).as("file"), col(pCol).as("pos"))
         if (freshPos.isEmpty) {
@@ -2496,15 +2203,10 @@ object LakeTable {
         } else {
           val (sidecars, dvRows, dvHidden) =
             writeDvSidecars(spark, dir, freshPos, files.length)
-          val st = Staged(dir, base + 1L, files,
-            batches = batchesOf(dir, base),
-            schema = recorded, stats = manifestStats(json),
-            baseVersion = base, op = "dvdelete",
-            dv = prevDv ++ sidecars,
-            renames = manifestRenames(json),
-            dropped = manifestDropped(json),
-            rows = carryRows(json, files ++ prevDv) ++ dvRows,
-            hidden = mergeHidden(manifestHidden(json), dvHidden))
+          val st = snap.copy(version = base + 1L, baseVersion = base,
+            op = "dvdelete", dv = prevDv ++ sidecars,
+            rows = carryRows(snap, files ++ prevDv) ++ dvRows,
+            hidden = mergeHidden(snap.hidden, dvHidden))
           // audit AS A READER WOULD SEE IT: the staged manifest's own
           // vector set must hide every matching row before publish.
           // The leak re-scan is a PARANOID-mode re-verification (r14):
@@ -2513,8 +2215,7 @@ object LakeTable {
           // runs zero audit table passes; the caller's check still
           // gates (its frame is lazy — a no-op check scans nothing).
           val stagedDf =
-            readFiles(spark, dir, manifestJson(st, base + 1L),
-                      "staged dvdelete")
+            readFiles(spark, dir, st, "staged dvdelete")
           val leak =
             if (paranoidAudit(spark)) stagedDf.filter(predicate).count()
             else 0L
@@ -2654,20 +2355,17 @@ object LakeTable {
     val r = commitSerialized(dir) { base =>
       if (base == 0L) Left(s"no published version to update in $dir")
       else {
-        val json = readManifest(dir, base).get
-        val files = manifestFiles(json)
-        val recorded = manifestSchema(json)
-        val renames = manifestRenames(json)
-        val colNames = logicalSchema(recorded, renames)
+        val snap = readManifest(dir, base).get
+        val (files, recorded, prevDv) = (snap.files, snap.schema, snap.dv)
+        val colNames = logicalSchema(recorded, snap.renames)
           .map(_.split(" ", 2)(0))
         set.foreach { case (c, _) =>
           require(colNames.isEmpty || colNames.contains(c),
             s"UPDATE assigns a column not in the table: '$c'")
         }
-        val prevDv = manifestDv(json)
         // LIVE tagged frame (r13): logical names, positions captured
         // pre-projection, prior DVs already excluded
-        val (liveT, fCol, pCol) = liveTagged(spark, dir, json)
+        val (liveT, fCol, pCol) = liveTagged(spark, dir, snap)
         val freshPos = liveT.filter(predicate)
           .select(col(fCol).as("file"), col(pCol).as("pos"))
         if (freshPos.isEmpty) {
@@ -2684,18 +2382,16 @@ object LakeTable {
                                  rebalance = false) // DML-bounded
           val (sidecars, dvRows, dvHidden) =
             writeDvSidecars(spark, dir, freshPos, files.length)
-          val st = Staged(dir, base + 1L, files ++ fresh.files,
-            batches = batchesOf(dir, base),
+          val st = snap.copy(version = base + 1L,
+            files = files ++ fresh.files,
             schema =
               if (recorded.isEmpty) fresh.schema
               else mergeSchemas(recorded, fresh.schema),
-            stats = manifestStats(json) ++ fresh.stats,
+            stats = snap.stats ++ fresh.stats,
             baseVersion = base, op = "dvupdate",
             dv = prevDv ++ sidecars,
-            renames = renames,
-            dropped = manifestDropped(json),
-            rows = carryRows(json, files ++ prevDv) ++ fresh.rows ++ dvRows,
-            hidden = mergeHidden(manifestHidden(json), dvHidden))
+            rows = carryRows(snap, files ++ prevDv) ++ fresh.rows ++ dvRows,
+            hidden = mergeHidden(snap.hidden, dvHidden))
           // conservation holds by manifest ARITHMETIC when every count
           // is recorded (hidden positions == staged updated copies, both
           // from the staging reads themselves, r14); the equation
@@ -2709,7 +2405,7 @@ object LakeTable {
                  s"$freshCount updated copies staged")
           else audit(spark, st) { df =>
             if (paranoidAudit(spark)) {
-              val liveCount = liveCountFromManifest(json)
+              val liveCount = liveCountFromManifest(snap)
                 .getOrElse(live.count())
               val after = df.count()
               if (after != liveCount)
@@ -2754,13 +2450,11 @@ object LakeTable {
     commitSerialized(dir) { base =>
       if (base == 0L) Left(s"no published version in $dir")
       else {
-        val json = readManifest(dir, base).get
-        val files = manifestFiles(json)
-        val recorded = manifestSchema(json)
-        val prevDv = manifestDv(json)
+        val snap = readManifest(dir, base).get
+        val (files, recorded, prevDv) = (snap.files, snap.schema, snap.dv)
         // LIVE tagged frame (r13): predicate over LOGICAL names,
         // positions captured pre-projection, prior DVs excluded
-        val (liveT, fCol, pCol) = liveTagged(spark, dir, json)
+        val (liveT, fCol, pCol) = liveTagged(spark, dir, snap)
         val freshPos = liveT.filter(predicate)
           .select(col(fCol).as("file"), col(pCol).as("pos"))
         val (sidecars, dvRows, dvHidden) =
@@ -2768,19 +2462,17 @@ object LakeTable {
             (Seq.empty[String], Map.empty[String, Long],
              Map.empty[String, Long])
           else writeDvSidecars(spark, dir, freshPos, files.length)
-        val st = Staged(dir, base + 1L, files ++ freshStage.files,
-          batches = batchesOf(dir, base),
+        val st = snap.copy(version = base + 1L,
+          files = files ++ freshStage.files,
           schema =
             if (recorded.isEmpty) freshStage.schema
             else mergeSchemas(recorded, freshStage.schema),
-          stats = manifestStats(json) ++ freshStage.stats,
+          stats = snap.stats ++ freshStage.stats,
           baseVersion = base, op = "replacewhere",
           dv = prevDv ++ sidecars,
-          renames = manifestRenames(json),
-          dropped = manifestDropped(json),
-          rows = carryRows(json, files ++ prevDv) ++ freshStage.rows
+          rows = carryRows(snap, files ++ prevDv) ++ freshStage.rows
             ++ dvRows,
-          hidden = mergeHidden(manifestHidden(json), dvHidden))
+          hidden = mergeHidden(snap.hidden, dvHidden))
         // audit AS A READER WOULD SEE IT: every row matching the
         // predicate in the staged version must come from the NEW data.
         // The staged-scan count-compare is PARANOID-mode (r14): the
@@ -2815,14 +2507,12 @@ object LakeTable {
     translateDvNoop(commitSerialized(dir) { base =>
       if (base == 0L) Left(s"no published version to delete from in $dir")
       else {
-        val json = readManifest(dir, base).get
-        val files = manifestFiles(json)
-        val recorded = manifestSchema(json)
-        val prevDv = manifestDv(json)
+        val snap = readManifest(dir, base).get
+        val (files, prevDv) = (snap.files, snap.dv)
         val srcKeys = source.select(keys.map(col): _*).distinct()
         // LIVE tagged frame (r13): key semi-join over LOGICAL names,
         // positions captured pre-projection, prior DVs excluded
-        val (liveT, fCol, pCol) = liveTagged(spark, dir, json)
+        val (liveT, fCol, pCol) = liveTagged(spark, dir, snap)
         val freshPos = liveT
           .join(srcKeys, keys, "left_semi")
           .select(col(fCol).as("file"), col(pCol).as("pos"))
@@ -2830,15 +2520,10 @@ object LakeTable {
         else {
           val (sidecars, dvRows, dvHidden) =
             writeDvSidecars(spark, dir, freshPos, files.length)
-          val st = Staged(dir, base + 1L, files,
-            batches = batchesOf(dir, base),
-            schema = recorded, stats = manifestStats(json),
-            baseVersion = base, op = "dvdelete",
-            dv = prevDv ++ sidecars,
-            renames = manifestRenames(json),
-            dropped = manifestDropped(json),
-            rows = carryRows(json, files ++ prevDv) ++ dvRows,
-            hidden = mergeHidden(manifestHidden(json), dvHidden))
+          val st = snap.copy(version = base + 1L, baseVersion = base,
+            op = "dvdelete", dv = prevDv ++ sidecars,
+            rows = carryRows(snap, files ++ prevDv) ++ dvRows,
+            hidden = mergeHidden(snap.hidden, dvHidden))
           // leak re-join is PARANOID-mode (r14): the positions came from
           // the same semi-join; the default trusts the recorded counts
           audit(spark, st) { df =>
@@ -2937,14 +2622,12 @@ object LakeTable {
             st0.batches ++ batch.map(b => sink -> b).toMap)
           audit(spark, st)(check)
         } else {
-        val json = readManifest(dir, base).get
-        val files = manifestFiles(json)
-        val recorded = manifestSchema(json)
-        val prevDv = manifestDv(json)
+          val snap = readManifest(dir, base).get
+          val (files, recorded, prevDv) = (snap.files, snap.schema, snap.dv)
           // positions of live target rows whose key the source carries —
           // the LIVE tagged frame (r13): logical names, positions
           // captured pre-projection, prior DVs already excluded
-          val (liveT, fCol, pCol) = liveTagged(spark, dir, json)
+          val (liveT, fCol, pCol) = liveTagged(spark, dir, snap)
           val freshPos = liveT
             .join(srcKeys, keys, "left_semi")
             .select(col(fCol).as("file"), col(pCol).as("pos"))
@@ -2966,19 +2649,17 @@ object LakeTable {
             Left(s"MERGE staging lost rows: $srcCount in the source, " +
                  s"${fresh.rowTotal} staged")
           else {
-          val st0 = Staged(dir, base + 1L, files ++ fresh.files,
-            batches = batchesOf(dir, base),
+          val st0 = snap.copy(version = base + 1L,
+            files = files ++ fresh.files,
             schema =
               if (recorded.isEmpty) fresh.schema
               else mergeSchemas(recorded, fresh.schema),
-            stats = manifestStats(json) ++ fresh.stats,
+            stats = snap.stats ++ fresh.stats,
             baseVersion = base, op = "dvmerge",
             dv = prevDv ++ sidecars,
-            renames = manifestRenames(json),
-            dropped = manifestDropped(json),
-            rows = carryRows(json, files ++ prevDv) ++ fresh.rows ++
+            rows = carryRows(snap, files ++ prevDv) ++ fresh.rows ++
               (if (matched == 0L) Map.empty[String, Long] else dvRows),
-            hidden = mergeHidden(manifestHidden(json),
+            hidden = mergeHidden(snap.hidden,
               if (matched == 0L) Map.empty[String, Long] else dvHidden))
           val st = st0.copy(batches =
             st0.batches ++ batch.map(b => sink -> b).toMap)
@@ -2988,7 +2669,7 @@ object LakeTable {
           audit(spark, st) { df =>
             if (!paranoidAudit(spark)) check(df)
             else {
-              val liveCount = liveCountFromManifest(json)
+              val liveCount = liveCountFromManifest(snap)
                 .getOrElse(liveT.drop(fCol, pCol).count())
               val after = df.count()
               val expectTotal = liveCount - matched + srcCount
@@ -3080,14 +2761,12 @@ object LakeTable {
           require(mx.isNullAt(0) || mx.getLong(0) <= 1L,
             "MERGE source must carry each key at most once")
         }
-        val json = readManifest(dir, base).get
-        val files = manifestFiles(json)
-        val recorded = manifestSchema(json)
-        val prevDv = manifestDv(json)
+        val snap = readManifest(dir, base).get
+        val (files, recorded, prevDv) = (snap.files, snap.schema, snap.dv)
         // live rows WITH their (file, pos) identity, read through the
         // current vector set in LOGICAL names (r13) — the frame every
         // side below derives from
-        val (livePos, fCol, pCol) = liveTagged(spark, dir, json)
+        val (livePos, fCol, pCol) = liveTagged(spark, dir, snap)
         val cols = livePos.columns.toSeq.filterNot(Set(fCol, pCol))
         val types = livePos.schema.fields
           .map(f => f.name -> f.dataType).toMap
@@ -3213,35 +2892,32 @@ object LakeTable {
             else Some(spark.read.parquet(
               freshFiles.map(f => Paths.get(dir, f).toString): _*))
           freshDf.flatMap(df =>
-            checkFresh(toLogical(df, manifestRenames(json)))) match {
+            checkFresh(toLogical(df, snap.renames))) match {
             case Some(reason) =>
               Left(s"merge into $dir rejected: $reason")
             case None =>
               val keepFresh = if (freshCount == 0L) None else fresh
               val sidecars = if (hiddenCount == 0L) Seq.empty else sidecars0
-              val st = Staged(dir, base + 1L,
-                files ++ keepFresh.map(_.files).getOrElse(Seq.empty),
-                batches = batchesOf(dir, base),
+              val st = snap.copy(version = base + 1L,
+                files = files ++ keepFresh.map(_.files).getOrElse(Seq.empty),
                 schema = keepFresh.map(f =>
                   if (recorded.isEmpty) f.schema
                   else mergeSchemas(recorded, f.schema)).getOrElse(recorded),
-                stats = manifestStats(json) ++
+                stats = snap.stats ++
                   keepFresh.map(_.stats).getOrElse(Seq.empty),
                 baseVersion = base, op = "dvmerge",
                 dv = prevDv ++ sidecars,
-                renames = manifestRenames(json),
-                dropped = manifestDropped(json),
-                rows = carryRows(json, files ++ prevDv) ++
+                rows = carryRows(snap, files ++ prevDv) ++
                   keepFresh.map(_.rows).getOrElse(Map.empty[String, Long]) ++
                   (if (hiddenCount == 0L) Map.empty[String, Long]
                    else dvRows),
-                hidden = mergeHidden(manifestHidden(json),
+                hidden = mergeHidden(snap.hidden,
                   if (hiddenCount == 0L) Map.empty[String, Long]
                   else dvHidden))
               audit(spark, st) { df =>
                 if (!paranoidAudit(spark)) check(df)
                 else {
-                  val liveCount = liveCountFromManifest(json)
+                  val liveCount = liveCountFromManifest(snap)
                     .getOrElse(livePos.count())
                   val after = df.count()
                   val expect = liveCount - hiddenCount + freshCount
@@ -3459,12 +3135,9 @@ object LakeTable {
     // re-reads the new base (data changed; nothing staged is reusable
     // by construction).
     translateDvNoop(commitSerialized(dir) { base =>
-      val json = readManifest(dir, base).get
-      val files = manifestFiles(json)
-      val rows = manifestRows(json)
-      val hiddenMap = manifestHidden(json)
-      val prevDv = manifestDv(json)
-      val recorded = manifestSchema(json)
+      val base0 = readManifest(dir, base).get
+      val (files, rows, hiddenMap, prevDv, recorded) = (base0.files,
+        base0.rows, base0.hidden, base0.dv, base0.schema)
       // INCREMENTAL compaction (r14): with per-file row counts and
       // per-file hidden counts recorded, a file already at-or-above the
       // bin target with no DV-hidden positions is ALREADY OPTIMIZED —
@@ -3500,17 +3173,17 @@ object LakeTable {
           if (recorded.isEmpty) spark.read.parquet(
             rewrite.map(f => Paths.get(dir, f).toString): _*)
           else spark.read
-            .schema(StructType.fromDDL(recorded.mkString(", ")))
+            .schema(structOf(recorded))
             .parquet(rewrite.map(f => Paths.get(dir, f).toString): _*)
         val snap = toLogical(applyDv(spark, dir, raw, prevDv),
-                             manifestRenames(json))
+                             base0.renames)
         // live cardinality of the rewrite set by manifest arithmetic
         // when recorded — zero pre-rewrite passes
         val n =
           if (incremental)
             rewrite.map(rows).sum -
               rewrite.map(f => hiddenMap.getOrElse(f, 0L)).sum
-          else liveCountFromManifest(json).getOrElse(snap.count())
+          else liveCountFromManifest(base0).getOrElse(snap.count())
         val bins = math.max(1L, (n + targetRows - 1L) / targetRows).toInt
         val laid = layoutColsOf(layoutBy) match {
           // layout-preserving compaction: one shuffle keyed on the
@@ -3562,34 +3235,19 @@ object LakeTable {
     readManifest(dir, version) match {
       case None =>
         Left(s"version $version not published (or vacuumed) in $dir")
-      case Some(json) =>
+      case Some(old) =>
         commitSerialized(dir) { base =>
-          Right(Staged(dir, base + 1L, manifestFiles(json),
-                       batches = if (base > 0L) batchesOf(dir, base)
-                                 else Map.empty,
-                       schema = manifestSchema(json),
-                       stats = manifestStats(json),
-                       rows = manifestRows(json),
-                       hidden = manifestHidden(json),
-                       baseVersion = base, op = "restore",
-                       dv = manifestDv(json),
-                       // a restore resurrects the restored version's
-                       // display names along with its schema. Drop
-                       // tombstones union from both eras, EXCEPT names
-                       // the restored schema itself carries — restoring
-                       // a pre-drop version deliberately brings the
-                       // column (and its data) back, so its tombstone
-                       // lifts; all other tombstones stay (reuse is
-                       // still unsafe for them)
-                       renames = manifestRenames(json),
-                       dropped = {
-                         val back = manifestSchema(json)
-                           .map(_.split(" ", 2)(0)).toSet
-                         (manifestDropped(json) ++
-                          currentVersion(dir).map(droppedOf(dir, _))
-                            .getOrElse(Seq.empty))
-                           .distinct.filterNot(back.contains)
-                       }))
+          // a restore resurrects the restored version's display names
+          // along with its schema. Drop tombstones union from both eras,
+          // EXCEPT names the restored schema itself carries — restoring a
+          // pre-drop version deliberately brings the column (and its
+          // data) back, so its tombstone lifts; all other tombstones stay
+          // (reuse is still unsafe for them)
+          val back = old.schema.map(_.split(" ", 2)(0)).toSet
+          Right(old.copy(version = base + 1L, batches = batchesOf(dir, base),
+            baseVersion = base, op = "restore",
+            dropped = (old.dropped ++ droppedOf(dir, base))
+              .distinct.filterNot(back.contains)))
         }
     }
   }
@@ -3621,11 +3279,11 @@ object LakeTable {
       case Some(v) => readManifest(src, v) match {
         case None =>
           Left(s"version $v not published (or vacuumed) in $src")
-        case Some(json) =>
+        case Some(snap) =>
           if (manifestVersions(dst).nonEmpty || currentVersion(dst).nonEmpty)
             Left(s"clone target $dst is not a fresh table directory")
           else {
-            (manifestFiles(json) ++ manifestDv(json)).foreach { f =>
+            (snap.files ++ snap.dv).foreach { f =>
               val from = Paths.get(src, f)
               val to = Paths.get(dst, f)
               Files.createDirectories(to.getParent)
@@ -3639,13 +3297,8 @@ object LakeTable {
                   Files.copy(from, to)
               }
             }
-            Right(publish(Staged(dst, 1L, manifestFiles(json),
-              schema = manifestSchema(json), stats = manifestStats(json),
-              baseVersion = 0L, op = "clone", dv = manifestDv(json),
-              renames = manifestRenames(json),
-              dropped = manifestDropped(json),
-              rows = manifestRows(json),
-              hidden = manifestHidden(json))))
+            Right(publish(snap.copy(dir = dst, version = 1L,
+              batches = Map.empty, baseVersion = 0L, op = "clone")))
           }
       }
     }
@@ -3669,8 +3322,8 @@ object LakeTable {
     commitSerialized(dir) { base =>
       if (base == 0L) Left(s"no published version in $dir")
       else {
-        val json = readManifest(dir, base).get
-        val recorded = manifestSchema(json)
+        val snap = readManifest(dir, base).get
+        val recorded = snap.schema
         if (recorded.isEmpty)
           Left(s"cannot ALTER a schema-less (legacy) table in $dir")
         else {
@@ -3679,24 +3332,18 @@ object LakeTable {
           // one file column; a dropped physical would resurrect the old
           // data still in carried files (r13)
           val names = recorded.map(_.split(" ", 2)(0)).toSet ++
-            manifestRenames(json).values ++ manifestDropped(json)
+            snap.renames.values ++ snap.dropped
           cols.find(c => names.contains(c._1)) match {
             case Some((n, _)) => Left(s"column '$n' already exists in $dir")
             case None =>
               val extended = recorded ++ cols.map { case (n, t) => s"$n $t" }
               // the extended DDL must parse — refuse garbage types at
               // commit time, not at first read
-              try StructType.fromDDL(extended.mkString(", "))
+              try structOf(extended)
               catch { case e: Exception =>
                 return Left(s"ADD COLUMNS rejected: ${e.getMessage}") }
-              Right(Staged(dir, base + 1L, manifestFiles(json),
-                batches = batchesOf(dir, base),
-                schema = extended, stats = manifestStats(json),
-                baseVersion = base, op = "alter", dv = manifestDv(json),
-                renames = manifestRenames(json),
-                dropped = manifestDropped(json),
-                rows = manifestRows(json),
-                hidden = manifestHidden(json)))
+              Right(snap.copy(version = base + 1L, schema = extended,
+                baseVersion = base, op = "alter"))
           }
         }
       }
@@ -3737,13 +3384,12 @@ object LakeTable {
     commitSerialized(dir) { base =>
       if (base == 0L) Left(s"no published version in $dir")
       else {
-        val json = readManifest(dir, base).get
-        val recorded = manifestSchema(json)
+        val snap = readManifest(dir, base).get
+        val recorded = snap.schema
         if (recorded.isEmpty)
           Left(s"cannot ALTER a schema-less (legacy) table in $dir")
         else {
-          val renames = manifestRenames(json)
-          val phys = physicalNameOf(renames, name)
+          val phys = physicalNameOf(snap.renames, name)
           recorded.map(_.split(" ", 2)).find(_(0) == phys) match {
             case None =>
               Left(s"ALTER COLUMN TYPE: no column '$name' in $dir")
@@ -3759,14 +3405,8 @@ object LakeTable {
                 if (a(0) == phys) s"$phys ${newType.trim.toUpperCase}"
                 else e
               }
-              Right(Staged(dir, base + 1L, manifestFiles(json),
-                batches = batchesOf(dir, base),
-                schema = widened, stats = manifestStats(json),
-                baseVersion = base, op = "alter", dv = manifestDv(json),
-                renames = renames,
-                dropped = manifestDropped(json),
-                rows = manifestRows(json),
-                hidden = manifestHidden(json)))
+              Right(snap.copy(version = base + 1L, schema = widened,
+                baseVersion = base, op = "alter"))
           }
         }
       }
@@ -3789,12 +3429,11 @@ object LakeTable {
     commitSerialized(dir) { base =>
       if (base == 0L) Left(s"no published version in $dir")
       else {
-        val json = readManifest(dir, base).get
-        val recorded = manifestSchema(json)
+        val snap = readManifest(dir, base).get
+        val (recorded, renames) = (snap.schema, snap.renames)
         if (recorded.isEmpty)
           Left(s"cannot ALTER a schema-less (legacy) table in $dir")
         else {
-          val renames = manifestRenames(json)
           val physNames = recorded.map(_.split(" ", 2)(0))
           val logicalNames = physNames.map(n => renames.getOrElse(n, n))
           if (!logicalNames.contains(name))
@@ -3803,21 +3442,18 @@ object LakeTable {
             Left(s"DROP COLUMN: cannot drop the only column of $dir")
           else {
             val phys = physicalNameOf(renames, name)
-            Right(Staged(dir, base + 1L, manifestFiles(json),
-              batches = batchesOf(dir, base),
+            Right(snap.copy(version = base + 1L,
               schema = recorded.filterNot(_.split(" ", 2)(0) == phys),
               // defensive split (r14, ADVICE r13): statsOf tolerates
               // malformed entries with a None case — this filter must
               // skip them too, not crash the ALTER on a missing '|'
-              stats = manifestStats(json).filterNot { e =>
+              stats = snap.stats.filterNot { e =>
                 val a = e.split('|')
                 a.length > 1 && a(1) == phys
               },
-              rows = manifestRows(json),
-              hidden = manifestHidden(json),
-              baseVersion = base, op = "alter", dv = manifestDv(json),
+              baseVersion = base, op = "alter",
               renames = renames - phys,
-              dropped = (manifestDropped(json) :+ phys).distinct))
+              dropped = (snap.dropped :+ phys).distinct))
           }
         }
       }
@@ -3839,12 +3475,11 @@ object LakeTable {
     commitSerialized(dir) { base =>
       if (base == 0L) Left(s"no published version in $dir")
       else {
-        val json = readManifest(dir, base).get
-        val recorded = manifestSchema(json)
+        val snap = readManifest(dir, base).get
+        val (recorded, renames) = (snap.schema, snap.renames)
         if (recorded.isEmpty)
           Left(s"cannot ALTER a schema-less (legacy) table in $dir")
         else {
-          val renames = manifestRenames(json)
           val physNames = recorded.map(_.split(" ", 2)(0))
           val logicalNames = physNames.map(n => renames.getOrElse(n, n))
           if (!logicalNames.contains(from))
@@ -3857,20 +3492,15 @@ object LakeTable {
             val renameBack = to == phys
             if (!renameBack &&
                 (logicalNames.contains(to) || physNames.contains(to) ||
-                 manifestDropped(json).contains(to)))
+                 snap.dropped.contains(to)))
               Left(s"RENAME COLUMN: '$to' collides with an existing " +
                    s"(or dropped) column in $dir")
             else
-              Right(Staged(dir, base + 1L, manifestFiles(json),
-                batches = batchesOf(dir, base),
-                schema = recorded, stats = manifestStats(json),
-                baseVersion = base, op = "alter", dv = manifestDv(json),
+              Right(snap.copy(version = base + 1L, baseVersion = base,
+                op = "alter",
                 renames =
                   if (renameBack) renames - phys
-                  else renames + (phys -> to),
-                dropped = manifestDropped(json),
-                rows = manifestRows(json),
-                hidden = manifestHidden(json)))
+                  else renames + (phys -> to)))
           }
         }
       }

@@ -1771,6 +1771,91 @@ class LakeSpec extends SparkTestBase {
     assert(readKeys2(dir) == Set(1L, 3L, 4L))
   }
 
+  test("hostile names round-trip the manifest: RENAME to z.parquet, " +
+       "a\"b and c}d, and DROP of a column named q.parquet, read cold") {
+    import spark.implicits._
+    Seq("z.parquet", "a\"b", "c}d").foreach { to =>
+      val dir = Files.createTempDirectory("graft_lake_hostile_").toString
+      assert(LakeTable.commit(spark, dir,
+        (1L to 4L).map(k => (k, k * 10L)).toDF("k", "v"))(_ => None)
+        == Right(1L))
+      assert(LakeTable.renameColumn(dir, "v", to) == Right(2L))
+      LakeTable.clearResolveCache()
+      assert(LakeTable.renamesOf(dir, 2L) == Map("v" -> to))
+      assert(LakeTable.filesOf(dir, 2L) == LakeTable.filesOf(dir, 1L),
+        s"RENAME to $to must leave the file list alone")
+      val back = LakeTable.read(spark, dir)
+      assert(back.columns.toSeq == Seq("k", to), s"RENAME to $to")
+      assert(back.orderBy("k").collect().map(_.getLong(1)).toSeq
+        == Seq(10L, 20L, 30L, 40L))
+    }
+    // the tombstone of a physical column named like a data file
+    val dir = Files.createTempDirectory("graft_lake_hostile_drop_").toString
+    assert(LakeTable.commit(spark, dir,
+      (1L to 4L).map(k => (k, k * 10L, k * 100L)).toDF("k", "q.parquet", "w"))(
+      _ => None) == Right(1L))
+    assert(LakeTable.dropColumn(dir, "q.parquet") == Right(2L))
+    LakeTable.clearResolveCache()
+    assert(LakeTable.droppedOf(dir, 2L) == Seq("q.parquet"))
+    assert(LakeTable.filesOf(dir, 2L) == LakeTable.filesOf(dir, 1L))
+    val back = LakeTable.read(spark, dir)
+    assert(back.columns.toSeq == Seq("k", "w"))
+    assert(back.orderBy("k").collect().map(_.getLong(1)).toSeq
+      == Seq(100L, 200L, 300L, 400L))
+  }
+
+  test("golden log: manifests and checkpoints written before the typed " +
+       "codec resolve to the accessor values recorded with them") {
+    import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+    // src/test/resources/lake-golden/<table>/: the log files plus
+    // expected.json — what filesOf/rowsOf/dvOf/bytesOf/statsOf/opOf/
+    // renamesOf/appliedBatch returned for each version when written
+    val root = Paths.get(getClass.getResource("/lake-golden").toURI)
+    def strs(n: JsonNode): Seq[String] = n.elements.asScala.map(_.asText).toSeq
+    def longs(n: JsonNode): Map[String, Long] =
+      n.fields.asScala.map(e => e.getKey -> e.getValue.asLong).toMap
+    Seq("chain", "pre_r14", "pre_r15").foreach { name =>
+      val fx = root.resolve(name)
+      val logs = Files.list(fx).iterator().asScala.map(_.getFileName.toString)
+        .filter(_.matches("(manifest|checkpoint)-v\\d+\\.json")).toSeq
+      val expected = new ObjectMapper().readTree(fx.resolve("expected.json")
+        .toFile).elements.asScala.toSeq
+      val dir = Files.createTempDirectory(s"graft_lake_golden_$name").toString
+      def check(e: JsonNode, live: Boolean): Unit = {
+        val v = e.get("version").asLong
+        val at = s"$name v$v"
+        assert(LakeTable.filesOf(dir, v) == strs(e.get("files")), at)
+        assert(LakeTable.rowsOf(dir, v) == longs(e.get("rows")), at)
+        assert(LakeTable.dvOf(dir, v) == strs(e.get("dv")), at)
+        assert(LakeTable.bytesOf(dir, v) == longs(e.get("bytes")), at)
+        assert(LakeTable.statsOf(dir, v).toSeq.map { case ((f, c), st) =>
+          s"$f|$c|${st.kind}|${st.mn}|${st.mx}" }.sorted
+          == strs(e.get("stats")), at)
+        assert(LakeTable.opOf(dir, v) == e.get("op").asText, at)
+        assert(LakeTable.renamesOf(dir, v) ==
+          e.get("renames").fields.asScala.map(f =>
+            f.getKey -> f.getValue.asText).toMap, at)
+        if (live)
+          assert(Seq("", "s1", "s2").flatMap(s =>
+            LakeTable.appliedBatch(dir, s).map(s -> _)).toMap
+            == longs(e.get("applied")), at)
+      }
+      // publish the versions one at a time, each resolved cold ...
+      expected.foreach { e =>
+        val v = e.get("version").asLong
+        logs.filter(_.endsWith(s"-v$v.json")).foreach(n =>
+          Files.copy(fx.resolve(n), Paths.get(dir, n)))
+        Files.write(Paths.get(dir, s"commit-v$v"),
+          "1700000000000".getBytes("UTF-8"))
+        LakeTable.clearResolveCache()
+        check(e, live = true)
+      }
+      // ... then every version once more against the whole log
+      LakeTable.clearResolveCache()
+      expected.reverse.foreach(check(_, live = false))
+    }
+  }
+
   private def readKeys2(dir: String): Set[Long] =
     LakeTable.read(spark, dir).collect().map(_.getAs[Long]("k")).toSet
 }

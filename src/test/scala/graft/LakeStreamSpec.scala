@@ -210,13 +210,17 @@ class LakeStreamSpec extends SparkTestBase {
     assert(LakeTable.read(spark, dir).filter(col("custkey") === 1L)
       .head.getAs[Long]("cents") == 111L)
 
-    // append mode onto a fresh table: two batches → two versions, all rows
+    // append mode onto a fresh table: two batches → two versions, all
+    // rows. The sink id carries JSON metacharacters: its watermark must
+    // still read back, so a replayed epoch is skipped, not re-applied
     val dir2 = Files.createTempDirectory("graft_lakesink_app_").toString
     val cp2 = Files.createTempDirectory("graft_lakesink_appcp_").toString
+    val sinkId = "q\"}x"
     val ms2 = MemoryStream[(Long, Long)](spark)
     val q2 = ms2.toDF().toDF("custkey", "cents")
       .writeStream.format("graft-lake")
       .option("path", dir2).option("checkpointLocation", cp2)
+      .option("sinkName", sinkId)
       .start()
     try {
       ms2.addData((1L, 10L)); q2.processAllAvailable()
@@ -224,6 +228,13 @@ class LakeStreamSpec extends SparkTestBase {
       assert(LakeTable.currentVersion(dir2).contains(2L))
       assert(LakeTable.read(spark, dir2).count() == 2L)
     } finally q2.stop()
+    LakeTable.clearResolveCache()
+    assert(LakeTable.appliedBatch(dir2, sinkId).contains(1L))
+    new graft.sources.LakeStreamSink(dir2, "append", None, Seq.empty,
+      Seq.empty, sinkId).addBatch(1L, Seq((2L, 20L)).toDF("custkey", "cents"))
+    assert(LakeTable.currentVersion(dir2).contains(2L),
+      "a replayed epoch of a sink with a hostile id must not publish")
+    assert(LakeTable.read(spark, dir2).count() == 2L)
   }
 
   test("writeStream sink commitMode=dvmerge (r12): merge-on-read upserts " +

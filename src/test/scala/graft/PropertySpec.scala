@@ -442,4 +442,79 @@ class PropertySpec extends SparkTestBase {
           s"UNSOUND prune: $f dropped a file containing a match (stat $stat)")
     }
   }
+
+  /** Strings built from the characters a hand-rolled JSON grammar gets
+    * wrong: quotes, backslashes, braces, brackets, `|`, `.parquet`
+    * suffixes and non-ASCII. */
+  private val hostile: Gen[String] =
+    Gen.choose(1, 6).flatMap(n => Gen.listOfN(n, Gen.oneOf(
+      "\"", "\\", "{", "}", "[", "]", "|", ".parquet", ":", ",", "`",
+      "é", "中", "a", "7")).map(_.mkString))
+
+  test("lake manifest codec: decode∘encode is the identity and a rendered " +
+       "delta folds over its base to the staged state, on hostile strings") {
+    import graft.sources.LakeManifest
+    import graft.sources.LakeTable.Staged
+    val strs = Gen.choose(0, 5).flatMap(Gen.listOfN(_, hostile))
+    val counts = Gen.choose(0, 4).flatMap(Gen.mapOfN(_,
+      Gen.zip(hostile, Gen.choose(0L, 1L << 40))))
+    val genStaged = for {
+      files <- strs; stats <- strs; dv <- strs; schema <- strs
+      dropped <- strs; batches <- counts; rows <- counts; hidden <- counts
+      bytes <- counts; op <- hostile; base <- Gen.choose(0L, 99L)
+      renames <- Gen.choose(0, 3).flatMap(Gen.mapOfN(_,
+        Gen.zip(hostile, hostile)))
+    } yield Staged("d", base + 1L, files, batches, schema, stats, base, op,
+                   dv, renames, dropped, rows, hidden, bytes)
+    val states = samples(genStaged, 300)
+    states.foreach { s0 =>
+      val s = LakeManifest.canonical(s0, s0.version)
+      assert(LakeManifest.decode("d", LakeManifest.encode(s)) == Right(s),
+        s"full round trip of $s")
+    }
+    // a commit on top of each state: carried members kept in order,
+    // fresh members appended, counts and watermarks moved
+    val deltas = states.zip(states.reverse).flatMap { case (b0, x) =>
+      val b = LakeManifest.canonical(b0, b0.version)
+      val staged = LakeManifest.canonical(b.copy(
+        files = b.files.drop(1) ++ x.files.map(_ + "+"),
+        stats = b.stats ++ x.stats.map(_ + "+"),
+        dv = b.dv ++ x.dv.map(_ + "+"),
+        schema = x.schema, renames = x.renames, dropped = x.dropped,
+        rows = b.rows.drop(1) ++ x.rows, hidden = b.hidden ++ x.hidden,
+        bytes = b.bytes ++ x.bytes, batches = b.batches ++ x.batches,
+        baseVersion = b.version, op = x.op), b.version + 1L)
+      LakeManifest.diff(b, staged).map(d => (b, staged, d))
+    }
+    assert(deltas.size > states.size / 4, s"only ${deltas.size} deltas")
+    deltas.foreach { case (b, staged, d) =>
+      LakeManifest.decode("d", LakeManifest.encode(d)) match {
+        case Left(back) =>
+          assert(back == d, s"delta round trip of $d")
+          assert(LakeManifest.fold(b, back) == staged, s"fold of $d")
+        case Right(full) => fail(s"a delta decoded as a full record: $full")
+      }
+    }
+  }
+
+  test("lake end to end: hostile rename targets and sink ids commit, " +
+       "resolve cold and read back") {
+    import spark.implicits._
+    import graft.sources.LakeTable
+    samples(Gen.zip(hostile, hostile), 4).foreach { case (name, sink) =>
+      val dir = java.nio.file.Files.createTempDirectory("graft_prop_lake_")
+        .toString
+      assert(LakeTable.commit(spark, dir,
+        Seq((1L, 10L), (2L, 20L)).toDF("k", "v"))(_ => None) == Right(1L))
+      assert(LakeTable.renameColumn(dir, "v", name) == Right(2L))
+      assert(LakeTable.append(spark, dir, Seq((3L, 30L)).toDF("k", name),
+        batches = Map(sink -> 5L))(_ => None) == Right(3L))
+      LakeTable.clearResolveCache()
+      assert(LakeTable.appliedBatch(dir, sink).contains(5L), s"sink $sink")
+      val back = LakeTable.read(spark, dir)
+      assert(back.columns.toSeq == Seq("k", name), s"rename to $name")
+      assert(back.orderBy("k").collect().map(_.getLong(1)).toSeq
+        == Seq(10L, 20L, 30L), s"rename to $name")
+    }
+  }
 }

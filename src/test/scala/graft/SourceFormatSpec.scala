@@ -303,6 +303,18 @@ class SourceFormatSpec extends SparkTestBase {
       "a refused DELETE must leave the table untouched")
     assert(LakeTable.currentVersion(dir).contains(4L))
 
+    // BETWEEN on the catalog-qualified column: the rewrite strips the
+    // qualifier from BETWEEN's original parameters too, for UPDATE and
+    // DELETE alike (k = 11 was deleted with band 3 above)
+    def between(): Map[Long, Long] = spark.table(s"$cat.default.t1")
+      .filter(col("k").between(10L, 12L)).collect()
+      .map(r => r.getLong(0) -> r.getLong(2)).toMap
+    spark.sql(s"UPDATE $cat.default.t1 SET v = v + 1 WHERE k BETWEEN 10 AND 12")
+    assert(between() == Map(10L -> 101L, 12L -> 121L))
+    spark.sql(s"DELETE FROM $cat.default.t1 WHERE k BETWEEN 10 AND 12")
+    assert(between().isEmpty)
+    assert(LakeTable.currentVersion(dir).contains(6L))
+
     // TRUNCATE TABLE rides the same surface (SupportsDeleteV2's default
     // truncate = deleteWhere(true)): zero rewrite, all rows hidden
     val filesV3 = LakeTable.currentFiles(dir)
