@@ -9,9 +9,22 @@ import graft.functions.{CdcChunkWalk, DotProduct, ExactPercentile, JaroWinkler, 
   * `spark.sql("... graft_dot(a, b) ...")` works in any session built with
   * `.withExtensions(new GraftExtensions)` (or
   * `spark.sql.extensions=graft.GraftExtensions`).
+  *
+  * It also installs, once per JVM, the fork-free local file system
+  * ([[graft.sources.NioLocalFs]]) for `file:` paths. Without libhadoop,
+  * Hadoop's own local file system forks a `chmod` per created file or
+  * directory and a `readlink` per link-status probe, and every streaming
+  * epoch writes several such files (offset and commit logs, state-store
+  * deltas, lake staging), so the forks dominated micro-batch latency. The
+  * install is a Hadoop default resource: `withExtensions` runs `apply`
+  * before the SparkContext and its cached `file:` FileSystem exist, and
+  * explicit `spark.hadoop.fs.*` or `core-site.xml` values still win. With
+  * `spark.sql.extensions`, `apply` runs after the SparkContext is built,
+  * so a `file:` FileSystem cached before that keeps Hadoop's class.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
+    graft.sources.NioLocalFs.install()
     e.injectFunction(GraftFunctions.dotProductDescriptor)
     e.injectFunction(GraftFunctions.topKDescriptor)
     e.injectFunction(GraftFunctions.cdcChunksDescriptor)

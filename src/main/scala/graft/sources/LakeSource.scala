@@ -439,7 +439,7 @@ class LakeRelation(ctx: SQLContext, dir: String, versionAsOf: Option[Long],
       LakeTable.toLogical(
           LakeTable.applyDv(ctx.sparkSession, dir, frame,
             LakeTable.dvOf(dir, version)), renames)
-        .select(cols.map(col): _*)
+        .select(cols.map(LakeTable.byName): _*)
         .rdd
     }
   }

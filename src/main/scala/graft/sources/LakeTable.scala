@@ -11,7 +11,7 @@ import com.fasterxml.jackson.annotation.{JsonIgnoreProperties, JsonProperty,
   JsonPropertyOrder}
 import com.fasterxml.jackson.databind.annotation.{JsonDeserialize,
   JsonSerialize}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, expr, lit}
 import org.apache.spark.sql.types.StructType
 
@@ -478,8 +478,15 @@ object LakeTable {
   private[graft] def structOf(entries: Seq[String]): StructType =
     StructType.fromDDL(entries.map { e =>
       val a = e.split(" ", 2)
-      s"`${a(0).replace("`", "``")}` ${a(1)}"
+      s"${quoted(a(0))} ${a(1)}"
     }.mkString(", "))
+
+  private def quoted(name: String): String = s"`${name.replace("`", "``")}`"
+
+  /** The top-level column named exactly `name`. `col(name)` parses its
+    * argument, so a physical name like `a.b` would select field `b` of a
+    * struct `a`; the back-quoted form selects the column itself. */
+  private[graft] def byName(name: String): Column = col(quoted(name))
 
   /** `name TYPE` entries with physical names replaced by logical. */
   private[sources] def logicalSchema(recorded: Seq[String],
@@ -611,7 +618,7 @@ object LakeTable {
         .withColumn(fCol, relFileCol)
         .withColumn(pCol, col("_metadata.row_index"))
         .join(broadcast(dvDf), Seq(fCol, pCol), "left_anti")
-        .select(cols.map(col): _*)
+        .select(cols.map(byName): _*)
     }
   }
 
@@ -681,7 +688,7 @@ object LakeTable {
           .select(col("file").as(fCol), col("pos").as(pCol))),
         Seq(fCol, pCol), "left_anti")
     val out = live.select((cols.map(n =>
-      col(n).as(renames.getOrElse(n, n))) :+ col(fCol) :+ col(pCol)): _*)
+      byName(n).as(renames.getOrElse(n, n))) :+ col(fCol) :+ col(pCol)): _*)
     (out, fCol, pCol)
   }
 
@@ -2377,7 +2384,7 @@ object LakeTable {
           val cols = live.columns.toSeq
           val updated = set.foldLeft(live.filter(predicate)) {
             case (df, (c, v)) => df.withColumn(c, v)
-          }.select(cols.map(col): _*)
+          }.select(cols.map(byName): _*)
           val fresh = stageFresh(spark, dir, updated, layoutBy, statsBy,
                                  rebalance = false) // DML-bounded
           val (sidecars, dvRows, dvHidden) =
@@ -2949,8 +2956,6 @@ object LakeTable {
                              sink: String, op: String,
                              emptyNoOp: Boolean = false)(
       check: DataFrame => Option[String]): Either[String, Long] = {
-    require(sink.forall(c => c.isLetterOrDigit || c == '_' || c == '-'),
-      s"sink id must be [A-Za-z0-9_-]*: '$sink'")
     Files.createDirectories(Paths.get(dir))
     // PLANNER-PLANE collect, and the lake layer's sanctioned exemption
     // from the ops-layer "no collect()" rule (OpDef.scala): what crosses
@@ -3577,7 +3582,7 @@ object LakeTable {
               .withColumn("_dv_file", relFileCol)
               .withColumn("_dv_pos", col("_metadata.row_index"))
               .join(broadcast(dvDf), Seq("_dv_file", "_dv_pos"), "left_semi")
-              .select(cols.map(col): _*), renamesOf(dir, v)), "delete"))
+              .select(cols.map(byName): _*), renamesOf(dir, v)), "delete"))
           }
         val before = if (prev == 0L) Seq.empty else filesOf(dir, prev)
         val after = filesOf(dir, v)

@@ -1804,6 +1804,33 @@ class LakeSpec extends SparkTestBase {
       == Seq(100L, 200L, 300L, 400L))
   }
 
+  test("DV delete, DV update and the change feed on a physical column " +
+       "named a.b") {
+    import spark.implicits._
+    // `col("a.b")` would read field b of a struct a: every DV and feed
+    // projection must select the column by its exact name
+    val dir = Files.createTempDirectory("graft_lake_dotted_").toString
+    assert(LakeTable.commit(spark, dir,
+      (1L to 5L).map(k => (k, k * 10L)).toDF("k", "a.b"))(_ => None)
+      == Right(1L))
+    assert(LakeTable.deleteWhereDv(spark, dir, col("k") === 2L)(_ => None)
+      == Right(2L))
+    assert(LakeTable.updateWhereDv(spark, dir, col("k") === 3L,
+      Seq("a.b" -> (col("`a.b`") + lit(1L))))(_ => None) == Right(3L))
+    LakeTable.clearResolveCache()
+    val back = LakeTable.read(spark, dir)
+    assert(back.columns.toSeq == Seq("k", "a.b"))
+    assert(back.orderBy("k").collect().map(r => (r.getLong(0), r.getLong(1)))
+      .toSeq == Seq((1L, 10L), (3L, 31L), (4L, 40L), (5L, 50L)))
+    val feed = LakeTable.changesBetween(spark, dir, 1L, 3L)
+      .select(col("_change_type"), col("_commit_version"), col("k"),
+              col("`a.b`"))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+                           r.getLong(3))).toSet
+    assert(feed == Set(("delete", 2L, 2L, 20L), ("delete", 3L, 3L, 30L),
+                       ("insert", 3L, 3L, 31L)), s"feed: $feed")
+  }
+
   test("golden log: manifests and checkpoints written before the typed " +
        "codec resolve to the accessor values recorded with them") {
     import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}

@@ -176,6 +176,10 @@ class LakeStreamSpec extends SparkTestBase {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_lakesink_").toString
     val cp = Files.createTempDirectory("graft_lakesink_cp_").toString
+    // every sink here carries JSON metacharacters in its id: its
+    // watermark must still read back, so a replayed epoch is skipped,
+    // not re-applied
+    val sinkId = "q\"}x"
 
     val ms = MemoryStream[(Long, Long)](spark)
     val q = ms.toDF().toDF("custkey", "cents")
@@ -184,6 +188,7 @@ class LakeStreamSpec extends SparkTestBase {
       .option("path", dir).option("checkpointLocation", cp)
       .option("commitMode", "merge")
       .option("keys", "custkey").option("layoutBy", "band")
+      .option("sinkName", sinkId)
       .start()
     try {
       ms.addData((1L, 100L), (2L, 200L), (5L, 500L))
@@ -201,8 +206,10 @@ class LakeStreamSpec extends SparkTestBase {
 
     // direct replay of an applied batchId must be a no-op (the manifest
     // watermark is the idempotence handle — the crash-replay path)
+    LakeTable.clearResolveCache()
+    assert(LakeTable.appliedBatch(dir, sinkId).contains(1L))
     val sink = new graft.sources.LakeStreamSink(dir, "merge", Some("band"),
-      Seq.empty, Seq("custkey"), "graft-lake-stream")
+      Seq.empty, Seq("custkey"), sinkId)
     sink.addBatch(1L, Seq((1L, 999L)).toDF("custkey", "cents")
       .withColumn("band", col("custkey") % 4))
     assert(LakeTable.currentVersion(dir).contains(2L),
@@ -211,11 +218,9 @@ class LakeStreamSpec extends SparkTestBase {
       .head.getAs[Long]("cents") == 111L)
 
     // append mode onto a fresh table: two batches → two versions, all
-    // rows. The sink id carries JSON metacharacters: its watermark must
-    // still read back, so a replayed epoch is skipped, not re-applied
+    // rows
     val dir2 = Files.createTempDirectory("graft_lakesink_app_").toString
     val cp2 = Files.createTempDirectory("graft_lakesink_appcp_").toString
-    val sinkId = "q\"}x"
     val ms2 = MemoryStream[(Long, Long)](spark)
     val q2 = ms2.toDF().toDF("custkey", "cents")
       .writeStream.format("graft-lake")
@@ -293,6 +298,7 @@ class LakeStreamSpec extends SparkTestBase {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_lakesink_cdc_").toString
     val cp = Files.createTempDirectory("graft_lakesink_cdccp_").toString
+    val sinkId = "q\"}x" // JSON metacharacters in the watermark's key
     val ms = MemoryStream[(Long, Long, String)](spark)
     val q = ms.toDF().toDF("custkey", "cents", "op")
       .withColumn("band", col("custkey") % 4)
@@ -300,6 +306,7 @@ class LakeStreamSpec extends SparkTestBase {
       .option("path", dir).option("checkpointLocation", cp)
       .option("commitMode", "cdc")
       .option("keys", "custkey").option("layoutBy", "band")
+      .option("sinkName", sinkId)
       .start()
     try {
       ms.addData((1L, 100L, "U"), (2L, 200L, "U"), (3L, 300L, "U"))
@@ -314,8 +321,10 @@ class LakeStreamSpec extends SparkTestBase {
       assert(LakeTable.currentVersion(dir).contains(2L))
     } finally q.stop()
     // replayed batchId: no new version, tombstoned key stays dead
+    LakeTable.clearResolveCache()
+    assert(LakeTable.appliedBatch(dir, sinkId).contains(1L))
     val sink = new graft.sources.LakeStreamSink(dir, "cdc", Some("band"),
-      Seq.empty, Seq("custkey"), "graft-lake-stream")
+      Seq.empty, Seq("custkey"), sinkId)
     sink.addBatch(1L, Seq((2L, 999L, "U")).toDF("custkey", "cents", "op")
       .withColumn("band", col("custkey") % 4))
     assert(LakeTable.currentVersion(dir).contains(2L))
