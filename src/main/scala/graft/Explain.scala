@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Plan audit: dumps `explain("formatted")` for representative queries so
   * scan pruning (ReadSchema/PushedFilters), join strategies (Broadcast vs
@@ -15,13 +14,7 @@ object Explain {
       "q_agg_basic", "q_sim_cosine_dup", "q_dedup_near", "q_win_tumble_batch",
       "q_join_range", "q_dedup_simhash", "q_dedup_minhash", "q_sample_stratified",
       "q_sim_knn", "q_scd2_build", "q_pack_sequences", "q_sample_split")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.ops.LlmOps
 
 /** Scale-growth benchmark: measures the banded dedup/similarity family on
@@ -23,13 +22,7 @@ object GrowthBench {
     val baseDocs = sys.env.getOrElse("SPARK_GRAFT_GROWTH_DOCS", "5000").toLong
     val baseVecs = sys.env.getOrElse("SPARK_GRAFT_GROWTH_VECS", "2000").toLong
     val outDir = sys.env.getOrElse("SPARK_GRAFT_GROWTH_DIR", "/tmp/graft_growth")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
 
     // iteration switch: measure only the lake live-file axis (the doc

@@ -3,7 +3,6 @@ package graft
 import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Per-JOB time breakdown for one or more declared queries — the local
   * substitute for the Spark UI's Jobs page (guide §1.1: decide where the
@@ -23,13 +22,7 @@ object ProfileQ {
       scala.util.Try(a.toInt).toOption).getOrElse(3)
     val names = args.filterNot(a =>
       scala.util.Try(a.toInt).toOption.isDefined).toSeq
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     // same warm-up contract as Bench: fixtures listed, graph/doc cores built
     SparkEntry.queries.get("q_agg_basic").foreach(fn => fn(spark, sfDir).count())

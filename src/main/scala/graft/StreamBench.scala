@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.streaming.StreamOps
 
@@ -23,13 +23,7 @@ object StreamBench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val nEvents = sys.env.getOrElse("SPARK_GRAFT_STREAM_EVENTS", "200000").toInt
     val nDocs = sys.env.getOrElse("SPARK_GRAFT_STREAM_DOCS", "20000").toInt
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     implicit val ctx = spark.sqlContext

@@ -32,13 +32,7 @@ object TpchGrowthBench {
     val srcDir = sys.env.getOrElse("SPARK_GRAFT_SRC_SF", "/root/testdata/sf0.1")
     val outDir = sys.env.getOrElse("SPARK_GRAFT_GROWTH_DIR",
                                    "/tmp/graft_growth_tpch")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
 
     val scales = Seq(1, 3, 10)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,17 +9,11 @@ object Verify {
     // the driver always passes exactly two args → full dump)
     val only = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions) // native fns + SQL UPDATE rule
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // keep the INT96 parquet timestamp default: DuckDB reads INT96 as a
-      // naive TIMESTAMP, exactly the type its oracle queries produce —
-      // TIMESTAMP_MICROS would be tagged isAdjustedToUTC and read back as
-      // TIMESTAMPTZ, breaking the driver's type/hash compare
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // keep the INT96 parquet timestamp default: DuckDB reads INT96 as a
+    // naive TIMESTAMP, exactly the type its oracle queries produce —
+    // TIMESTAMP_MICROS would be tagged isAdjustedToUTC and read back as
+    // TIMESTAMPTZ, breaking the driver's type/hash compare
+    val spark = Sessions.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

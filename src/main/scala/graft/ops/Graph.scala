@@ -520,7 +520,7 @@ object Graph {
       * and lexicographic seed) ⇒ oracle-checked against DuckDB's
       * recursive UNION-distinct BFS.
       *
-      * COST FLOOR (r9 ask #5, ProfileBfs at sf0.1, warm, agreement-pinned):
+      * COST FLOOR (r9 ask #5, sf0.1, warm, agreement-pinned):
       * this spelling 3.8–4.2 s; explicit-frontier semi-naive (newly-reached
       * = distinct ∘ anti-join settled, NO per-round re-aggregation) 4.35 s
       * with per-round checkpoints and 6.19 s with every-other-round — the

@@ -249,10 +249,8 @@ object LlmOps {
   /** Rows-per-task target for [[fanWide]]: with the [[bandBucketCap]]
     * bounding per-row downstream work, ~4k bucket rows amortize a task's
     * fixed overhead while keeping dozens of tasks per core at any
-    * realistic corpus size. Sys-prop override for experiments only. */
-  private[graft] val fanRowsPerTask: Long =
-    sys.props.get("graft.fanRowsPerTask").flatMap(v =>
-      scala.util.Try(v.toLong).toOption).filter(_ > 0).getOrElse(4096L)
+    * realistic corpus size. */
+  private[graft] val fanRowsPerTask: Long = 4096L
 
   private[graft] def fanWidth(s: org.apache.spark.sql.SparkSession,
                               rows: Long): Int = {

@@ -286,7 +286,7 @@ case class DescribeDetailCommand(ident: String)
       LakeTable.liveRowCountOf(dir, v)
         .map(java.lang.Long.valueOf).orNull,
       LakeCatalog.readPending(dir).flatMap(_.layoutBy).orNull,
-      LakeTable.logicalSchemaOf(dir, v).mkString(", "),
+      LakeTable.logicalSchemaOf(dir, v).map(_.entry).mkString(", "),
       LakeTable.commitTimeOf(dir, v)))
   }
 }

@@ -608,18 +608,12 @@ class LakeV2Table(val dir: String, ident: String,
   override def schema(): StructType = {
     // LOGICAL names (r13 column mapping): renamed columns surface under
     // their display names; time travel shows each version's own
-    val recorded = versionAsOf
-      .map(v => LakeTable.logicalSchemaOf(dir, v))
-      .getOrElse(LakeTable.currentLogicalSchema(dir))
-    if (recorded.nonEmpty) LakeTable.structOf(recorded)
-    else LakeCatalog.readPending(dir) match {
+    val v = versionAsOf.orElse(LakeTable.currentVersion(dir))
+    v.flatMap(LakeTable.logicalStructOf(dir, _))
       // a CREATE'd-but-unborn table carries its declared schema
-      case Some(p) if versionAsOf.isEmpty &&
-          LakeTable.currentVersion(dir).isEmpty => p.schema
-      case _ => versionAsOf
-        .map(v => LakeTable.readVersion(SparkSession.active, dir, v).schema)
-        .getOrElse(LakeTable.read(SparkSession.active, dir).schema)
-    }
+      .orElse(LakeCatalog.readPending(dir).filter(_ => v.isEmpty).map(_.schema))
+      .getOrElse(v.map(LakeTable.readVersion(SparkSession.active, dir, _))
+        .getOrElse(LakeTable.read(SparkSession.active, dir)).schema)
   }
 
   override def capabilities(): java.util.Set[TableCapability] =
@@ -886,7 +880,7 @@ object LakeV2Table {
   * the row bridge. Spark still applies the query's own filters above
   * this scan (the conservative-residual contract).
   *
-  * Measured bridge tax (ProfileV2Read, sf0.1 orders, pruned 2-column
+  * Measured bridge tax (sf0.1 orders, pruned 2-column
   * filtered aggregate, median of 7 interleaved runs): direct manifest
   * read 0.140 s, V1 `graft-lake` format 0.169 s, this V2 catalog read
   * 0.167 s — the catalog costs exactly the V1 format's documented

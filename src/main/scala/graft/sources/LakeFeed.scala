@@ -83,12 +83,10 @@ private[sources] class LakeFeedTable(val dir: String, ident: String)
 
 private[sources] object LakeFeedTable {
   private[sources] def feedSchemaOf(dir: String): StructType = {
-    val base = {
-      val recorded = LakeTable.currentLogicalSchema(dir)
-      if (recorded.nonEmpty) LakeTable.structOf(recorded)
-      else LakeCatalog.readPending(dir).map(_.schema).getOrElse(
-        LakeTable.read(SparkSession.active, dir).schema)
-    }
+    val base = LakeTable.currentVersion(dir)
+      .flatMap(LakeTable.logicalStructOf(dir, _))
+      .orElse(LakeCatalog.readPending(dir).map(_.schema))
+      .getOrElse(LakeTable.read(SparkSession.active, dir).schema)
     StructType(base.fields ++ Array(
       StructField("_change_type", StringType, nullable = false),
       StructField("_commit_version", LongType, nullable = false),
@@ -121,9 +119,10 @@ private[graft] class LakeChangesScanShim(ctx: SQLContext, dir: String,
         val hi = to.getOrElse(v)
         require(hi >= lo,
           s"change-feed window is empty or inverted: ($lo, $hi]")
-        LakeTable.changesBetween(spark, dir, lo, hi)
-          .select(schema.fieldNames.toIndexedSeq
-            .map(org.apache.spark.sql.functions.col): _*)
+        // rows under the live version's names, the names `schema` holds
+        LakeTable.changesBetween(spark, dir, lo, hi,
+            Some(LakeTable.renamesOf(dir, v)))
+          .select(schema.fieldNames.toIndexedSeq.map(LakeTable.byName): _*)
     }
   }
 

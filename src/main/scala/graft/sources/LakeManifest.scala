@@ -9,6 +9,7 @@ import com.fasterxml.jackson.databind.annotation.{JsonDeserialize,
   JsonSerialize}
 import com.fasterxml.jackson.databind.json.JsonMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import org.apache.spark.sql.types.StructType
 
 import LakeTable.Staged
 
@@ -23,7 +24,8 @@ import LakeTable.Staged
   * "dropped","rowcounts","hidden","bytecounts","files"}`; a delta is
   * `{"version","base","op","delta":1,"schema","renames","dropped",
   * "d_addf",…,"d_delbatches"}`. Per-member count maps travel as
-  * `"<member>|<n>"` string arrays, empty fields are omitted, and a
+  * `"<member>|<n>"` string arrays, schema entries as `"name TYPE"`
+  * strings ([[LakeManifest.Column]]), empty fields are omitted, and a
   * missing field decodes to the case-class default — which is how
   * manifests written before `rowcounts` (r14) or `bytecounts` (r15)
   * existed read through the same path. */
@@ -60,13 +62,66 @@ private[graft] object LakeManifest {
       }.toMap
   }
 
+  /** A name back-quoted for Spark's SQL parser, backticks doubled. */
+  private[sources] def quoted(name: String): String =
+    s"`${name.replace("`", "``")}`"
+
+  /** One recorded column: its PHYSICAL name and its Spark SQL type as
+    * written (`DataType.sql`). On the wire it is a `"name TYPE"` string;
+    * a name holding a space is back-quoted with its backticks doubled
+    * (`` "`a b` BIGINT" ``), so every other name is written exactly as
+    * before. */
+  @JsonSerialize(using = classOf[ColumnSer])
+  @JsonDeserialize(using = classOf[ColumnDe])
+  final case class Column(name: String, sqlType: String) {
+    def entry: String =
+      s"${if (name.contains(' ')) quoted(name) else name} $sqlType"
+  }
+
+  object Column {
+    private val Quoted = "(?s)`((?:[^`]|``)*)` (.*)".r
+
+    /** One recorded entry, split at its first space. Only an entry that
+      * starts with a backtick and whose remainder no reader ever accepted
+      * as a column type reads as the quoted form — so every entry a
+      * reader could open before quoting existed decodes as it did. */
+    def parse(e: String): Column = {
+      val i = e.indexOf(' ')
+      val plain = if (i < 0) Column(e, "") else Column(e.take(i), e.drop(i + 1))
+      e match {
+        case Quoted(n, t) if scala.util.Try(
+            StructType.fromDDL(s"`c` ${plain.sqlType}")).isFailure =>
+          Column(n.replace("``", "`"), t)
+        case _ => plain
+      }
+    }
+  }
+
+  final class ColumnSer extends JsonSerializer[Column] {
+    override def serialize(c: Column, g: JsonGenerator,
+                           p: SerializerProvider): Unit = {
+      val e = c.entry
+      // a name the entry cannot spell unambiguously refuses the write
+      if (e.startsWith("`") && Column.parse(e) != c)
+        throw new IllegalArgumentException(
+          s"column name ${quoted(c.name)} cannot be recorded")
+      g.writeString(e)
+    }
+  }
+
+  final class ColumnDe extends JsonDeserializer[Column] {
+    override def deserialize(p: JsonParser,
+                             c: DeserializationContext): Column =
+      Column.parse(p.getValueAsString)
+  }
+
   /** One commit's change against its base version's resolved snapshot:
     * add/remove lists for the ordered members, set/delete entries for
     * the maps, and the small metadata (`schema`, `renames`, `dropped`)
     * in full. */
   final case class Delta(
       version: Long, base: Long, op: String, delta: Int = 1,
-      schema: Seq[String] = Nil,
+      schema: Seq[Column] = Nil,
       renames: Map[String, String] = Map.empty,
       dropped: Seq[String] = Nil,
       d_addf: Seq[String] = Nil, d_rmf: Seq[String] = Nil,

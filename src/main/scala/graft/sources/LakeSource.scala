@@ -52,7 +52,7 @@ class LakeSource extends RelationProvider with CreatableRelationProvider
       : (String, StructType) = {
     val dir = LakeSource.localPath(parameters.getOrElse("path",
       throw new IllegalArgumentException("graft-lake requires option 'path'")))
-    (shortName(), schema.getOrElse(LakeStreamSource.feedSchema(sqlContext, dir)))
+    (shortName(), schema.getOrElse(LakeFeedTable.feedSchemaOf(dir)))
   }
 
   override def createSource(sqlContext: SQLContext,
@@ -338,13 +338,12 @@ class LakeRelation(ctx: SQLContext, dir: String, versionAsOf: Option[Long],
   override val schema: StructType = {
     val version = liveVersion
     // LOGICAL names (r13 column mapping)
-    val recorded = LakeTable.logicalSchemaOf(dir, version)
-    if (recorded.nonEmpty) LakeTable.structOf(recorded)
-    else LakeTable.readVersion(ctx.sparkSession, dir, version).schema
+    LakeTable.logicalStructOf(dir, version).getOrElse(
+      LakeTable.readVersion(ctx.sparkSession, dir, version).schema)
   }
 
-  /** The V1 source-boundary tax, MEASURED (r9 ask #6; ProfileLakeTax,
-    * sf0.1 rollup fixture, local[32], median of 5 after warm-up — the
+  /** The V1 source-boundary tax, MEASURED (r9 ask #6, sf0.1 rollup
+    * fixture, local[32], median of 5 after warm-up — the
     * same band-range predicate + aggregate through three paths):
     *   direct `LakeTable.read` + filter . . . . . . . .  0.196 s
     *   this source (pruned scan, `.rdd` exit)  . . . . . 0.199 s
@@ -417,22 +416,12 @@ class LakeRelation(ctx: SQLContext, dir: String, versionAsOf: Option[Long],
       val cols =
         if (requiredColumns.isEmpty) schema.fieldNames.toSeq
         else requiredColumns.toSeq
-      // files read under their PHYSICAL schema, then the logical
-      // projection (r13) — identity when nothing was ever renamed
-      val physical = {
-        val recorded = LakeTable.schemaOf(dir, version)
-        if (recorded.isEmpty) schema
-        else LakeTable.structOf(recorded)
-      }
-      // planned from manifest metadata alone (r15): the pruned file
-      // list + recorded byte sizes feed FileListShim — zero FS calls
-      val sizes = LakeTable.bytesOf(dir, version)
-      val frame = org.apache.spark.sql.graftshim.FileListShim.parquetFrame(
-        ctx.sparkSession, physical,
-        files.map { f =>
-          val p = java.nio.file.Paths.get(dir, f)
-          p.toString -> sizes.getOrElse(f, java.nio.file.Files.size(p))
-        })
+      // files read under their PHYSICAL schema, planned from manifest
+      // metadata alone (r15: the pruned file list + recorded byte sizes,
+      // zero FS calls), then the logical projection (r13) — identity
+      // when nothing was ever renamed
+      val frame = LakeTable.knownFrame(ctx.sparkSession, dir, files,
+        LakeTable.schemaOf(dir, version), LakeTable.bytesOf(dir, version))
       // DV-bearing versions (r11) filter deleted positions before the
       // projection — pruning composes: a dropped file's positions simply
       // never come up, and the anti-join is a broadcast, no shuffle

@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.LongOffset
 import org.apache.spark.sql.connector.read.streaming
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.graftshim.StreamShim
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType, TimestampType}
+import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming READ of a graft-lake table — the change feed as a
   * first-class `readStream.format("graft-lake")` source (r10; closes the
@@ -55,7 +55,7 @@ class LakeStreamSource(ctx: SQLContext, dir: String, startingVersion: Long,
     * versions wholesale (Delta's same-named option). The change feed
     * stays the `readStream.format("graft-lake")` surface. */
   override val schema: StructType =
-    rowsSchema.getOrElse(LakeStreamSource.feedSchema(ctx, dir))
+    rowsSchema.getOrElse(LakeFeedTable.feedSchemaOf(dir))
 
   private val rowsMode: Boolean = rowsSchema.nonEmpty
 
@@ -286,20 +286,5 @@ object LakeStreamSource {
         removed.nonEmpty || dvAdded.nonEmpty
       } => v
     }
-  }
-
-  private[sources] def feedSchema(ctx: SQLContext, dir: String): StructType = {
-    val table = {
-      val recorded = LakeTable.currentLogicalSchema(dir)
-      if (recorded.nonEmpty) LakeTable.structOf(recorded)
-      else LakeTable.read(ctx.sparkSession, dir).schema
-    }
-    StructType(table.fields ++ Array(
-      StructField("_change_type", StringType, nullable = false),
-      StructField("_commit_version", LongType, nullable = false),
-      // behavior 41 (r11): publish-instant event time — downstream
-      // streaming aggregations can `withWatermark("_commit_timestamp",
-      // ...)` directly on feed rows
-      StructField("_commit_timestamp", TimestampType, nullable = false)))
   }
 }

@@ -11,9 +11,11 @@ import com.fasterxml.jackson.annotation.{JsonIgnoreProperties, JsonProperty,
   JsonPropertyOrder}
 import com.fasterxml.jackson.databind.annotation.{JsonDeserialize,
   JsonSerialize}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, expr, lit}
 import org.apache.spark.sql.types.StructType
+
+import LakeManifest.{Column, quoted}
 
 /** Write-audit-publish table commit — the transactional-sink capability a
   * lakehouse user hits first (Delta/Iceberg's OPTIMIZE / MERGE / snapshot
@@ -89,9 +91,9 @@ object LakeTable {
     * [[graft.streaming.StreamOps.mergeBatchIntoLake]]; multiple concurrent
     * sinks onto one table each ride their own key ([[stage]] carries the
     * base version's map forward, so one sink's commit never erases
-    * another's watermark). `schema` is the staged version's `name TYPE`
-    * column list, derived DETERMINISTICALLY (base-manifest schema merged
-    * with the fresh files' schema — never a footer race over mixed files).
+    * another's watermark). `schema` is the staged version's columns,
+    * derived DETERMINISTICALLY (base-manifest schema merged with the
+    * fresh files' schema — never a footer race over mixed files).
     * `op` names the action for the change feed ([[changesBetween]]):
     * "optimize" versions rewrite layout only and emit no logical changes.
     * The Jackson annotations map this class onto the full-snapshot
@@ -103,7 +105,7 @@ object LakeTable {
   final case class Staged(dir: String, version: Long, files: Seq[String],
                           @JsonDeserialize(contentAs = classOf[java.lang.Long])
                           batches: Map[String, Long] = Map.empty,
-                          schema: Seq[String] = Seq.empty,
+                          schema: Seq[Column] = Seq.empty,
                           stats: Seq[String] = Seq.empty,
                           @JsonProperty("base") baseVersion: Long = 0L,
                           op: String = "overwrite",
@@ -472,39 +474,38 @@ object LakeTable {
     if (renames.isEmpty) df
     else df.toDF(df.columns.toSeq.map(n => renames.getOrElse(n, n)): _*)
 
-  /** Recorded `name TYPE` entries as a schema. Each entry splits at its
-    * first space and the name is back-quoted for the DDL parser, so any
-    * column name reads back (`q.parquet`, `a"b` and `c}d` included). */
-  private[graft] def structOf(entries: Seq[String]): StructType =
-    StructType.fromDDL(entries.map { e =>
-      val a = e.split(" ", 2)
-      s"${quoted(a(0))} ${a(1)}"
-    }.mkString(", "))
-
-  private def quoted(name: String): String = s"`${name.replace("`", "``")}`"
+  /** Recorded columns as a schema. Names are back-quoted for the DDL
+    * parser, so any column name reads back (`q.parquet`, `a"b`, `c}d`
+    * and `a b` included). */
+  private[graft] def structOf(cols: Seq[Column]): StructType =
+    StructType.fromDDL(
+      cols.map(c => s"${quoted(c.name)} ${c.sqlType}").mkString(", "))
 
   /** The top-level column named exactly `name`. `col(name)` parses its
     * argument, so a physical name like `a.b` would select field `b` of a
     * struct `a`; the back-quoted form selects the column itself. */
-  private[graft] def byName(name: String): Column = col(quoted(name))
+  private[graft] def byName(name: String): org.apache.spark.sql.Column =
+    col(quoted(name))
 
-  /** `name TYPE` entries with physical names replaced by logical. */
-  private[sources] def logicalSchema(recorded: Seq[String],
-                                     renames: Map[String, String])
-      : Seq[String] =
+  /** Recorded columns with physical names replaced by logical. */
+  private[sources] def logicalSchema(recorded: Seq[Column],
+                                     renames: Map[String, String]): Seq[Column] =
     if (renames.isEmpty) recorded
-    else recorded.map { e =>
-      val a = e.split(" ", 2)
-      s"${renames.getOrElse(a(0), a(0))} ${a(1)}"
-    }
+    else recorded.map(c => c.copy(name = renames.getOrElse(c.name, c.name)))
 
   /** Current schema in LOGICAL names — the user/catalog boundary. */
-  def currentLogicalSchema(dir: String): Seq[String] =
+  def currentLogicalSchema(dir: String): Seq[Column] =
     logicalSchema(currentSchema(dir), currentRenames(dir))
 
-  private[sources] def logicalSchemaOf(dir: String, version: Long)
-      : Seq[String] =
+  private[graft] def logicalSchemaOf(dir: String, version: Long): Seq[Column] =
     logicalSchema(schemaOf(dir, version), renamesOf(dir, version))
+
+  /** `version`'s recorded schema as a StructType in LOGICAL names; None
+    * when the manifest records no schema (a legacy schema-less version,
+    * or none published) and the caller must fall back to file footers. */
+  private[sources] def logicalStructOf(dir: String, version: Long)
+      : Option[StructType] =
+    Some(logicalSchemaOf(dir, version)).filter(_.nonEmpty).map(structOf)
 
   /** logical → physical (identity for never-renamed columns). */
   private[sources] def physicalNameOf(renames: Map[String, String],
@@ -523,14 +524,14 @@ object LakeTable {
   def currentFiles(dir: String): Seq[String] =
     currentVersion(dir).fold(Seq.empty[String])(filesOf(dir, _))
 
-  /** Schema (`name TYPE` per column) of the currently-published version. */
-  def currentSchema(dir: String): Seq[String] =
-    currentVersion(dir).fold(Seq.empty[String])(schemaOf(dir, _))
+  /** Recorded columns (physical names) of the published version. */
+  def currentSchema(dir: String): Seq[Column] =
+    currentVersion(dir).fold(Seq.empty[Column])(schemaOf(dir, _))
 
   // ---- per-version manifest accessors (the [[LakeSource]] read seam) ----
 
-  private[sources] def schemaOf(dir: String, version: Long): Seq[String] =
-    readManifest(dir, version).fold(Seq.empty[String])(_.schema)
+  private[graft] def schemaOf(dir: String, version: Long): Seq[Column] =
+    readManifest(dir, version).fold(Seq.empty[Column])(_.schema)
 
   private[graft] def filesOf(dir: String, version: Long): Seq[String] =
     readManifest(dir, version).fold(Seq.empty[String])(_.files)
@@ -634,9 +635,9 @@ object LakeTable {
     * size (pre-r15 manifests) fall back to one stat each; schema-less
     * legacy manifests fall back to the normal reader (they need footer
     * schema inference anyway). */
-  private def knownFrame(spark: SparkSession, dir: String,
-                         rels: Seq[String], recorded: Seq[String],
-                         sizes: Map[String, Long]): DataFrame =
+  private[sources] def knownFrame(spark: SparkSession, dir: String,
+                                  rels: Seq[String], recorded: Seq[Column],
+                                  sizes: Map[String, Long]): DataFrame =
     if (recorded.isEmpty)
       spark.read.parquet(rels.map(f => Paths.get(dir, f).toString): _*)
     else org.apache.spark.sql.graftshim.FileListShim.parquetFrame(
@@ -700,11 +701,8 @@ object LakeTable {
     // rides the manifest, so readers get the right empty shape instead
     // of a refusal, and the next epoch repopulates normally
     if (snap.files.isEmpty && recorded.nonEmpty)
-      return toLogical(
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          structOf(recorded)),
-        snap.renames)
+      return toLogical(knownFrame(spark, dir, Nil, recorded, Map.empty),
+                       snap.renames)
     require(snap.files.nonEmpty, s"$what lists no files in $dir")
     // read under the RECORDED schema: columns come back in the
     // manifest-recorded order regardless of physical file layout, and a
@@ -967,10 +965,10 @@ object LakeTable {
   // ---- staging ---------------------------------------------------------
 
   /** One physical staging pass's outputs: manifest-relative file paths,
-    * `name TYPE` schema as written, typed per-file stats entries, and
+    * the columns as written, typed per-file stats entries, and
     * per-file row counts (r14 — the manifest arithmetic the commit-time
     * count-equation audits run on instead of table scans). */
-  private final case class Fresh(files: Seq[String], schema: Seq[String],
+  private final case class Fresh(files: Seq[String], schema: Seq[Column],
                                  stats: Seq[String],
                                  rows: Map[String, Long] = Map.empty) {
     def rowTotal: Long = rows.values.sum
@@ -1007,7 +1005,8 @@ object LakeTable {
         layoutShadow(i) -> c
       }
       val shadowed =
-        shadows.foldLeft(df) { case (d, (s, c)) => d.withColumn(s, col(c)) }
+        shadows.foldLeft(df) { case (d, (s, c)) =>
+          d.withColumn(s, byName(c)) }
       // REBALANCE by the layout columns before a partitioned write (r16,
       // guide §2.2/§6 — Delta's "optimized writes"): without it every
       // task writes one file per layout value it happens to hold, so a
@@ -1031,9 +1030,7 @@ object LakeTable {
       // Full commits / overwrite / append / COPY INTO keep it: those are
       // the writes whose task count scales with the table.
       val rebalanced =
-        if (!rebalance ||
-            sys.props.get("graft.lake.rebalanceStaging").contains("false"))
-          shadowed
+        if (!rebalance) shadowed
         else shadowed.hint("rebalance", shadows.map(_._1): _*)
       rebalanced
         .write.partitionBy(shadows.map(_._1): _*)
@@ -1059,8 +1056,7 @@ object LakeTable {
           spark.read.parquet(
             fresh.map(f => Paths.get(dir, f).toString): _*).schema)
       }
-      val schema = structType.fields.toSeq
-        .map(f => s"${f.name} ${f.dataType.sql}")
+      val schema = columnsOf(structType)
       // layout columns get their per-file stats SYNTHESIZED from the
       // path segments (r14): a layout file's value is its min = max, so
       // every layout table prunes reads on its partition columns through
@@ -1186,11 +1182,8 @@ object LakeTable {
   }
 
   /** First-N-leaf-columns cap for automatic footer stats (Delta records
-    * 32 by default); 0 restricts stats to declared columns only. */
-  private def statsColumnCap: Int =
-    sys.props.get("graft.lake.statsColumns")
-      .flatMap(s => scala.util.Try(s.toInt).toOption)
-      .filter(_ >= 0).getOrElse(32)
+    * 32 by default). */
+  private val statsColumnCap = 32
 
   /** The typed comparison domain a column's FOOTER stats land in, if
     * any — mirrors [[ColStat]]'s kinds. */
@@ -1410,7 +1403,7 @@ object LakeTable {
       case _ => None
     }
     val aggs = present.flatMap(c =>
-      Seq(min(col(c)).as(s"_mn_$c"), max(col(c)).as(s"_mx_$c")))
+      Seq(min(byName(c)).as(s"_mn_$c"), max(byName(c)).as(s"_mx_$c")))
     val grouped = read.groupBy(input_file_name().as("_f"))
       .agg(aggs.head, aggs.tail: _*)
       .collect() // bounded by fresh-file count — planner-side metadata
@@ -1445,19 +1438,21 @@ object LakeTable {
     * columns append (additive evolution); base columns absent from the
     * fresh files stay recorded (an Append missing a nullable column
     * null-fills it at read — the Delta semantics). */
-  private def mergeSchemas(base: Seq[String],
-                           fresh: Seq[String]): Seq[String] = {
+  private def mergeSchemas(base: Seq[Column],
+                           fresh: Seq[Column]): Seq[Column] = {
     if (base.isEmpty) fresh
     else if (fresh.isEmpty) base
     else {
-      val freshByName = fresh.map(_.split(" ", 2)).map(a => a(0) -> a(1)).toMap
-      val baseNames = base.map(_.split(" ", 2)(0)).toSet
-      base.map { e =>
-        val n = e.split(" ", 2)(0)
-        freshByName.get(n).map(t => s"$n $t").getOrElse(e)
-      } ++ fresh.filterNot(e => baseNames.contains(e.split(" ", 2)(0)))
+      val freshByName = fresh.map(c => c.name -> c).toMap
+      val baseNames = base.map(_.name).toSet
+      base.map(c => freshByName.getOrElse(c.name, c)) ++
+        fresh.filterNot(c => baseNames.contains(c.name))
     }
   }
+
+  /** A written schema as the columns a manifest records. */
+  private def columnsOf(st: StructType): Seq[Column] =
+    st.fields.toSeq.map(f => Column(f.name, f.dataType.sql))
 
   /** Stage a new version's data files. Returns the staged state and
     * nothing is visible to readers until [[publish]]. The carried version
@@ -1570,8 +1565,7 @@ object LakeTable {
     // DROPPED physical name would silently resurrect the old data still
     // sitting in carried files — refuse (re-add under a new name)
     if (staged.dropped.nonEmpty) {
-      val ghost = staged.schema.map(_.split(" ", 2)(0))
-        .find(staged.dropped.contains)
+      val ghost = staged.schema.map(_.name).find(staged.dropped.contains)
       if (ghost.nonEmpty)
         return Some(s"schema evolution rejected: column '${ghost.get}' " +
           "was DROPPED — carried files still hold its data, so re-adding " +
@@ -1582,13 +1576,14 @@ object LakeTable {
       else Seq.empty
     if (live.isEmpty) None
     else {
-      val stagedByName = staged.schema
-        .map(_.split(" ", 2)).map(a => a(0) -> a(1)).toMap
-      live.iterator.map(_.split(" ", 2)).flatMap { a =>
-        stagedByName.get(a(0)) match {
-          case None => Some(s"drops column '${a(0)}'")
-          case Some(t) if t != a(1) =>
-            Some(s"changes column '${a(0)}' from ${a(1)} to $t")
+      // recorded SQL type strings compare, not DataTypes (which would
+      // also compare nested nullability)
+      val stagedByName = staged.schema.map(c => c.name -> c.sqlType).toMap
+      live.iterator.flatMap { c =>
+        stagedByName.get(c.name) match {
+          case None => Some(s"drops column '${c.name}'")
+          case Some(t) if t != c.sqlType =>
+            Some(s"changes column '${c.name}' from ${c.sqlType} to $t")
           case _ => None
         }
       }.take(1).toSeq.headOption
@@ -1613,20 +1608,13 @@ object LakeTable {
     evolutionError(staged) match {
       case Some(reason) => Left(s"audit failed for v${staged.version}: $reason")
       case None =>
-        // a zero-file staged version with a recorded schema audits as
-        // the empty frame it will read back as (r15, behavior 34 —
-        // full-truncate publishes)
-        val raw =
-          if (staged.files.isEmpty && staged.schema.nonEmpty)
-            spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              structOf(staged.schema))
-          else
-            // carried members' sizes come from the base manifest, fresh
-            // ones cost one stat each (r15 knownFrame — the audit frame
-            // over a wide carry list no longer pays per-path globs)
-            knownFrame(spark, staged.dir, staged.files, staged.schema,
-                       bytesOf(staged.dir, staged.baseVersion))
+        // carried members' sizes come from the base manifest, fresh
+        // ones cost one stat each (r15 knownFrame — the audit frame over
+        // a wide carry list no longer pays per-path globs); a zero-file
+        // staged version audits as the empty frame it will read back as
+        // (r15, behavior 34 — full-truncate publishes)
+        val raw = knownFrame(spark, staged.dir, staged.files, staged.schema,
+                             bytesOf(staged.dir, staged.baseVersion))
         // the check sees LOGICAL names — user-declared constraints and
         // key-based audit callbacks are written against them (r13)
         val df = toLogical(applyDv(spark, staged.dir, raw, staged.dv),
@@ -1947,11 +1935,8 @@ object LakeTable {
       case "parquet" => spark.read.parquet(paths: _*)
       case "orc" => spark.read.orc(paths: _*)
       case other =>
-        val s0 =
-          if (logical.nonEmpty)
-            Some(structOf(logical))
-          else declaredSchema
-        val s = s0.getOrElse(
+        val s = (if (logical.nonEmpty) Some(structOf(logical))
+                 else declaredSchema).getOrElse(
           return Left(s"COPY INTO FILEFORMAT=$other needs the target's " +
             "schema — create the table (or load parquet/orc) first"))
         if (other == "csv")
@@ -1968,7 +1953,7 @@ object LakeTable {
     // changes on shared columns are refused either way (the evolution
     // audit would reject them at publish — this just says why sooner).
     if (logical.nonEmpty && Set("parquet", "orc").contains(fmt)) {
-      val table = logical.map(_.split(" ", 2)).map(a => a(0) -> a(1)).toMap
+      val table = logical.map(c => c.name -> c.sqlType).toMap
       val extra = df.schema.fields.filterNot(f => table.contains(f.name))
       if (extra.nonEmpty && !mergeSchema)
         return Left("COPY INTO schema mismatch: source files carry " +
@@ -2056,8 +2041,7 @@ object LakeTable {
     val structType = footerSparkSchema(dir, relFiles.head).getOrElse(
       spark.read.parquet(
         relFiles.map(f => Paths.get(dir, f).toString): _*).schema)
-    val schema = structType.fields.toSeq
-      .map(f => s"${f.name} ${f.dataType.sql}")
+    val schema = columnsOf(structType)
     val (entries, rowCounts) =
       statsAndRows(spark, dir, structType, relFiles, statsBy)
     // emptiness by footer row total (r14) — no probe job
@@ -2121,7 +2105,7 @@ object LakeTable {
       check: DataFrame => Option[String]): Either[String, Long] =
     partialRewrite(spark, dir, changes.filter(col("op") =!= "D").drop("op"),
                    Some(changes.filter(col("op") === "D")
-                     .select(keys.map(col): _*)),
+                     .select(keys.map(byName): _*)),
                    changes.drop("op"),
                    keys, layoutCol, batch, Seq.empty, sink, "cdc")(check) match {
       case Left(r) if r.contains("lists no files") =>
@@ -2152,7 +2136,7 @@ object LakeTable {
       check: DataFrame => Option[String]): Either[String, Option[Long]] =
     partialRewrite(spark, dir, changes.filter(col("op") =!= "D").drop("op"),
                    Some(changes.filter(col("op") === "D")
-                     .select(keys.map(col): _*)),
+                     .select(keys.map(byName): _*)),
                    changes.drop("op"),
                    keys, layoutCol, Some(batch), Seq.empty, sink, "cdc",
                    emptyNoOp = true)(check) match {
@@ -2364,8 +2348,7 @@ object LakeTable {
       else {
         val snap = readManifest(dir, base).get
         val (files, recorded, prevDv) = (snap.files, snap.schema, snap.dv)
-        val colNames = logicalSchema(recorded, snap.renames)
-          .map(_.split(" ", 2)(0))
+        val colNames = logicalSchema(recorded, snap.renames).map(_.name)
         set.foreach { case (c, _) =>
           require(colNames.isEmpty || colNames.contains(c),
             s"UPDATE assigns a column not in the table: '$c'")
@@ -2391,9 +2374,7 @@ object LakeTable {
             writeDvSidecars(spark, dir, freshPos, files.length)
           val st = snap.copy(version = base + 1L,
             files = files ++ fresh.files,
-            schema =
-              if (recorded.isEmpty) fresh.schema
-              else mergeSchemas(recorded, fresh.schema),
+            schema = mergeSchemas(recorded, fresh.schema),
             stats = snap.stats ++ fresh.stats,
             baseVersion = base, op = "dvupdate",
             dv = prevDv ++ sidecars,
@@ -2471,9 +2452,7 @@ object LakeTable {
           else writeDvSidecars(spark, dir, freshPos, files.length)
         val st = snap.copy(version = base + 1L,
           files = files ++ freshStage.files,
-          schema =
-            if (recorded.isEmpty) freshStage.schema
-            else mergeSchemas(recorded, freshStage.schema),
+          schema = mergeSchemas(recorded, freshStage.schema),
           stats = snap.stats ++ freshStage.stats,
           baseVersion = base, op = "replacewhere",
           dv = prevDv ++ sidecars,
@@ -2516,7 +2495,7 @@ object LakeTable {
       else {
         val snap = readManifest(dir, base).get
         val (files, prevDv) = (snap.files, snap.dv)
-        val srcKeys = source.select(keys.map(col): _*).distinct()
+        val srcKeys = source.select(keys.map(byName): _*).distinct()
         // LIVE tagged frame (r13): key semi-join over LOGICAL names,
         // positions captured pre-projection, prior DVs excluded
         val (liveT, fCol, pCol) = liveTagged(spark, dir, snap)
@@ -2598,16 +2577,16 @@ object LakeTable {
     require(keys.nonEmpty, "mergeDv requires at least one key column")
     Files.createDirectories(Paths.get(dir))
     commitSerialized(dir) { base =>
-      val srcKeys = source.select(keys.map(col): _*).distinct()
+      val srcKeys = source.select(keys.map(byName): _*).distinct()
       // one pass establishes BOTH the source size and key uniqueness
       // (max per-key multiplicity), instead of count + distinct-count —
       // and doubles as the sink's empty-epoch check, no pre-pass.
       // Uniqueness applies to MATCHABLE keys only (every component
       // non-null): SQL equality makes a null-keyed row match nothing,
       // so duplicates among them are legal plain inserts (r13)
-      val matchable = keys.map(col(_).isNotNull)
+      val matchable = keys.map(byName(_).isNotNull)
         .reduce(_ && _)
-      val kstats = source.groupBy(keys.map(col): _*)
+      val kstats = source.groupBy(keys.map(byName): _*)
         .agg(org.apache.spark.sql.functions.count(lit(1)).as("count"),
              org.apache.spark.sql.functions.max(matchable).as("m"))
         .agg(org.apache.spark.sql.functions.sum("count")
@@ -2658,9 +2637,7 @@ object LakeTable {
           else {
           val st0 = snap.copy(version = base + 1L,
             files = files ++ fresh.files,
-            schema =
-              if (recorded.isEmpty) fresh.schema
-              else mergeSchemas(recorded, fresh.schema),
+            schema = mergeSchemas(recorded, fresh.schema),
             stats = snap.stats ++ fresh.stats,
             baseVersion = base, op = "dvmerge",
             dv = prevDv ++ sidecars,
@@ -2687,7 +2664,7 @@ object LakeTable {
               else {
                 // no source key may survive twice (old row not hidden)
                 val dup = df.join(srcKeys, keys, "left_semi")
-                  .groupBy(keys.map(col): _*).count()
+                  .groupBy(keys.map(byName): _*).count()
                   .filter(col("count") > 1L).count()
                 if (dup > 0L)
                   Some(s"$dup source key(s) appear more than once after " +
@@ -2754,16 +2731,16 @@ object LakeTable {
     translateDvNoop(commitSerialized(dir) { base =>
       if (base == 0L) Left(s"no published version to merge into in $dir")
       else {
-        val srcKeys = source.select(keys.map(col): _*).distinct()
+        val srcKeys = source.select(keys.map(byName): _*).distinct()
         if (matched.nonEmpty || bySource.nonEmpty) {
           // a target row matching >1 source rows makes the update
           // ambiguous (the Delta/SQL-standard cardinality violation) —
           // but only MATCHABLE keys count: a null-keyed source row
           // matches nothing under SQL equality, so duplicates among
           // them are legal inserts (r13)
-          val matchable = keys.map(col(_).isNotNull).reduce(_ && _)
+          val matchable = keys.map(byName(_).isNotNull).reduce(_ && _)
           val mx = source.filter(matchable)
-            .groupBy(keys.map(col): _*).count()
+            .groupBy(keys.map(byName): _*).count()
             .agg(org.apache.spark.sql.functions.max("count")).head
           require(mx.isNullAt(0) || mx.getLong(0) <= 1L,
             "MERGE source must carry each key at most once")
@@ -2843,7 +2820,7 @@ object LakeTable {
                    c => col(s"t.`$c`")).toSeq
         // ---- not-matched side: source keys absent from the live table ----
         val insBase = source.join(
-          livePos.select(keys.map(col): _*).distinct(), keys, "left_anti")
+          livePos.select(keys.map(byName): _*).distinct(), keys, "left_anti")
           .alias("s")
         val iConds = notMatched.map(_._1)
         val inserts =
@@ -2907,9 +2884,8 @@ object LakeTable {
               val sidecars = if (hiddenCount == 0L) Seq.empty else sidecars0
               val st = snap.copy(version = base + 1L,
                 files = files ++ keepFresh.map(_.files).getOrElse(Seq.empty),
-                schema = keepFresh.map(f =>
-                  if (recorded.isEmpty) f.schema
-                  else mergeSchemas(recorded, f.schema)).getOrElse(recorded),
+                schema = mergeSchemas(recorded,
+                  keepFresh.map(_.schema).getOrElse(Seq.empty)),
                 stats = snap.stats ++
                   keepFresh.map(_.stats).getOrElse(Seq.empty),
                 baseVersion = base, op = "dvmerge",
@@ -2980,7 +2956,7 @@ object LakeTable {
     // touched-value collect alone went 0.2 → 0.5 s/query and the whole
     // query net-regressed ~0.3 s. Each phase re-plans pruned instead.
     val touchedRows = graft.ops.Prof("lake.pr.touchedCollect") {
-      touching.select(layoutCols.map(col): _*).distinct()
+      touching.select(layoutCols.map(byName): _*).distinct()
         .limit(maxTouchedLayoutValues + 1).collect()
     }
     require(touchedRows.length <= maxTouchedLayoutValues,
@@ -3003,7 +2979,7 @@ object LakeTable {
     val touched: Set[Seq[String]] = touchedRows
       .map(r => layoutCols.indices.map(i => String.valueOf(r.get(i))).toSeq)
       .toSet
-    val changeKeys = touching.select(keys.map(col): _*).distinct()
+    val changeKeys = touching.select(keys.map(byName): _*).distinct()
     // incremental re-plan cache: per layout value TUPLE, the live input
     // files the staged output was computed from, and that staged output
     val FLAT = Seq("\u0000flat")
@@ -3051,7 +3027,7 @@ object LakeTable {
           if (hasFlat || stale == values) upserts
           else upserts.filter(stale.toSeq.map(t =>
             layoutCols.zip(t).map { case (c, v) =>
-              col(c).cast("string") === lit(v)
+              byName(c).cast("string") === lit(v)
             }.reduce(_ && _)).reduce(_ || _))
         val baseRows =
           if (staleFiles.isEmpty) ups.limit(0)
@@ -3174,12 +3150,7 @@ object LakeTable {
       else {
         // the REWRITE SET read through the base's vectors in LOGICAL
         // names — carried files are never opened
-        val raw =
-          if (recorded.isEmpty) spark.read.parquet(
-            rewrite.map(f => Paths.get(dir, f).toString): _*)
-          else spark.read
-            .schema(structOf(recorded))
-            .parquet(rewrite.map(f => Paths.get(dir, f).toString): _*)
+        val raw = knownFrame(spark, dir, rewrite, recorded, base0.bytes)
         val snap = toLogical(applyDv(spark, dir, raw, prevDv),
                              base0.renames)
         // live cardinality of the rewrite set by manifest arithmetic
@@ -3195,9 +3166,9 @@ object LakeTable {
           // layout column(s) makes partitionBy write ONE file per
           // layout value tuple, so later partial merges keep their
           // prune metadata
-          case cs if cs.nonEmpty => snap.repartition(cs.map(col): _*)
+          case cs if cs.nonEmpty => snap.repartition(cs.map(byName): _*)
           case _ if clusterBy.isEmpty => snap.coalesce(bins)
-          case _ => snap.repartitionByRange(bins, clusterBy.map(col): _*)
+          case _ => snap.repartitionByRange(bins, clusterBy.map(byName): _*)
         }
         val fresh = stageFresh(spark, dir, laid, layoutBy, statsBy,
                                rebalance = false) // laid out above
@@ -3248,7 +3219,7 @@ object LakeTable {
           // pre-drop version deliberately brings the column (and its
           // data) back, so its tombstone lifts; all other tombstones stay
           // (reuse is still unsafe for them)
-          val back = old.schema.map(_.split(" ", 2)(0)).toSet
+          val back = old.schema.map(_.name).toSet
           Right(old.copy(version = base + 1L, batches = batchesOf(dir, base),
             baseVersion = base, op = "restore",
             dropped = (old.dropped ++ droppedOf(dir, base))
@@ -3336,12 +3307,12 @@ object LakeTable {
           // alike: a renamed-away physical would alias two logicals onto
           // one file column; a dropped physical would resurrect the old
           // data still in carried files (r13)
-          val names = recorded.map(_.split(" ", 2)(0)).toSet ++
+          val names = recorded.map(_.name).toSet ++
             snap.renames.values ++ snap.dropped
           cols.find(c => names.contains(c._1)) match {
             case Some((n, _)) => Left(s"column '$n' already exists in $dir")
             case None =>
-              val extended = recorded ++ cols.map { case (n, t) => s"$n $t" }
+              val extended = recorded ++ cols.map((Column.apply _).tupled)
               // the extended DDL must parse — refuse garbage types at
               // commit time, not at first read
               try structOf(extended)
@@ -3395,20 +3366,19 @@ object LakeTable {
           Left(s"cannot ALTER a schema-less (legacy) table in $dir")
         else {
           val phys = physicalNameOf(snap.renames, name)
-          recorded.map(_.split(" ", 2)).find(_(0) == phys) match {
+          recorded.find(_.name == phys) match {
             case None =>
               Left(s"ALTER COLUMN TYPE: no column '$name' in $dir")
-            case Some(a) if !widens(a(1), newType) =>
-              Left(s"ALTER COLUMN TYPE: '$name' ${a(1)} → $newType is " +
+            case Some(c) if !widens(c.sqlType, newType) =>
+              Left(s"ALTER COLUMN TYPE: '$name' ${c.sqlType} → $newType is " +
                    "not a lossless widening (allowed: " +
                    "TINYINT<SMALLINT<INT<BIGINT, FLOAT<DOUBLE) — " +
                    "carried files keep their physical encoding, so a " +
                    "narrowing could not represent their values")
             case Some(_) =>
-              val widened = recorded.map { e =>
-                val a = e.split(" ", 2)
-                if (a(0) == phys) s"$phys ${newType.trim.toUpperCase}"
-                else e
+              val widened = recorded.map { c =>
+                if (c.name == phys) c.copy(sqlType = newType.trim.toUpperCase)
+                else c
               }
               Right(snap.copy(version = base + 1L, schema = widened,
                 baseVersion = base, op = "alter"))
@@ -3439,7 +3409,7 @@ object LakeTable {
         if (recorded.isEmpty)
           Left(s"cannot ALTER a schema-less (legacy) table in $dir")
         else {
-          val physNames = recorded.map(_.split(" ", 2)(0))
+          val physNames = recorded.map(_.name)
           val logicalNames = physNames.map(n => renames.getOrElse(n, n))
           if (!logicalNames.contains(name))
             Left(s"DROP COLUMN: no column '$name' in $dir")
@@ -3448,7 +3418,7 @@ object LakeTable {
           else {
             val phys = physicalNameOf(renames, name)
             Right(snap.copy(version = base + 1L,
-              schema = recorded.filterNot(_.split(" ", 2)(0) == phys),
+              schema = recorded.filterNot(_.name == phys),
               // defensive split (r14, ADVICE r13): statsOf tolerates
               // malformed entries with a None case — this filter must
               // skip them too, not crash the ALTER on a missing '|'
@@ -3485,7 +3455,7 @@ object LakeTable {
         if (recorded.isEmpty)
           Left(s"cannot ALTER a schema-less (legacy) table in $dir")
         else {
-          val physNames = recorded.map(_.split(" ", 2)(0))
+          val physNames = recorded.map(_.name)
           val logicalNames = physNames.map(n => renames.getOrElse(n, n))
           if (!logicalNames.contains(from))
             Left(s"RENAME COLUMN: no column '$from' in $dir")
@@ -3527,12 +3497,18 @@ object LakeTable {
     * layout, not rows, and the `op` field recorded at commit time says so
     * (the same trick as Delta's CDF skipping `dataChange=false` actions).
     * Each side reads under its OWN version's recorded schema (evolved
-    * columns null-fill via unionByName). Requires the versions involved
-    * to still be retained (not vacuumed). At 100 TB each version's diff
-    * is manifest arithmetic; only the diffed files' rows are read, which
-    * for partial merges is exactly the touched layout values. */
+    * columns null-fill via unionByName) and its own column names, unless
+    * `names` gives one physical → logical map for every version (a
+    * fixed-schema reader passes the live version's). Requires the
+    * versions involved to still be retained (not vacuumed). At 100 TB
+    * each version's diff is manifest arithmetic; only the diffed files'
+    * rows are read, which for partial merges is exactly the touched
+    * layout values. */
   def changesBetween(spark: SparkSession, dir: String,
-                     fromVersion: Long, toVersion: Long): DataFrame = {
+                     fromVersion: Long, toVersion: Long,
+                     names: Option[Map[String, String]] = None): DataFrame = {
+    def namesAt(v: Long): Map[String, String] =
+      names.getOrElse(if (v == 0L) Map.empty else renamesOf(dir, v))
     val vs = versions(dir)
     require(vs.contains(toVersion) || toVersion == fromVersion,
       s"version $toVersion not published (or vacuumed) in $dir")
@@ -3582,7 +3558,7 @@ object LakeTable {
               .withColumn("_dv_file", relFileCol)
               .withColumn("_dv_pos", col("_metadata.row_index"))
               .join(broadcast(dvDf), Seq("_dv_file", "_dv_pos"), "left_semi")
-              .select(cols.map(byName): _*), renamesOf(dir, v)), "delete"))
+              .select(cols.map(byName): _*), namesAt(v)), "delete"))
           }
         val before = if (prev == 0L) Seq.empty else filesOf(dir, prev)
         val after = filesOf(dir, v)
@@ -3597,8 +3573,7 @@ object LakeTable {
           else Some(stamp(toLogical(
             applyDv(spark, dir, rawRead(files, schemaV),
                     if (schemaV == 0L) Seq.empty else dvOf(dir, schemaV)),
-            if (schemaV == 0L) Map.empty
-            else renamesOf(dir, schemaV)), kind))
+            namesAt(schemaV)), kind))
         dvRetract ++
           side(removed, prev, "delete").toSeq ++
           side(added, v, "insert").toSeq

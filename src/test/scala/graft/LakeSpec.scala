@@ -83,7 +83,7 @@ class LakeSpec extends SparkTestBase {
     assert(LakeTable.optimize(spark, dir, Long.MaxValue, Seq.empty,
       layoutBy = Some("band")) == Right(6L))
     assert(state() == expect, "optimize conserves the renamed state")
-    assert(LakeTable.currentLogicalSchema(dir).exists(_.startsWith("amount ")),
+    assert(LakeTable.currentLogicalSchema(dir).exists(_.name == "amount"),
       "the display map survives compaction")
     // stats pruning answers under the LOGICAL name after optimize
     assert(LakeTable.filesWhere(dir, "k", 1L, 1L).nonEmpty)
@@ -984,7 +984,7 @@ class LakeSpec extends SparkTestBase {
       .withColumn("flagged", col("n_orders") > lit(5L))
     widened.write.format("graft-lake").option("path", dir)
       .mode("append").save()
-    assert(LakeTable.currentSchema(dir).map(_.split(" ")(0))
+    assert(LakeTable.currentSchema(dir).map(_.name)
              == Seq("custkey", "n_orders", "flagged"),
       s"union schema, base order first: ${LakeTable.currentSchema(dir)}")
     val rows = LakeTable.read(spark, dir).collect()
@@ -1836,8 +1836,11 @@ class LakeSpec extends SparkTestBase {
     import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
     // src/test/resources/lake-golden/<table>/: the log files plus
     // expected.json — what filesOf/rowsOf/dvOf/bytesOf/statsOf/opOf/
-    // renamesOf/appliedBatch returned for each version when written
+    // renamesOf/appliedBatch returned for each version when written —
+    // and schemas.json, what schemaOf/logicalSchemaOf returned
     val root = Paths.get(getClass.getResource("/lake-golden").toURI)
+    val schemas = new ObjectMapper().readTree(
+      root.resolve("schemas.json").toFile)
     def strs(n: JsonNode): Seq[String] = n.elements.asScala.map(_.asText).toSeq
     def longs(n: JsonNode): Map[String, Long] =
       n.fields.asScala.map(e => e.getKey -> e.getValue.asLong).toMap
@@ -1848,9 +1851,15 @@ class LakeSpec extends SparkTestBase {
       val expected = new ObjectMapper().readTree(fx.resolve("expected.json")
         .toFile).elements.asScala.toSeq
       val dir = Files.createTempDirectory(s"graft_lake_golden_$name").toString
+      val schemaAt = schemas.get(name).elements.asScala
+        .map(s => s.get("version").asLong -> s).toMap
       def check(e: JsonNode, live: Boolean): Unit = {
         val v = e.get("version").asLong
         val at = s"$name v$v"
+        assert(LakeTable.schemaOf(dir, v).map(_.entry)
+          == strs(schemaAt(v).get("schema")), at)
+        assert(LakeTable.logicalSchemaOf(dir, v).map(_.entry)
+          == strs(schemaAt(v).get("logicalSchema")), at)
         assert(LakeTable.filesOf(dir, v) == strs(e.get("files")), at)
         assert(LakeTable.rowsOf(dir, v) == longs(e.get("rows")), at)
         assert(LakeTable.dvOf(dir, v) == strs(e.get("dv")), at)
@@ -1881,6 +1890,83 @@ class LakeSpec extends SparkTestBase {
       LakeTable.clearResolveCache()
       expected.reverse.foreach(check(_, live = false))
     }
+  }
+
+  test("column names with a space: RENAME, ADD COLUMNS, an append and a " +
+       "DROP keep the table readable by batch, change-feed and catalog") {
+    import spark.implicits._
+    import graft.sources.LakeManifest.Column
+    val wh = Files.createTempDirectory("graft_lake_space_").toString
+    val dir = Paths.get(wh, "ns", "t").toString
+    val cat = "graft_space_cat"
+    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.LakeCatalog")
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+    assert(LakeTable.commit(spark, dir,
+      Seq((1L, 10L), (2L, 20L)).toDF("k", "v"))(_ => None) == Right(1L))
+    assert(LakeTable.renameColumn(dir, "v", "a b") == Right(2L))
+    LakeTable.clearResolveCache()
+    def rows(df: DataFrame): Seq[Seq[Any]] =
+      df.orderBy("k").collect().map(_.toSeq).toSeq
+    val batch = spark.read.format("graft-lake").load(dir)
+    assert(batch.columns.toSeq == Seq("k", "a b"))
+    assert(rows(batch) == Seq(Seq(1L, 10L), Seq(2L, 20L)))
+    val feed = spark.read.format("graft-lake")
+      .option("readChangeFeed", "true").load(dir)
+      .select("k", "a b", "_change_type")
+    assert(rows(feed) == Seq(Seq(1L, 10L, "insert"), Seq(2L, 20L, "insert")))
+    assert(rows(spark.sql(s"SELECT k, `a b` FROM $cat.ns.t"))
+      == Seq(Seq(1L, 10L), Seq(2L, 20L)))
+
+    assert(LakeTable.addColumns(dir, Seq("c d" -> "STRING")) == Right(3L))
+    assert(LakeTable.append(spark, dir,
+      Seq((3L, 30L, "x", 7L)).toDF("k", "a b", "c d", "e f"))(_ => None)
+      == Right(4L))
+    LakeTable.clearResolveCache()
+    assert(LakeTable.currentSchema(dir) == Seq(Column("k", "BIGINT"),
+      Column("v", "BIGINT"), Column("c d", "STRING"),
+      Column("e f", "BIGINT")))
+    val all = Seq(Seq(1L, 10L, null, null), Seq(2L, 20L, null, null),
+                  Seq(3L, 30L, "x", 7L))
+    assert(rows(spark.read.format("graft-lake").load(dir)) == all)
+    assert(rows(spark.sql(s"SELECT * FROM $cat.ns.t")) == all)
+
+    assert(LakeTable.dropColumn(dir, "a b") == Right(5L))
+    LakeTable.clearResolveCache()
+    val dropped = spark.read.format("graft-lake").load(dir)
+    assert(dropped.columns.toSeq == Seq("k", "c d", "e f"))
+    assert(rows(dropped) == all.map(r => r.head +: r.drop(2)))
+    assert(rows(spark.read.format("graft-lake")
+      .option("readChangeFeed", "true").load(dir)
+      .filter(col("_commit_version") === 4L).select("k", "c d", "e f"))
+      == Seq(Seq(3L, "x", 7L)))
+  }
+
+  test("merge keys and a layout column with dots in their names: " +
+       "mergePartial, mergeDv and a cdc sink epoch keyed on k.x") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_lake_dotkeys_").toString
+    def frame(rs: (Long, Long, Long)*): DataFrame =
+      rs.toDF("k.x", "b.y", "v")
+    def state(): Map[Long, Long] = LakeTable.read(spark, dir).collect()
+      .map(r => r.getLong(0) -> r.getLong(2)).toMap
+    assert(LakeTable.commit(spark, dir,
+      frame((1L, 0L, 10L), (2L, 1L, 20L), (3L, 0L, 30L)),
+      layoutBy = Some("b.y"))(_ => None) == Right(1L))
+    assert(LakeTable.mergePartial(spark, dir,
+      frame((1L, 0L, 11L), (4L, 1L, 40L)), Seq("k.x"), "b.y")(_ => None)
+      == Right(2L))
+    assert(state() == Map(1L -> 11L, 2L -> 20L, 3L -> 30L, 4L -> 40L))
+    assert(LakeTable.mergeDv(spark, dir,
+      frame((2L, 1L, 21L), (5L, 0L, 50L)), Seq("k.x"),
+      layoutBy = Some("b.y"))(_ => None) == Right(3L))
+    assert(state() ==
+      Map(1L -> 11L, 2L -> 21L, 3L -> 30L, 4L -> 40L, 5L -> 50L))
+    val sink = new graft.sources.LakeStreamSink(dir, "cdc", Some("b.y"),
+      Seq.empty, Seq("k.x"), "dots")
+    sink.addBatch(0L, Seq((3L, 0L, 0L, "D"), (4L, 1L, 41L, "U"))
+      .toDF("k.x", "b.y", "v", "op"))
+    assert(LakeTable.currentVersion(dir).contains(4L))
+    assert(state() == Map(1L -> 11L, 2L -> 21L, 4L -> 41L, 5L -> 50L))
   }
 
   private def readKeys2(dir: String): Set[Long] =

@@ -451,15 +451,27 @@ class PropertySpec extends SparkTestBase {
       "\"", "\\", "{", "}", "[", "]", "|", ".parquet", ":", ",", "`",
       "é", "中", "a", "7")).map(_.mkString))
 
+  /** Column names as well: the hostile strings, plus names with spaces
+    * and with leading or doubled backticks — the spellings a recorded
+    * `name TYPE` entry has to quote. */
+  private val hostileName: Gen[String] = Gen.oneOf(hostile,
+    Gen.zip(hostile, hostile).map { case (a, b) => s"$a $b" },
+    hostile.map("`" + _),
+    Gen.zip(hostile, hostile).map { case (a, b) => s"`$a `` $b " })
+
   test("lake manifest codec: decode∘encode is the identity and a rendered " +
        "delta folds over its base to the staged state, on hostile strings") {
     import graft.sources.LakeManifest
     import graft.sources.LakeTable.Staged
     val strs = Gen.choose(0, 5).flatMap(Gen.listOfN(_, hostile))
+    val cols = Gen.choose(0, 5).flatMap(Gen.listOfN(_, Gen.zip(hostileName,
+      Gen.oneOf("BIGINT", "STRING", "DECIMAL(10,2)", "ARRAY<STRING>",
+        "STRUCT<`a b`: INT, c: DOUBLE>", "MAP<STRING, BIGINT>"))
+      .map { case (n, t) => LakeManifest.Column(n, t) }))
     val counts = Gen.choose(0, 4).flatMap(Gen.mapOfN(_,
       Gen.zip(hostile, Gen.choose(0L, 1L << 40))))
     val genStaged = for {
-      files <- strs; stats <- strs; dv <- strs; schema <- strs
+      files <- strs; stats <- strs; dv <- strs; schema <- cols
       dropped <- strs; batches <- counts; rows <- counts; hidden <- counts
       bytes <- counts; op <- hostile; base <- Gen.choose(0L, 99L)
       renames <- Gen.choose(0, 3).flatMap(Gen.mapOfN(_,
@@ -501,7 +513,9 @@ class PropertySpec extends SparkTestBase {
        "resolve cold and read back") {
     import spark.implicits._
     import graft.sources.LakeTable
-    samples(Gen.zip(hostile, hostile), 4).foreach { case (name, sink) =>
+    (samples(Gen.zip(hostile, hostile), 4) ++
+     samples(Gen.zip(hostileName, hostile), 8).filter(_._1.contains(' '))
+       .take(2)).foreach { case (name, sink) =>
       val dir = java.nio.file.Files.createTempDirectory("graft_prop_lake_")
         .toString
       assert(LakeTable.commit(spark, dir,

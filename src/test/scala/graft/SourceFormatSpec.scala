@@ -1265,7 +1265,7 @@ class SourceFormatSpec extends SparkTestBase {
                     5L -> 50L, 6L -> 60L, 7L -> 70L, 9L -> 90L,
                     10L -> 100L), s"post-rename DML state wrong: $m")
     // every data file still physically carries the ORIGINAL name
-    assert(LakeTable.currentSchema(dir).exists(_.startsWith("v ")),
+    assert(LakeTable.currentSchema(dir).exists(_.name == "v"),
       "the manifest's physical schema keeps the original column name")
 
     // the change feed surfaces the logical name for post-rename versions
@@ -1561,7 +1561,7 @@ class SourceFormatSpec extends SparkTestBase {
     // files are all still listed (the merge added sidecars + fresh
     // files, rewrote nothing)
     assert(LakeTable.currentLogicalSchema(dir)
-      .exists(_.startsWith("tag ")), "the recorded schema evolved")
+      .exists(_.name == "tag"), "the recorded schema evolved")
 
     // type widening through evolution: a BIGINT source column against
     // an INT target column widens the target in the same statement

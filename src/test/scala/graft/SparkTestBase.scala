@@ -6,14 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** One shared local session per suite; UTC + small shuffle partitions to
   * match the driver harness. */
 trait SparkTestBase extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .withExtensions(new GraftExtensions) // native fns + SQL UPDATE rule
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 
   val sf = "/root/testdata/sf0.001"
 
