@@ -907,7 +907,7 @@ private[graft] class LakeV2ScanShim(ctx: SQLContext, dir: String,
       .map(v => LakeTable.readVersion(ctx.sparkSession, dir, v))
       .getOrElse(LakeTable.read(ctx.sparkSession, dir))
     val filtered = pushed.foldLeft(df)(_.filter(_))
-    filtered.select(schema.fieldNames.toIndexedSeq.map(col): _*)
+    filtered.select(schema.fieldNames.toIndexedSeq.map(LakeTable.byName): _*)
   }
 
   override def buildScan(): org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] =

@@ -147,10 +147,10 @@ private[sources] case class LakeFeedPartition(
 
 /** `spark.readStream.table("<cat>.ns.t.changes")` — the DSv2 change-feed
   * micro-batch stream (r13, behavior 49). Offsets are commit versions
-  * (the manifest history is the replayable log, identical to the V1
-  * source and the rows-mode V2 stream), so exactly-once across restarts
-  * is version-window replay. Each micro-batch mirrors
-  * [[LakeTable.changesBetween]]'s arithmetic per version step, but as
+  * from [[LakeVersionCursor]], the core the V1 source and the rows-mode
+  * V2 stream share, so exactly-once across restarts is version-window
+  * replay. Each micro-batch mirrors [[LakeTable.changesBetween]]'s
+  * arithmetic per [[LakeVersionCursor.Step]], but as
   * EXECUTOR work: optimize versions emit nothing; positions newly
   * vectored at v retract; removed files retract (read through the
   * PREVIOUS version's vectors); added files insert (read through v's
@@ -165,154 +165,48 @@ private[sources] class LakeFeedMicroBatchStream(dir: String,
     maxVersionsPerTrigger: Option[Int] = None,
     maxFilesPerTrigger: Option[Int] = None,
     maxBytesPerTrigger: Option[Long] = None)
-    extends MicroBatchStream
-    with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
-  import org.apache.spark.sql.connector.read.streaming.ReadLimit
-
-  private def ver(o: Offset): Long = o match {
-    case LakeOffset(v) => v
-    case other => other.json().trim.toLong
-  }
-
-  private var knownMax: Long = -1L
-
-  /** `Trigger.AvailableNow` drain target (r15) — pinned once at trigger
-    * start; see [[LakeMicroBatchStream.prepareForTriggerAvailableNow]]. */
-  private var availableNowCap: Long = -1L
-
-  override def prepareForTriggerAvailableNow(): Unit = {
-    val floor = math.max(knownMax, startingVersion)
-    availableNowCap = discover(floor).lastOption.getOrElse(floor)
-  }
-
-  private def capPin(vs: Seq[Long]): Seq[Long] =
-    if (availableNowCap < 0L) vs else vs.filter(_ <= availableNowCap)
-
-  override def initialOffset(): Offset = LakeOffset(startingVersion)
-
-  override def deserializeOffset(json: String): Offset =
-    LakeOffset(json.trim.toLong)
-
-  /** O(pending) discovery — same dense-claim walk + unprimed listing
-    * fallback as [[LakeMicroBatchStream.latestOffset]]. */
-  private def discover(floor0: Long): Seq[Long] = {
-    val floor = math.max(floor0, startingVersion)
-    val walked = LakeTable.versionsAbove(dir, floor)
-    if (walked.nonEmpty || knownMax >= 0L) walked
-    else LakeTable.versions(dir).filter(_ > floor)
-  }
-
-  override def latestOffset(): Offset = {
-    val floor = math.max(knownMax, startingVersion)
-    val off = capPin(discover(floor)).lastOption.getOrElse(floor)
-    knownMax = math.max(knownMax, off)
-    LakeOffset(off)
-  }
-
-  /** Rate limiting (r13): `maxVersionsPerTrigger` caps each feed batch
-    * to the next N commit versions (V1-source parity through the
-    * admission-control seam — `start` is the committed floor, restarts
-    * included). */
-  override def getDefaultReadLimit: ReadLimit = {
-    val limits = Seq(
-      maxVersionsPerTrigger.orElse(maxFilesPerTrigger)
-        .map(n => ReadLimit.maxFiles(n)),
-      maxBytesPerTrigger.map(b => ReadLimit.maxBytes(b))).flatten
-    limits match {
-      case Seq() => ReadLimit.allAvailable()
-      case Seq(one) => one
-      case many => ReadLimit.compositeLimit(many.toArray)
-    }
-  }
-
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val floor = math.max(ver(start), startingVersion)
-    val pending = capPin(discover(floor))
-    val byVersions = maxVersionsPerTrigger match {
-      case Some(n) if pending.nonEmpty => pending.take(n)
-      case _ => pending
-    }
-    // maxFilesPerTrigger (r14): admit by the ADDED-file budget — the
-    // dominant cost of a feed batch; removal/DV partitions ride along
-    // with their version (same budget rule as the rows-mode stream)
-    val byFiles = maxFilesPerTrigger match {
-      case Some(nf) if byVersions.nonEmpty =>
-        LakeMicroBatchStream.admitByFiles(dir, floor, byVersions, nf)
-      case _ => byVersions
-    }
-    // maxBytesPerTrigger (r15): cumulative ADDED-byte budget from the
-    // manifest's recorded sizes — strictest cap wins
-    val admitted = maxBytesPerTrigger match {
-      case Some(nb) if byFiles.nonEmpty =>
-        LakeMicroBatchStream.admitByBytes(dir, floor, byFiles, nb)
-      case _ => byFiles
-    }
-    val off = admitted.lastOption.getOrElse(floor)
-    knownMax = math.max(knownMax, off)
-    LakeOffset(off)
-  }
+    extends LakeVersionCursor(dir, startingVersion, maxVersionsPerTrigger,
+                              maxFilesPerTrigger, maxBytesPerTrigger)
+    with MicroBatchStream {
 
   override def planInputPartitions(start: Offset,
                                    end: Offset): Array[InputPartition] = {
-    val from = ver(start)
-    val to = ver(end)
+    val from = versionOf(start)
+    val to = versionOf(end)
     if (to <= from) return Array.empty
-    val vs = LakeTable.versions(dir)
-    // vacuumed-gap guard (ADVICE r12, same as changeVersions): a missing
-    // start manifest must refuse, not silently re-emit carried files
-    require(from == 0L || vs.contains(from),
-      s"version $from not published (or vacuumed) in $dir")
-    require(vs.contains(to),
-      s"version $to not published (or vacuumed) in $dir")
-    val window = (from +: vs.filter(v => v > from && v <= to))
-      .distinct.sorted
     val spark = SparkSession.active
     def abs(rel: String) = Paths.get(dir, rel)
     def sizedSidecars(rels: Seq[String]): Seq[(String, Long)] =
       rels.map(r => (abs(r).toString, Files.size(abs(r))))
-    window.zip(window.tail).flatMap { case (prev, v) =>
-      if (LakeTable.opOf(dir, v) == "optimize") Seq.empty
-      else {
-        val ts = LakeTable.commitTimeOf(dir, v).getTime * 1000L
-        val prevFiles =
-          if (prev == 0L) Seq.empty else LakeTable.filesOf(dir, prev)
-        val curFiles = LakeTable.filesOf(dir, v)
-        val prevDv =
-          if (prev == 0L) Seq.empty[String] else LakeTable.dvOf(dir, prev)
-        val curDv = LakeTable.dvOf(dir, v)
-        val newDv = curDv.filterNot(prevDv.toSet)
-        // (a) retractions of the positions newly vectored at v — the
-        // affected-file list is sidecar METADATA (driver-bounded, same
-        // collect changesBetween runs); row reads stay on executors
-        val dvParts =
-          if (newDv.isEmpty) Seq.empty
-          else {
-            val sc = sizedSidecars(newDv)
-            spark.read.parquet(newDv.map(r => abs(r).toString): _*)
-              .select("file").distinct().collect()
-              .map(r => LakeTable.percentDecode(r.getString(0)))
-              .toSeq.sorted.map { rel =>
-                val p = abs(rel)
-                LakeFeedPartition(p.toString, Files.size(p), rel,
-                  "delete", v, ts, emitOnly = true, sc)
-              }
-          }
-        // (b) the file-list diff, each side read through the vectors of
-        // the version whose content it represents
-        val curSet = curFiles.toSet
-        val prevSet = prevFiles.toSet
-        val delParts = prevFiles.filterNot(curSet).map { rel =>
-          val p = abs(rel)
-          LakeFeedPartition(p.toString, Files.size(p), rel,
-            "delete", v, ts, emitOnly = false, sizedSidecars(prevDv))
-        }
-        val insParts = curFiles.filterNot(prevSet).map { rel =>
-          val p = abs(rel)
-          LakeFeedPartition(p.toString, Files.size(p), rel,
-            "insert", v, ts, emitOnly = false, sizedSidecars(curDv))
-        }
-        dvParts ++ delParts ++ insParts
+    val steps = LakeVersionCursor.steps(dir, from, to).filterNot(_.optimize)
+    steps.flatMap { s =>
+      val v = s.v
+      val ts = LakeTable.commitTimeOf(dir, v).getTime * 1000L
+      def part(rel: String, kind: String, emitOnly: Boolean,
+               sidecars: Seq[(String, Long)]) = {
+        val p = abs(rel)
+        LakeFeedPartition(p.toString, Files.size(p), rel, kind, v, ts,
+                          emitOnly, sidecars)
       }
+      // (a) retractions of the positions newly vectored at v — the
+      // affected-file list is sidecar METADATA (driver-bounded, same
+      // collect changesBetween runs); row reads stay on executors
+      val dvParts =
+        if (s.newDv.isEmpty) Seq.empty
+        else {
+          val sc = sizedSidecars(s.newDv)
+          spark.read.parquet(s.newDv.map(r => abs(r).toString): _*)
+            .select("file").distinct().collect()
+            .map(r => LakeTable.percentDecode(r.getString(0)))
+            .toSeq.sorted.map(part(_, "delete", emitOnly = true, sc))
+        }
+      // (b) the file-list diff, each side read through the vectors of
+      // the version whose content it represents
+      val delParts = s.removed.map(
+        part(_, "delete", emitOnly = false, sizedSidecars(s.dvBefore)))
+      val insParts = s.added.map(
+        part(_, "insert", emitOnly = false, sizedSidecars(s.dvAfter)))
+      dvParts ++ delParts ++ insParts
     }.toArray
   }
 
@@ -339,8 +233,6 @@ private[sources] class LakeFeedMicroBatchStream(dir: String,
         LakeFeedMicroBatchStream.sidecarSchema, Seq.empty))
   }
 
-  override def commit(end: Offset): Unit = () // retention is vacuum's job
-  override def stop(): Unit = ()
   override def toString: String = s"LakeFeedMicroBatchStream[$dir]"
 }
 

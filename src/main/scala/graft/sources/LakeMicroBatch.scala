@@ -11,12 +11,6 @@ import org.apache.spark.sql.graftshim.FileReadShim
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 
-/** Offsets ARE commit versions, same as the V1 stream source — the
-  * manifest history is a totally ordered replayable log. */
-case class LakeOffset(version: Long) extends Offset {
-  override def json(): String = version.toString
-}
-
 /** One whole data file of one pending version: the work unit of the V2
   * micro-batch scan. At 100 TB a micro-batch plans manifest ARITHMETIC
   * on the driver and ships one task per added file — the same
@@ -34,10 +28,11 @@ case class LakeFilePartition(path: String, size: Long) extends InputPartition
   * serializable parquet reader closure ([[FileReadShim.parquetReader]] —
   * vectorized scan, column pruning via the builder's pruned schema, and
   * pushed filters as row-group pruning). Exactly-once is the engine's
-  * offset log replaying immutable version windows, identical to the V1
-  * source. Added files of a non-change version are DV-free by
-  * construction (a carried DV names only pre-existing files), so no
-  * position filtering is needed on this path. */
+  * offset log replaying immutable version windows; offsets, discovery,
+  * rate limits and AvailableNow come from [[LakeVersionCursor]], the
+  * same core as the V1 source. Added files of a non-change version are
+  * DV-free by construction (a carried DV names only pre-existing files),
+  * so no position filtering is needed on this path. */
 class LakeMicroBatchStream(dir: String, dataSchema: StructType,
                            requiredSchema: StructType,
                            pushed: Seq[Filter],
@@ -46,137 +41,24 @@ class LakeMicroBatchStream(dir: String, dataSchema: StructType,
                            maxVersionsPerTrigger: Option[Int] = None,
                            maxFilesPerTrigger: Option[Int] = None,
                            maxBytesPerTrigger: Option[Long] = None)
-    extends MicroBatchStream
-    with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
-  import org.apache.spark.sql.connector.read.streaming.ReadLimit
-
-  private def ver(o: Offset): Long = o match {
-    case LakeOffset(v) => v
-    case other => other.json().trim.toLong
-  }
-
-  /** Highest advertised offset — the probe floor (engine drives a stream
-    * single-threaded). -1 = unprimed. */
-  private var knownMax: Long = -1L
-
-  /** `Trigger.AvailableNow` drain target (r15, verdict ask #3): pinned
-    * ONCE when the engine announces the trigger, so the query drains
-    * exactly what was published at start — in ⌈backlog/cap⌉ bounded
-    * batches under the rate limits — then stops by itself; versions
-    * landing mid-drain wait for the next scheduled run. -1 = normal
-    * continuous trigger, no cap. */
-  private var availableNowCap: Long = -1L
-
-  override def prepareForTriggerAvailableNow(): Unit = {
-    val floor = math.max(knownMax, startingVersion)
-    availableNowCap = discover(floor).lastOption.getOrElse(floor)
-  }
-
-  private def capPin(vs: Seq[Long]): Seq[Long] =
-    if (availableNowCap < 0L) vs else vs.filter(_ <= availableNowCap)
-
-  override def initialOffset(): Offset = LakeOffset(startingVersion)
-
-  override def deserializeOffset(json: String): Offset =
-    LakeOffset(json.trim.toLong)
-
-  /** O(pending) discovery — the dense-claim walk above the floor, with
-    * the one-listing fallback past vacuumed gaps while unprimed (same
-    * discipline as the V1 source, r11/r12). */
-  private def discover(floor0: Long): Seq[Long] = {
-    val floor = math.max(floor0, startingVersion)
-    val walked = LakeTable.versionsAbove(dir, floor)
-    if (walked.nonEmpty || knownMax >= 0L) walked
-    else LakeTable.versions(dir).filter(_ > floor)
-  }
-
-  override def latestOffset(): Offset = {
-    val floor = math.max(knownMax, startingVersion)
-    val off = capPin(discover(floor)).lastOption.getOrElse(floor)
-    knownMax = math.max(knownMax, off)
-    LakeOffset(off)
-  }
-
-  /** Rate limiting (r13): `maxVersionsPerTrigger` caps each micro-batch
-    * to the next N commit versions — V1-source parity, spelled through
-    * the engine's admission-control seam so the capped offset is the
-    * one the engine WALs (no side cursor needed; `start` is the
-    * committed floor on every call, restarts included). */
-  override def getDefaultReadLimit: ReadLimit = {
-    val limits = Seq(
-      maxVersionsPerTrigger.orElse(maxFilesPerTrigger)
-        .map(n => ReadLimit.maxFiles(n)),
-      maxBytesPerTrigger.map(b => ReadLimit.maxBytes(b))).flatten
-    limits match {
-      case Seq() => ReadLimit.allAvailable()
-      case Seq(one) => one
-      case many => ReadLimit.compositeLimit(many.toArray)
-    }
-  }
-
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val floor = math.max(ver(start), startingVersion)
-    val pending = capPin(discover(floor))
-    val byVersions = maxVersionsPerTrigger match {
-      case Some(n) if pending.nonEmpty => pending.take(n)
-      case _ => pending
-    }
-    // maxFilesPerTrigger (r14, the Delta spelling): admit pending
-    // versions until the ADDED-file budget is spent — always at least
-    // one, so a single oversized commit still drains. The per-version
-    // counts are manifest arithmetic on the driver (same diffs
-    // planInputPartitions runs), O(pending) manifest reads, no listing.
-    val byFiles = maxFilesPerTrigger match {
-      case Some(nf) if byVersions.nonEmpty =>
-        LakeMicroBatchStream.admitByFiles(dir, floor, byVersions, nf)
-      case _ => byVersions
-    }
-    // maxBytesPerTrigger (r15, verdict ask #4): file counts don't bound
-    // memory when sizes vary 100x — admit by cumulative ADDED bytes,
-    // read from the manifest's recorded per-member sizes (one stat per
-    // file at COMMIT time, zero per trigger). Applied after the other
-    // caps, so the strictest limit wins; the oversized-first-commit
-    // progress guarantee is the same.
-    val admitted = maxBytesPerTrigger match {
-      case Some(nb) if byFiles.nonEmpty =>
-        LakeMicroBatchStream.admitByBytes(dir, floor, byFiles, nb)
-      case _ => byFiles
-    }
-    val off = admitted.lastOption.getOrElse(floor)
-    knownMax = math.max(knownMax, off)
-    LakeOffset(off)
-  }
+    extends LakeVersionCursor(dir, startingVersion, maxVersionsPerTrigger,
+                              maxFilesPerTrigger, maxBytesPerTrigger)
+    with MicroBatchStream {
 
   override def planInputPartitions(start: Offset,
                                    end: Offset): Array[InputPartition] = {
-    val from = ver(start)
-    val to = ver(end)
+    val from = versionOf(start)
+    val to = versionOf(end)
     if (to <= from) return Array.empty
-    val changed = LakeStreamSource.changeVersions(dir, from, to)
-    if (changed.nonEmpty && !skipChangeCommits)
-      throw new UnsupportedOperationException(
-        s"rows-mode stream on $dir hit non-append commit(s) " +
-        s"${changed.mkString("v", ", v", "")}: a table-rows stream " +
-        "cannot represent removals — read the change feed " +
-        "(readStream.format(\"graft-lake\")) or set " +
-        "skipChangeCommits=true to drop such versions")
-    val vs = LakeTable.versions(dir)
-    val window = (from +: vs.filter(v => v > from && v <= to))
-      .distinct.sorted
-    val skip = changed.toSet
-    window.zip(window.tail).flatMap { case (prev, v) =>
-      if (skip.contains(v) || LakeTable.opOf(dir, v) == "optimize") Seq.empty
-      else {
-        val pf = if (prev == 0L) Set.empty[String]
-                 else LakeTable.filesOf(dir, prev).toSet
-        // file sizes from the manifest's recorded bytecounts (r15) —
-        // zero per-trigger stats; pre-r15 manifests fall back to one
-        val sizes = LakeTable.bytesOf(dir, v)
-        LakeTable.filesOf(dir, v).filterNot(pf).map { f =>
-          val p = Paths.get(dir, f)
-          LakeFilePartition(p.toString,
-            sizes.getOrElse(f, Files.size(p)))
-        }
+    val steps = LakeVersionCursor.steps(dir, from, to)
+    val skip = LakeVersionCursor.appendOnly(dir, steps, skipChangeCommits)
+    steps.filterNot(s => s.optimize || skip(s.v)).flatMap { s =>
+      // file sizes from the manifest's recorded bytecounts (r15) —
+      // zero per-trigger stats; pre-r15 manifests fall back to one
+      val sizes = LakeTable.bytesOf(dir, s.v)
+      s.added.map { f =>
+        val p = Paths.get(dir, f)
+        LakeFilePartition(p.toString, sizes.getOrElse(f, Files.size(p)))
       }
     }.toArray
   }
@@ -204,63 +86,7 @@ class LakeMicroBatchStream(dir: String, dataSchema: StructType,
       if (renames.isEmpty) pushed else Seq.empty))
   }
 
-  override def commit(end: Offset): Unit = () // retention is vacuum's job
-  override def stop(): Unit = ()
   override def toString: String = s"LakeMicroBatchStream[$dir]"
-}
-
-private[sources] object LakeMicroBatchStream {
-  /** Prefix of `pending` whose cumulative ADDED-file count stays within
-    * `budget` — always at least the first element (a single oversized
-    * commit must still drain). Shared by the rows-mode and change-feed
-    * V2 streams (r14, maxFilesPerTrigger). */
-  private[sources] def admitByFiles(dir: String, floor: Long,
-                                    pending: Seq[Long],
-                                    budget: Int): Seq[Long] = {
-    var acc = 0L
-    var prev = floor
-    val out = Seq.newBuilder[Long]
-    var open = true
-    pending.foreach { v =>
-      if (open) {
-        val pf = if (prev == 0L) Set.empty[String]
-                 else LakeTable.filesOf(dir, prev).toSet
-        val added = LakeTable.filesOf(dir, v).count(!pf.contains(_))
-        if (acc == 0L || acc + added <= budget) {
-          out += v; acc += added; prev = v
-        } else open = false
-      }
-    }
-    out.result()
-  }
-
-  /** Prefix of `pending` whose cumulative ADDED bytes stay within
-    * `budget` — always at least the first element (a single oversized
-    * commit must still drain). Sizes come from the manifest's recorded
-    * `bytecounts` (r15); members a pre-r15 manifest lacks an entry for
-    * fall back to one stat. */
-  private[sources] def admitByBytes(dir: String, floor: Long,
-                                    pending: Seq[Long],
-                                    budget: Long): Seq[Long] = {
-    var acc = 0L
-    var prev = floor
-    val out = Seq.newBuilder[Long]
-    var open = true
-    pending.foreach { v =>
-      if (open) {
-        val pf = if (prev == 0L) Set.empty[String]
-                 else LakeTable.filesOf(dir, prev).toSet
-        val sizes = LakeTable.bytesOf(dir, v)
-        val added = LakeTable.filesOf(dir, v).filterNot(pf.contains)
-          .map(f => sizes.getOrElse(f, scala.util.Try(
-            Files.size(Paths.get(dir, f))).getOrElse(0L))).sum
-        if (acc == 0L || acc + added <= budget) {
-          out += v; acc += added; prev = v
-        } else open = false
-      }
-    }
-    out.result()
-  }
 }
 
 /** `df.writeStream.toTable("<lakeCatalog>.ns.t")` — the DataSourceV2

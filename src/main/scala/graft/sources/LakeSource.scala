@@ -70,7 +70,6 @@ class LakeSource extends RelationProvider with CreatableRelationProvider
       LakeTable.startingVersionOf(dir,
         parameters.get("startingVersion"),
         parameters.get("startingTimestamp")),
-      metadataPath,
       parameters.get("maxVersionsPerTrigger").map(_.toInt),
       // a schema WITHOUT the feed columns (readStream.table resolves the
       // catalog table's own schema) selects rows mode: plain table rows,

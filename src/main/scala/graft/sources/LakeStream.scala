@@ -2,8 +2,6 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SQLContext}
 import org.apache.spark.sql.execution.streaming.{Offset => OffsetV1, Source}
-import org.apache.spark.sql.execution.streaming.runtime.LongOffset
-import org.apache.spark.sql.connector.read.streaming
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.graftshim.StreamShim
 import org.apache.spark.sql.types.StructType
@@ -16,7 +14,8 @@ import org.apache.spark.sql.types.StructType
   * Offsets ARE commit versions: the manifest history is already a totally
   * ordered, replayable log (CAS-claimed manifests + publish fences), so
   * the source's offset bookkeeping is nothing but "the highest published
-  * version" — `getOffset` reports it, and each micro-batch materializes
+  * version" — [[LakeVersionCursor]] reports it, the same offset core the
+  * two DSv2 streams run, and each micro-batch materializes
   * [[LakeTable.changesBetween]] over the `(start, end]` version window:
   * per published version, removed files replay as `_change_type='delete'`
   * retractions and added files as `'insert'` additions, OPTIMIZE versions
@@ -39,11 +38,12 @@ import org.apache.spark.sql.types.StructType
   * is metadata; the data path is the same codegen'd scan).
   */
 class LakeStreamSource(ctx: SQLContext, dir: String, startingVersion: Long,
-                       metadataPath: String,
                        maxVersionsPerTrigger: Option[Int],
                        rowsSchema: Option[StructType] = None,
                        skipChangeCommits: Boolean = false)
-    extends Source {
+    extends LakeVersionCursor(dir, startingVersion, maxVersionsPerTrigger,
+                              None, None)
+    with Source {
 
   /** ROWS MODE (r12, behavior 46): when the engine hands a schema WITHOUT
     * the feed columns — `spark.readStream.table(<catalog lake table>)`
@@ -59,112 +59,38 @@ class LakeStreamSource(ctx: SQLContext, dir: String, startingVersion: Long,
 
   private val rowsMode: Boolean = rowsSchema.nonEmpty
 
-  private def ver(o: OffsetV1): Long = o.json.trim.toLong
-
-  /** Rate-limit cursor (only kept when `maxVersionsPerTrigger` is set):
-    * the end version of the last planned batch, persisted under the
-    * source's checkpoint `metadataPath` so a restart caps from the right
-    * floor instead of re-advertising an offset at or below the engine's
-    * committed one (which would rewind the offset log). Write order makes
-    * this safe: the engine WALs the end offset before calling `getBatch`,
-    * and re-runs `getBatch` for any uncommitted tail batch on restart, so
-    * the persisted cursor always equals the last offsets-logged end. */
-  private val cursorFile = java.nio.file.Paths.get(
-    LakeSource.localPath(metadataPath), "graft-lake-rate-cursor")
-
-  private def readCursor(): Option[Long] =
-    if (java.nio.file.Files.exists(cursorFile))
-      Some(new String(java.nio.file.Files.readAllBytes(cursorFile),
-                      "UTF-8").trim.toLong)
-    else None
-
-  private def writeCursor(v: Long): Unit = {
-    java.nio.file.Files.createDirectories(cursorFile.getParent)
-    val tmp = cursorFile.resolveSibling(cursorFile.getFileName.toString + ".tmp")
-    java.nio.file.Files.write(tmp, v.toString.getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp, cursorFile,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  /** Highest offset this source has advertised — the probe floor for
-    * the next trigger, so steady-state version discovery walks only the
-    * window above the last offset (MicroBatchExecution drives a source
-    * single-threaded; no sync needed). -1 = unprimed (fresh start). */
-  private var knownMax: Long = -1L
-
-  /** Bounded discovery (r11, verdict ask #5): probe published versions
-    * strictly ABOVE the floor — the max of the last advertised offset,
-    * the persisted rate cursor, and `startingVersion` — via
-    * [[LakeTable.versionsAbove]]'s dense-claim walk. Cost per trigger is
-    * O(versions committed since the floor), never O(history); only the
-    * very first trigger of a fresh (cursor-less) stream pays a walk from
-    * `startingVersion`. `None` until anything exists above
-    * `startingVersion` (same engine contract as before: no offset, no
-    * batch); once primed, quiet triggers re-advertise the floor. */
-  override def getOffset: Option[OffsetV1] = {
-    val cursor =
-      if (maxVersionsPerTrigger.nonEmpty) readCursor() else None
-    val floor = math.max(knownMax,
-      math.max(cursor.getOrElse(Long.MinValue), startingVersion))
-    val walked = LakeTable.versionsAbove(dir, floor)
-    val primed = knownMax >= 0L || cursor.nonEmpty
-    // unprimed-listing fallback (r12, ADVICE r11 high): on a table
-    // vacuumed by a build that predates the vacuum-floor hint, the dense
-    // walk from an unprimed floor finds nothing even though published
-    // versions exist above it — one full directory listing (only while
-    // unprimed, so at most until the first offset) primes the stream
-    // past the gap instead of silently never emitting.
-    val pending =
-      if (walked.nonEmpty || primed) walked
-      else LakeTable.versions(dir).filter(_ > floor)
-    if (pending.isEmpty && !primed) None
-    else {
-      val off = maxVersionsPerTrigger match {
-        case Some(m) if pending.nonEmpty => pending.take(m).last
-        case _ => pending.lastOption.getOrElse(floor)
-      }
-      knownMax = off
-      Some(LongOffset(off))
-    }
-  }
+  /** Offsets come from the admission-controlled
+    * [[LakeVersionCursor.latestOffset]], which sees the committed start
+    * (Spark's own `FileStreamSource` does the same). */
+  override def getOffset: Option[OffsetV1] =
+    throw new UnsupportedOperationException(
+      "latestOffset(Offset, ReadLimit) should be called instead of this method")
 
   override def getBatch(start: Option[OffsetV1], end: OffsetV1): DataFrame = {
-    val from = start.map(ver).getOrElse(startingVersion)
-    val to = ver(end)
-    if (maxVersionsPerTrigger.nonEmpty) writeCursor(math.max(from, to))
+    val from = start.map(versionOf).getOrElse(startingVersion)
+    val to = versionOf(end)
     val feed0 = LakeTable.changesBetween(ctx.sparkSession, dir, from, to)
     val feed = if (!rowsMode) feed0 else {
       // append-only contract: change commits in the window refuse (or
       // drop wholesale under skipChangeCommits) — decided by MANIFEST
       // arithmetic, no row is read for the check
-      val changed = LakeStreamSource.changeVersions(dir, from, to)
-      if (changed.nonEmpty && !skipChangeCommits)
-        throw new UnsupportedOperationException(
-          s"rows-mode stream on $dir hit non-append commit(s) " +
-          s"${changed.mkString("v", ", v", "")}: a table-rows stream " +
-          "cannot represent removals — read the change feed " +
-          "(readStream.format(\"graft-lake\")) or set " +
-          "skipChangeCommits=true to drop such versions")
+      val skip = LakeVersionCursor.appendOnly(dir,
+        LakeVersionCursor.steps(dir, from, to), skipChangeCommits)
       val inserts = feed0.filter(col("_change_type") === "insert")
-      if (changed.isEmpty) inserts
-      else inserts.filter(!col("_commit_version").isin(changed: _*))
+      if (skip.isEmpty) inserts
+      else inserts.filter(!col("_commit_version").isin(skip.toSeq: _*))
     }
     // align to the declared schema: versions recorded under an older
     // schema null-fill; columns evolved onto the table after stream
     // start are dropped until a restart re-infers (the documented
     // fixed-schema invariant)
     val cols = schema.fields.map { f =>
-      if (feed.columns.contains(f.name)) col(f.name).cast(f.dataType)
+      if (feed.columns.contains(f.name))
+        LakeTable.byName(f.name).cast(f.dataType)
       else lit(null).cast(f.dataType).as(f.name)
     }
     StreamShim.asStreaming(feed.select(cols.toSeq: _*))
   }
-
-  // manifest retention is vacuum's job, not the stream's
-  override def commit(end: OffsetV1): Unit = ()
-  override def commit(end: streaming.Offset): Unit = ()
-  override def stop(): Unit = ()
 
   override def toString: String = s"LakeStreamSource[$dir]"
 }
@@ -249,42 +175,4 @@ class LakeStreamSink(dir: String, commitMode: String,
   }
 
   override def toString: String = s"LakeStreamSink[$dir, $commitMode]"
-}
-
-object LakeStreamSource {
-  /** Versions in `(from, to]` that REMOVE or HIDE rows — a rewrite
-    * (files leave the manifest) or a DV publish (a sidecar joins it).
-    * Pure manifest arithmetic: the rows-mode append-only gate runs on
-    * the driver without opening a file. OPTIMIZE moves files without
-    * changing rows and is exempt (its adds are also skipped by the feed
-    * itself). */
-  private[sources] def changeVersions(dir: String, from: Long,
-                                      to: Long): Seq[Long] = {
-    val vs = LakeTable.versions(dir)
-    // a checkpointed start version whose manifest was vacuumed must
-    // refuse loudly, mirroring changesBetween's guard: treating it as an
-    // empty file list would re-emit every carried file of the next
-    // version as newly added (duplicate rows — broken exactly-once), and
-    // non-append commits across the gap would go undetected (ADVICE r12).
-    // Both stream paths route here before planning a batch: the V2
-    // planInputPartitions directly, the V1 getBatch via changesBetween's
-    // own require plus this one.
-    require(from == 0L || vs.contains(from),
-      s"version $from not published (or vacuumed) in $dir")
-    require(vs.contains(to) || to == from,
-      s"version $to not published (or vacuumed) in $dir")
-    val window = (from +: vs.filter(v => v > from && v <= to))
-      .distinct.sorted
-    window.zip(window.tail).collect {
-      case (prev, v) if LakeTable.opOf(dir, v) != "optimize" && {
-        val pf = if (prev == 0L) Set.empty[String]
-                 else LakeTable.filesOf(dir, prev).toSet
-        val removed = pf -- LakeTable.filesOf(dir, v)
-        val dvAdded = LakeTable.dvOf(dir, v).toSet --
-          (if (prev == 0L) Set.empty[String]
-           else LakeTable.dvOf(dir, prev).toSet)
-        removed.nonEmpty || dvAdded.nonEmpty
-      } => v
-    }
-  }
 }

@@ -487,6 +487,13 @@ object LakeTable {
   private[graft] def byName(name: String): org.apache.spark.sql.Column =
     col(quoted(name))
 
+  /** [[byName]] under a frame alias: `byName("t", name)` selects the
+    * column named exactly `name` of the frame aliased `t`, backticks in
+    * the name included. */
+  private[graft] def byName(alias: String,
+                            name: String): org.apache.spark.sql.Column =
+    col(s"$alias.${quoted(name)}")
+
   /** Recorded columns with physical names replaced by logical. */
   private[sources] def logicalSchema(recorded: Seq[Column],
                                      renames: Map[String, String]): Seq[Column] =
@@ -2756,14 +2763,14 @@ object LakeTable {
           .map(f => f.name -> f.dataType).toMap
         // ---- matched side: inner join on the keys ----
         val joinCond = keys.map(k =>
-          col(s"t.`$k`") === col(s"s.`$k`")).reduce(_ && _)
+          byName("t", k) === byName("s", k)).reduce(_ && _)
         val m = livePos.alias("t").join(source.alias("s"), joinCond)
         val mConds = matched.map(_._1)
         val hideMatched =
           if (matched.isEmpty) None
           else Some(m.filter(anyOf(mConds))
-            .select(col(s"t.`$fCol`").as("file"),
-                    col(s"t.`$pCol`").as("pos")))
+            .select(byName("t", fCol).as("file"),
+                    byName("t", pCol).as("pos")))
         // ALL of one side's UPDATE/INSERT clauses collapse into ONE
         // CASE-projected pass over that side's frame — a U-clause merge
         // costs the same number of target-file scans as a 1-clause one
@@ -2817,7 +2824,7 @@ object LakeTable {
           }
         val matchedUpdates =
           casePass(m, mConds, updateClausesOf(matched),
-                   c => col(s"t.`$c`")).toSeq
+                   c => byName("t", c)).toSeq
         // ---- not-matched side: source keys absent from the live table ----
         val insBase = source.join(
           livePos.select(keys.map(byName): _*).distinct(), keys, "left_anti")
@@ -2835,11 +2842,11 @@ object LakeTable {
         val hideBySource =
           if (bySource.isEmpty) None
           else Some(tOnly.filter(anyOf(bConds))
-            .select(col(s"t.`$fCol`").as("file"),
-                    col(s"t.`$pCol`").as("pos")))
+            .select(byName("t", fCol).as("file"),
+                    byName("t", pCol).as("pos")))
         val bySourceUpdates =
           casePass(tOnly, bConds, updateClausesOf(bySource),
-                   c => col(s"t.`$c`")).toSeq
+                   c => byName("t", c)).toSeq
         val hidden = (hideMatched.toSeq ++ hideBySource.toSeq)
           .reduceOption(_ union _)
         val freshRows = (matchedUpdates ++ inserts ++ bySourceUpdates)
@@ -3509,15 +3516,9 @@ object LakeTable {
                      names: Option[Map[String, String]] = None): DataFrame = {
     def namesAt(v: Long): Map[String, String] =
       names.getOrElse(if (v == 0L) Map.empty else renamesOf(dir, v))
-    val vs = versions(dir)
-    require(vs.contains(toVersion) || toVersion == fromVersion,
-      s"version $toVersion not published (or vacuumed) in $dir")
-    require(fromVersion == 0L || vs.contains(fromVersion),
-      s"version $fromVersion not published (or vacuumed) in $dir")
-    val window = (fromVersion +: vs.filter(v =>
-      v > fromVersion && v <= toVersion)).distinct.sorted
-    val steps = window.zip(window.tail)
-    val parts = steps.flatMap { case (prev, v) =>
+    val parts = LakeVersionCursor.steps(dir, fromVersion, toVersion)
+        .filterNot(_.optimize).flatMap { step =>
+      val v = step.v
       val ts = commitTimeOf(dir, v)
       def stamp(df: DataFrame, kind: String) =
         df.withColumn("_change_type", lit(kind))
@@ -3526,58 +3527,51 @@ object LakeTable {
       def rawRead(files: Seq[String], schemaV: Long) =
         knownFrame(spark, dir, files, schemaOf(dir, schemaV),
                    if (schemaV == 0L) Map.empty else bytesOf(dir, schemaV))
-      if (opOf(dir, v) == "optimize") Seq.empty
-      else {
-        // UNIFIED DV-diff replay (r12): every non-optimize version
-        // contributes (a) retractions of the positions NEWLY vectored at
-        // v — the whole story for a dvdelete, the retraction half of a
-        // dvupdate, empty for everything else (carried sidecar lists are
-        // set-stable) — plus (b) the file-list diff: removed files
-        // retract, added files insert (a dvupdate's fresh updated copies
-        // arrive here as plain inserts).
-        val newDv = dvOf(dir, v).filterNot(dvOf(dir, prev).toSet)
-        val dvRetract =
-          if (newDv.isEmpty) Seq.empty
-          else {
-            val dvDf = spark.read.parquet(
-              newDv.map(s => Paths.get(dir, s).toString): _*)
-              .select(col("file").as("_dv_file"), col("pos").as("_dv_pos"))
-            // sidecar `file` values are URI-form (derived from the
-            // reader's `_metadata.file_path`, which percent-encodes);
-            // resolving them back to DISK paths needs one percent-decode
-            // — a layout dir spelled `_layout=EUROPE%2FWEST` on disk
-            // reads as `%252F` in URI form, and a raw Paths.get of that
-            // misses the real file (ADVICE r11). The in-plan joins below
-            // stay URI-form on both sides, so only this resolution
-            // decodes.
-            val affected = dvDf.select("_dv_file").distinct()
-              .collect().map(r => percentDecode(r.getString(0))).toSeq.sorted
-            val rows = rawRead(affected, v)
-            val cols = rows.columns.toSeq
-            Seq(stamp(toLogical(rows
-              .withColumn("_dv_file", relFileCol)
-              .withColumn("_dv_pos", col("_metadata.row_index"))
-              .join(broadcast(dvDf), Seq("_dv_file", "_dv_pos"), "left_semi")
-              .select(cols.map(byName): _*), namesAt(v)), "delete"))
-          }
-        val before = if (prev == 0L) Seq.empty else filesOf(dir, prev)
-        val after = filesOf(dir, v)
-        val removed = before.filterNot(after.contains)
-        val added = after.filterNot(before.contains)
-        // each side reads under — and applies the DELETION VECTORS of —
-        // the version whose content it represents, so an overwrite or
-        // restore over a DV-bearing version never retracts or re-inserts
-        // rows that version had already hidden
-        def side(files: Seq[String], schemaV: Long, kind: String) =
-          if (files.isEmpty) None
-          else Some(stamp(toLogical(
-            applyDv(spark, dir, rawRead(files, schemaV),
-                    if (schemaV == 0L) Seq.empty else dvOf(dir, schemaV)),
-            namesAt(schemaV)), kind))
-        dvRetract ++
-          side(removed, prev, "delete").toSeq ++
-          side(added, v, "insert").toSeq
-      }
+      // UNIFIED DV-diff replay (r12): every non-optimize version
+      // contributes (a) retractions of the positions NEWLY vectored at
+      // v — the whole story for a dvdelete, the retraction half of a
+      // dvupdate, empty for everything else (carried sidecar lists are
+      // set-stable) — plus (b) the file-list diff: removed files
+      // retract, added files insert (a dvupdate's fresh updated copies
+      // arrive here as plain inserts).
+      val newDv = step.newDv
+      val dvRetract =
+        if (newDv.isEmpty) Seq.empty
+        else {
+          val dvDf = spark.read.parquet(
+            newDv.map(s => Paths.get(dir, s).toString): _*)
+            .select(col("file").as("_dv_file"), col("pos").as("_dv_pos"))
+          // sidecar `file` values are URI-form (derived from the
+          // reader's `_metadata.file_path`, which percent-encodes);
+          // resolving them back to DISK paths needs one percent-decode
+          // — a layout dir spelled `_layout=EUROPE%2FWEST` on disk
+          // reads as `%252F` in URI form, and a raw Paths.get of that
+          // misses the real file (ADVICE r11). The in-plan joins below
+          // stay URI-form on both sides, so only this resolution
+          // decodes.
+          val affected = dvDf.select("_dv_file").distinct()
+            .collect().map(r => percentDecode(r.getString(0))).toSeq.sorted
+          val rows = rawRead(affected, v)
+          val cols = rows.columns.toSeq
+          Seq(stamp(toLogical(rows
+            .withColumn("_dv_file", relFileCol)
+            .withColumn("_dv_pos", col("_metadata.row_index"))
+            .join(broadcast(dvDf), Seq("_dv_file", "_dv_pos"), "left_semi")
+            .select(cols.map(byName): _*), namesAt(v)), "delete"))
+        }
+      // each side reads under — and applies the DELETION VECTORS of —
+      // the version whose content it represents, so an overwrite or
+      // restore over a DV-bearing version never retracts or re-inserts
+      // rows that version had already hidden
+      def side(files: Seq[String], schemaV: Long, dv: Seq[String],
+               kind: String) =
+        if (files.isEmpty) None
+        else Some(stamp(toLogical(
+          applyDv(spark, dir, rawRead(files, schemaV), dv),
+          namesAt(schemaV)), kind))
+      dvRetract ++
+        side(step.removed, step.prev, step.dvBefore, "delete").toSeq ++
+        side(step.added, v, step.dvAfter, "insert").toSeq
     }
     parts match {
       case Seq() =>

@@ -718,6 +718,25 @@ object StreamOps {
       }
   }
 
+  /** Per-key winner within a micro-batch: the (ts, event_id)-max row, so
+    * the result does not depend on upstream row order. Keys select by
+    * exact name (a key `k.x` is a column, not field `x` of `k`). */
+  private def latestPerKey(batch: DataFrame, keys: Seq[String]): DataFrame =
+    batch
+      .withColumn("_r", row_number().over(
+        org.apache.spark.sql.expressions.Window
+          .partitionBy(keys.map(graft.sources.LakeTable.byName): _*)
+          .orderBy(col("ts").desc, col("event_id").desc)))
+      .filter(col("_r") === 1).drop("_r")
+
+  /** The upsert invariant, checked against the files AS WRITTEN: at most
+    * one row per key. */
+  private def uniqueKeys(keys: Seq[String], op: String)(
+      df: DataFrame): Option[String] =
+    if (df.groupBy(keys.map(graft.sources.LakeTable.byName): _*).count()
+          .filter(col("count") > 1).isEmpty) None
+    else Some(s"duplicate keys after $op")
+
   /** Streaming CDC apply — behavior 32, the lakehouse ingest workload:
     * a change stream whose rows carry `op` ('D' = tombstone, anything
     * else = upsert) folds into the published table through the same
@@ -740,13 +759,9 @@ object StreamOps {
     if (LakeTable.appliedBatch(dir, sink).exists(_ >= batchId)
         || batch.isEmpty) None
     else {
-      val winner = batch
-        .withColumn("_r", row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy(keys.map(col): _*)
-            .orderBy(col("ts").desc, col("event_id").desc)))
-        .filter(col("_r") === 1).drop("_r")
+      val winner = latestPerKey(batch, keys)
       val upserts = winner.filter(col("op") =!= "D").drop("op")
-      val touched = winner.select(keys.map(col): _*)
+      val touched = winner.select(keys.map(LakeTable.byName): _*)
       // SERIALIZED (r9): the merge re-plans against the live version if a
       // concurrent commit (another sink, a compaction, a batch writer)
       // lands between the base read and the publish — the full-rewrite
@@ -775,12 +790,7 @@ object StreamOps {
         if (st.files.isEmpty && st.schema.isEmpty)
           Left("empty table after CDC apply with no recorded schema " +
                "(legacy schema-less table)")
-        else LakeTable.audit(spark, st) { df =>
-          val dup = df.groupBy(keys.map(col): _*).count()
-            .filter(col("count") > 1)
-          if (dup.isEmpty) None
-          else Some("duplicate keys after CDC apply")
-        }
+        else LakeTable.audit(spark, st)(uniqueKeys(keys, "CDC apply"))
       } match {
         case Right(v) => Some(v)
         case Left(reason) => throw new IllegalStateException(reason)
@@ -823,30 +833,20 @@ object StreamOps {
     if (LakeTable.appliedBatch(dir, sink).exists(_ >= batchId)
         || batch.isEmpty) None
     else {
-      // per-key winner within the batch: max (ts, event_id) — determinism
-      // does not depend on upstream row order
-      val winner = batch
-        .withColumn("_r", row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy(keys.map(col): _*)
-            .orderBy(col("ts").desc, col("event_id").desc)))
-        .filter(col("_r") === 1).drop("_r")
+      val winner = latestPerKey(batch, keys)
       // SERIALIZED (r9): re-plans against the live version if a
       // concurrent commit lands between the base read and the publish
       LakeTable.commitSerialized(dir) { base =>
         val merged =
           if (base == 0L) winner
           else LakeTable.readVersion(spark, dir, base)
-            .join(winner.select(keys.map(col): _*), keys, "left_anti")
+            .join(winner.select(keys.map(LakeTable.byName): _*), keys,
+                  "left_anti")
             .unionByName(winner)
         val st0 = LakeTable.stageAt(spark, dir, base, merged, None,
                                     Seq.empty, Seq.empty, "merge")
         val st = st0.copy(batches = st0.batches + (sink -> batchId))
-        LakeTable.audit(spark, st) { df =>
-          // the upsert invariant, checked against the files AS WRITTEN
-          val dup = df.groupBy(keys.map(col): _*).count()
-            .filter(col("count") > 1)
-          if (dup.isEmpty) None else Some(s"duplicate keys after merge")
-        }
+        LakeTable.audit(spark, st)(uniqueKeys(keys, "merge"))
       } match {
         case Right(v) => Some(v)
         case Left(reason) => throw new IllegalStateException(reason)
@@ -874,16 +874,10 @@ object StreamOps {
     if (LakeTable.appliedBatch(dir, sink).exists(_ >= batchId)
         || batch.isEmpty) None
     else {
-      val winner = batch
-        .withColumn("_r", row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy(keys.map(col): _*)
-            .orderBy(col("ts").desc, col("event_id").desc)))
-        .filter(col("_r") === 1).drop("_r")
+      val winner = latestPerKey(batch, keys)
       LakeTable.mergePartial(spark, dir, winner, keys, layoutCol,
-                             Some(batchId), sink = sink) { df =>
-        val dup = df.groupBy(keys.map(col): _*).count().filter(col("count") > 1)
-        if (dup.isEmpty) None else Some("duplicate keys after partial merge")
-      } match {
+                             Some(batchId), sink = sink)(
+          uniqueKeys(keys, "partial merge")) match {
         case Right(v) =>
           // auto-OPTIMIZE: continuous ingest accretes one file per
           // touched layout value per epoch; once the live file count
@@ -921,16 +915,10 @@ object StreamOps {
     if (LakeTable.appliedBatch(dir, sink).exists(_ >= batchId)
         || batch.isEmpty) None
     else {
-      val winner = batch
-        .withColumn("_r", row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy(keys.map(col): _*)
-            .orderBy(col("ts").desc, col("event_id").desc)))
-        .filter(col("_r") === 1).drop("_r")
+      val winner = latestPerKey(batch, keys)
       LakeTable.applyCdcPartial(spark, dir, winner, keys, layoutCol,
-                                Some(batchId), sink = sink) { df =>
-        val dup = df.groupBy(keys.map(col): _*).count().filter(col("count") > 1)
-        if (dup.isEmpty) None else Some("duplicate keys after CDC apply")
-      } match {
+                                Some(batchId), sink = sink)(
+          uniqueKeys(keys, "CDC apply")) match {
         case Right(v) => Some(v)
         case Left(reason) => throw new IllegalStateException(reason)
       }

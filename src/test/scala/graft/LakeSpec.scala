@@ -1809,7 +1809,11 @@ class LakeSpec extends SparkTestBase {
     import spark.implicits._
     // `col("a.b")` would read field b of a struct a: every DV and feed
     // projection must select the column by its exact name
-    val dir = Files.createTempDirectory("graft_lake_dotted_").toString
+    val wh = Files.createTempDirectory("graft_lake_dotted_").toString
+    val dir = Paths.get(wh, "ns", "t").toString
+    val cat = "graft_dotted_cat"
+    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.LakeCatalog")
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
     assert(LakeTable.commit(spark, dir,
       (1L to 5L).map(k => (k, k * 10L)).toDF("k", "a.b"))(_ => None)
       == Right(1L))
@@ -1829,6 +1833,22 @@ class LakeSpec extends SparkTestBase {
                            r.getLong(3))).toSet
     assert(feed == Set(("delete", 2L, 2L, 20L), ("delete", 3L, 3L, 30L),
                        ("insert", 3L, 3L, 31L)), s"feed: $feed")
+    // the catalog SELECT and one readStream.format("graft-lake") batch
+    assert(spark.table(s"$cat.ns.t").orderBy("k").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+      == Seq((1L, 10L), (3L, 31L), (4L, 40L), (5L, 50L)))
+    val cp = Files.createTempDirectory("graft_lake_dotted_cp_").toString
+    val q = spark.readStream.format("graft-lake").option("path", dir).load()
+      .writeStream.format("memory").queryName("graft_dotted_feed")
+      .option("checkpointLocation", cp).start()
+    try q.processAllAvailable() finally q.stop()
+    val streamed = spark.table("graft_dotted_feed")
+      .select(col("_change_type"), col("_commit_version"), col("k"),
+              col("`a.b`"))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+                           r.getLong(3))).toSet
+    assert(streamed == (1L to 5L).map(k => ("insert", 1L, k, k * 10L)).toSet
+      ++ feed, s"stream: $streamed")
   }
 
   test("golden log: manifests and checkpoints written before the typed " +

@@ -146,17 +146,18 @@ class LakeStreamSpec extends SparkTestBase {
     run() // v1 alone
     assert(batchVersions.filter(_.nonEmpty).forall(_.size == 1))
     assert(batchVersions.flatten.toSet == Set(1L))
-    // the rate cursor must live INSIDE the checkpoint (the engine hands
-    // metadataPath over as a file: URI — a literal Paths.get of it would
-    // silently create a "file:..." directory relative to the CWD)
-    val cursors = java.nio.file.Files.walk(java.nio.file.Paths.get(cp))
-      .filter(_.getFileName.toString == "graft-lake-rate-cursor")
+    // nothing the stream persists may land outside the checkpoint (the
+    // engine hands metadataPath over as a file: URI — a literal
+    // Paths.get of it would silently create a "file:..." directory
+    // relative to the CWD)
+    val strays = java.nio.file.Files.list(java.nio.file.Paths.get(""))
+      .filter(_.getFileName.toString.startsWith("file:"))
       .count()
-    assert(cursors == 1L, s"rate cursor not under the checkpoint dir $cp")
+    assert(strays == 0L, "a file: URI was used as a relative path")
 
     // backlog of three more versions lands while the stream is DOWN;
     // the restarted query must drain it one version per micro-batch
-    // (the rate cursor floors at the committed offset, not at 0)
+    // (the engine hands the committed offset over as the floor, not 0)
     for (i <- 2 to 4) {
       assert(LakeTable.mergePartial(spark, dir,
         full.filter(col("band") === (i % 3).toLong)
@@ -562,22 +563,21 @@ class LakeStreamSpec extends SparkTestBase {
        "not the full history (r11 ask #5)") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_lakestream_probe_").toString
-    val meta = Files.createTempDirectory("graft_lakestream_probemeta_")
-      .toString
     val n = 12
     for (i <- 1 to n)
       assert(LakeTable.append(spark, dir,
         Seq((i.toLong, i.toLong)).toDF("k", "v"))(_ => None)
         == Right(i.toLong))
     val src = new graft.sources.LakeStreamSource(
-      spark.sqlContext, dir, 0L, meta, None)
+      spark.sqlContext, dir, 0L, None)
+    def latest = Option(src.latestOffset(null, src.getDefaultReadLimit))
     // first trigger of a fresh stream: pays the one-time walk from
     // startingVersion and advertises the head
-    assert(src.getOffset.map(_.json.trim.toLong).contains(n.toLong))
+    assert(latest.map(_.json.trim.toLong).contains(n.toLong))
     // quiet trigger: exactly ONE probe past the floor (the first
     // unclaimed number), independent of the n-version history
     val q0 = LakeTable.probeCount.get()
-    assert(src.getOffset.map(_.json.trim.toLong).contains(n.toLong))
+    assert(latest.map(_.json.trim.toLong).contains(n.toLong))
     assert(LakeTable.probeCount.get() - q0 <= 2L,
       s"a quiet trigger must probe O(1), not O(history): " +
       s"${LakeTable.probeCount.get() - q0} probes")
@@ -585,7 +585,7 @@ class LakeStreamSpec extends SparkTestBase {
     assert(LakeTable.append(spark, dir,
       Seq((99L, 99L)).toDF("k", "v"))(_ => None) == Right(n + 1L))
     val q1 = LakeTable.probeCount.get()
-    assert(src.getOffset.map(_.json.trim.toLong).contains(n + 1L))
+    assert(latest.map(_.json.trim.toLong).contains(n + 1L))
     assert(LakeTable.probeCount.get() - q1 <= 3L,
       s"discovering one new version must probe the window only: " +
       s"${LakeTable.probeCount.get() - q1} probes")
@@ -784,6 +784,55 @@ class LakeStreamSpec extends SparkTestBase {
     assert(feedRows.toSeq == Seq(3, 3),
       s"6 versions at cap 3 drain in two feed batches: $feedRows")
     spark.sql(s"DROP TABLE $cat.default.an1")
+  }
+
+  test("the three stream readers split one backlog into the same " +
+       "version windows at maxVersionsPerTrigger=2, continuous and " +
+       "AvailableNow") {
+    import spark.implicits._
+    import org.apache.spark.sql.streaming.{DataStreamReader, Trigger}
+    val cat = "graft_lake_paritycat"
+    val wh = Files.createTempDirectory("graft_lake_whparity_").toString
+    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.LakeCatalog")
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+    val dir = java.nio.file.Paths.get(wh, "default", "p1").toString
+    // five one-row versions: row k lands in version k, so a batch's set
+    // of k IS its version set on the rows stream and the feeds alike
+    for (i <- 1 to 5)
+      assert(LakeTable.append(spark, dir,
+        Seq((i.toLong, i * 10L)).toDF("k", "v"))(_ => None)
+        == Right(i.toLong))
+    def windows(open: DataStreamReader => DataFrame,
+                availableNow: Boolean): Seq[Set[Long]] = {
+      val out = mutable.ArrayBuffer.empty[Set[Long]]
+      val cp = Files.createTempDirectory("graft_parity_cp_").toString
+      val w = open(spark.readStream.option("maxVersionsPerTrigger", "2"))
+        .writeStream.option("checkpointLocation", cp)
+        .foreachBatch { (df: DataFrame, _: Long) =>
+          val ks = df.select("k").collect().map(_.getLong(0)).toSet
+          if (ks.nonEmpty) out.synchronized { out += ks }
+          ()
+        }
+      if (availableNow) {
+        val q = w.trigger(Trigger.AvailableNow()).start()
+        assert(q.awaitTermination(120000),
+          "an AvailableNow query must stop by itself")
+      } else {
+        val q = w.start()
+        try q.processAllAvailable() finally q.stop()
+      }
+      out.toSeq
+    }
+    val readers = Seq[(String, DataStreamReader => DataFrame)](
+      "format(graft-lake)" ->
+        (_.format("graft-lake").option("path", dir).load()),
+      "readStream.table" -> (_.table(s"$cat.default.p1")),
+      "t.changes" -> (_.table(s"$cat.default.p1.changes")))
+    for ((name, open) <- readers; availableNow <- Seq(false, true))
+      assert(windows(open, availableNow) ==
+               Seq(Set(1L, 2L), Set(3L, 4L), Set(5L)),
+        s"$name, availableNow=$availableNow")
+    spark.sql(s"DROP TABLE $cat.default.p1")
   }
 
   test("startingTimestamp (r14): resolves to the newest version at or " +

@@ -1104,6 +1104,32 @@ class SourceFormatSpec extends SparkTestBase {
       spark.sql(s"DROP TABLE $cat.default.$t"))
   }
 
+  test("general MERGE on a key and a column whose names hold a backtick") {
+    import graft.sources.LakeTable
+    import spark.implicits._
+    val cat = "graft_lake_tickcat"
+    val wh = Files.createTempDirectory("graft_lake_whtick_").toString
+    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.LakeCatalog")
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+    val dir = java.nio.file.Paths.get(wh, "default", "tk").toString
+    (1L to 3L).map(k => (k, k * 10L)).toDF("k`x", "v`y")
+      .createOrReplaceTempView("tick_t_src")
+    spark.sql(s"CREATE TABLE $cat.default.tk AS SELECT * FROM tick_t_src")
+    (2L to 4L).map(k => (k, k * 100L)).toDF("k`x", "v`y")
+      .createOrReplaceTempView("tick_s")
+    // a non-identity UPDATE takes the general (conditional) MERGE path
+    spark.sql(s"""MERGE INTO $cat.default.tk AS t USING tick_s AS s
+      ON t.`k``x` = s.`k``x`
+      WHEN MATCHED THEN UPDATE SET `v``y` = t.`v``y` + s.`v``y`
+      WHEN NOT MATCHED THEN INSERT (`k``x`, `v``y`)
+        VALUES (s.`k``x`, s.`v``y`)""")
+    assert(LakeTable.currentVersion(dir).contains(2L))
+    val after = spark.table(s"$cat.default.tk").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(after == Map(1L -> 10L, 2L -> 220L, 3L -> 330L, 4L -> 400L),
+      s"merged: $after")
+  }
+
   test("general MERGE shapes (r13): conditional clauses, partial " +
        "assignments, partial INSERT, NOT MATCHED BY SOURCE — one DV " +
        "commit; subqueries still refuse") {
