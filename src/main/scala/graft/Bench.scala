@@ -10,6 +10,16 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = Sessions.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
+    // every swallowed failure keeps its cause: `name: Class: first line`
+    // on stderr, and the last cause per name in BENCH_DETAIL `failures`
+    val failures = scala.collection.mutable.LinkedHashMap[String, String]()
+    def noteFailure(name: String, e: Throwable): Unit = {
+      val line = Option(e.getMessage).flatMap(_.linesIterator.nextOption())
+        .getOrElse("")
+      val cause = s"${e.getClass.getName}: $line"
+      System.err.println(s"$name: $cause")
+      failures(name) = cause
+    }
     // warm the JVM/codegen path once, and touch every fixture table so no
     // query pays first-listing/footer-read costs inside its measurement
     SparkEntry.queries.get("q_agg_basic").foreach(fn => fn(spark, sfDir).count())
@@ -17,7 +27,7 @@ object Bench {
     for (t <- Seq("region", "nation", "customer", "supplier", "part", "orders",
                   "lineitem", "events", "documents", "embeddings")) {
       try graft.ops.Tables.byName(spark, sfDir, t).count()
-      catch { case _: Throwable => () }
+      catch { case e: Throwable => noteFailure(s"table:$t", e) }
     }
     // build the shared purchase-graph artifacts ONCE, here, and report the
     // cost as its own metric: the suite semantics are "derive the graph
@@ -34,7 +44,7 @@ object Bench {
         graft.ops.PurchaseGraph.thinnedNamed(spark, sfDir).count()
         graft.ops.PurchaseGraph.lpaLabels(spark, sfDir).count()
         graft.ops.PurchaseGraph.triangle(spark, sfDir)._2.count()
-      } catch { case _: Throwable => () }
+      } catch { case e: Throwable => noteFailure("graph_warm", e) }
       (System.nanoTime() - t0) / 1e9
     }
     // same treatment for the text cores (capped grams, minhash
@@ -50,7 +60,7 @@ object Bench {
         graft.ops.DocCore.dupSpans(spark, sfDir).count()
         graft.ops.DocCore.lmScores(spark, sfDir).count()
         graft.ops.DocCore.clusters(spark, sfDir).count()
-      } catch { case _: Throwable => () }
+      } catch { case e: Throwable => noteFailure("doc_warm", e) }
       (System.nanoTime() - t0) / 1e9
     }
     // optional comma-separated subset for targeted profiling
@@ -69,7 +79,7 @@ object Bench {
       spark.catalog.clearCache()
       val t0 = System.nanoTime()
       val ok = try { fn(spark, sfDir).count(); true }
-               catch { case _: Throwable => false }
+               catch { case e: Throwable => noteFailure(name, e); false }
       ((System.nanoTime() - t0) / 1e9, ok)
     }
     // calm gauge (r8 verdict ask #8): one fixed cheap query measured
@@ -323,6 +333,8 @@ object Bench {
          |"scan_max":${if (scanMax == Double.MaxValue) "null" else r3(scanMax)}},
          |"failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")},
          |"remeasured":${remeasured.map("\"" + _ + "\"").mkString("[", ",", "]")},
+         |"failures":${new com.fasterxml.jackson.databind.ObjectMapper()
+           .writeValueAsString(failures.asJava)},
          |"queries":$qs}""".stripMargin.replace("\n", "")
     try {
       val p = java.nio.file.Paths.get(

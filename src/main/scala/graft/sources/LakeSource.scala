@@ -82,8 +82,9 @@ class LakeSource extends RelationProvider with CreatableRelationProvider
   /** STREAM write — `df.writeStream.format("graft-lake")`: micro-batches
     * commit through the write-audit-publish protocol with the engine's
     * batchId as the manifest-recorded per-sink watermark (exactly-once
-    * across epoch replay). Options: `commitMode` (append | merge),
-    * `layoutBy`, `statsBy`, `keys` (merge), `sinkName` (watermark
+    * across epoch replay). Options: `commitMode` (append | merge | cdc |
+    * dvmerge, see [[LakeStreamSink]]), `layoutBy` (required by merge and
+    * cdc), `statsBy`, `keys` (merge, cdc, dvmerge), `sinkName` (watermark
     * namespace when several queries write one table). */
   override def createSink(sqlContext: SQLContext,
                           parameters: Map[String, String],

@@ -87,13 +87,14 @@ object LakeTable {
     * conflict-detection anchor for [[commitSerialized]]. `batches` maps
     * SINK ID → applied stream-epoch watermark, recorded IN the manifest so
     * a publish atomically lands both the data and the fact that epoch N of
-    * that sink has been applied — the idempotence handle for
-    * [[graft.streaming.StreamOps.mergeBatchIntoLake]]; multiple concurrent
-    * sinks onto one table each ride their own key ([[stage]] carries the
-    * base version's map forward, so one sink's commit never erases
-    * another's watermark). `schema` is the staged version's columns,
-    * derived DETERMINISTICALLY (base-manifest schema merged with the
-    * fresh files' schema — never a footer race over mixed files).
+    * that sink has been applied — the idempotence handle of every
+    * streaming sink and of the keyed upserts ([[partialRewrite]]);
+    * multiple concurrent sinks onto one table each ride their own key
+    * ([[stage]] carries the base version's map forward, so one sink's
+    * commit never erases another's watermark). `schema` is the staged
+    * version's columns, derived DETERMINISTICALLY (base-manifest schema
+    * merged with the fresh files' schema — never a footer race over
+    * mixed files).
     * `op` names the action for the change feed ([[changesBetween]]):
     * "optimize" versions rewrite layout only and emit no logical changes.
     * The Jackson annotations map this class onto the full-snapshot
@@ -710,7 +711,8 @@ object LakeTable {
     if (snap.files.isEmpty && recorded.nonEmpty)
       return toLogical(knownFrame(spark, dir, Nil, recorded, Map.empty),
                        snap.renames)
-    require(snap.files.nonEmpty, s"$what lists no files in $dir")
+    require(snap.files.nonEmpty,
+      s"$what has no files and no recorded schema in $dir")
     // read under the RECORDED schema: columns come back in the
     // manifest-recorded order regardless of physical file layout, and a
     // carried pre-evolution file null-fills the columns it predates —
@@ -1795,16 +1797,24 @@ object LakeTable {
     }
   }
 
+  /** How a [[commitSerialized]] loop ended: `version` is live, and
+    * `published` says whether this commit minted it — false when the
+    * plan found nothing to publish (`version` is then the base the plan
+    * saw, and nothing was written). */
+  private[graft] final case class Committed(version: Long, published: Boolean)
+
   /** SERIALIZABLE commit loop (r9): `plan(base)` stages a version against
     * the published version `base` (audit included — Left aborts the whole
-    * commit); the publish step detects any commit that landed after the
-    * plan and loops, re-planning against the new base, so a carry commit
-    * can never shadow a concurrently-published rewrite (the Delta/Iceberg
-    * optimistic-concurrency check). Plans are cached per base: a retry
-    * whose base did not move (claim-number race only) re-publishes the
-    * same staged files without re-staging. */
+    * commit, `Right(None)` is a no-op that publishes nothing and reports
+    * `base` as live); the publish step detects any commit that landed
+    * after the plan and loops, re-planning against the new base, so a
+    * carry commit can never shadow a concurrently-published rewrite (the
+    * Delta/Iceberg optimistic-concurrency check). Plans are cached per
+    * base: a retry whose base did not move (claim-number race only)
+    * re-publishes the same staged files without re-staging. */
   private[graft] def commitSerialized(dir: String)(
-      plan: Long => Either[String, Staged]): Either[String, Long] = {
+      plan: Long => Either[String, Option[Staged]])
+      : Either[String, Committed] = {
     var staged: Staged = null
     var attempts = 0
     while (attempts < 50) {
@@ -1816,12 +1826,13 @@ object LakeTable {
         // publish step conflict-checks against the stage's own base
         graft.ops.Prof("lake.commit.plan")(plan(base)) match {
           case Left(reason) => return Left(reason)
-          case Right(s) => staged = s
+          case Right(None) => return Right(Committed(base, published = false))
+          case Right(Some(s)) => staged = s
         }
       }
       testAfterPlanHook(attempts)
       graft.ops.Prof("lake.commit.publish")(tryPublishSerialized(staged)) match {
-        case Some(v) => return Right(v)
+        case Some(v) => return Right(Committed(v, published = true))
         case None => ()
       }
     }
@@ -1863,7 +1874,8 @@ object LakeTable {
     val fresh = stageFresh(spark, dir, df, layoutBy, statsBy)
     commitSerialized(dir) { base =>
       audit(spark, assemble(dir, base, fresh, Seq.empty, "overwrite"))(check)
-    }
+        .map(Some(_))
+    }.map(_.version)
   }
 
   /** Zero-rewrite APPEND: the new version's manifest carries every live
@@ -1883,7 +1895,8 @@ object LakeTable {
     commitSerialized(dir) { base =>
       val st = assemble(dir, base, fresh, filesOf(dir, base), "append")
       audit(spark, st.copy(batches = st.batches ++ batches))(check)
-    }
+        .map(Some(_))
+    }.map(_.version)
   }
 
   /** COPY INTO (r14) — Delta's IDEMPOTENT batch file ingestion: load
@@ -1979,22 +1992,22 @@ object LakeTable {
     Files.createDirectories(Paths.get(dir))
     val fresh = stageFresh(spark, dir, df, layoutBy, statsBy)
     val mine = newFiles.map(p => keyOf(p) -> 1L).toMap
-    val r = commitSerialized(dir) { base =>
+    commitSerialized(dir) { base =>
       // re-check against the SERIALIZED base: a racing copy that landed
       // first must not be double-loaded
       val already = batchesOf(dir, base).keySet
-      if (mine.keySet.subsetOf(already)) Left(DvNoop + base)
+      if (mine.keySet.subsetOf(already)) Right(None)
       else if (mine.keySet.exists(already.contains))
         Left("concurrent COPY INTO loaded part of this file set — " +
              "re-run to pick up only the remainder")
       else {
         val st = assemble(dir, base, fresh, filesOf(dir, base), "append")
         audit(spark, st.copy(batches = st.batches ++ mine))(check)
+          .map(Some(_))
       }
-    }
-    translateDvNoop(r).map(v =>
-      if (r.isLeft) (v, 0L, 0L) // noop sentinel: the race winner loaded
-      else (v, newFiles.length.toLong, fresh.rowTotal))
+    }.map(c =>
+      if (!c.published) (c.version, 0L, 0L) // the race winner loaded them
+      else (c.version, newFiles.length.toLong, fresh.rowTotal))
   }
 
   /** Single-pass sink APPEND (r11, verdict ask #4): stage FIRST, then
@@ -2022,7 +2035,8 @@ object LakeTable {
     else commitSerialized(dir) { base =>
       val st = assemble(dir, base, fresh, filesOf(dir, base), "append")
       audit(spark, st.copy(batches = st.batches ++ batches))(check)
-    }.map(Some(_))
+        .map(Some(_))
+    }.map(c => Some(c.version))
   }
 
   /** Commit parquet files ALREADY STAGED under `dir` (manifest-relative
@@ -2059,7 +2073,8 @@ object LakeTable {
         if (overwrite) Seq.empty else filesOf(dir, base),
         if (overwrite) "overwrite" else "append")
       audit(spark, st.copy(batches = st.batches ++ Map(sink -> batch)))(check)
-    }.map(Some(_))
+        .map(Some(_))
+    }.map(c => Some(c.version))
   }
 
   /** Partial-rewrite MERGE — the 100 TB upsert: `upserts` (one row per
@@ -2082,15 +2097,17 @@ object LakeTable {
     * layout values whose input files actually changed (an unchanged
     * value's staged output is reused verbatim), so two committers on
     * disjoint values converge with zero redundant data movement while
-    * overlapping committers re-merge against the winner's rewrite. */
+    * overlapping committers re-merge against the winner's rewrite. An
+    * empty `upserts` publishes nothing and returns the live version
+    * (refused when the table has no published version yet). */
   def mergePartial(spark: SparkSession, dir: String, upserts: DataFrame,
                    keys: Seq[String], layoutCol: String,
                    batch: Option[Long] = None,
                    statsBy: Seq[String] = Seq.empty,
                    sink: String = "")(
       check: DataFrame => Option[String]): Either[String, Long] =
-    partialRewrite(spark, dir, upserts, None, upserts, keys, layoutCol,
-                   batch, statsBy, sink, "merge")(check)
+    partialRewrite(spark, dir, upserts, cdc = false, keys, Some(layoutCol),
+                   batch, statsBy, sink)(check).flatMap(liveVersion(dir))
 
   /** Partial-rewrite CDC APPLY — [[mergePartial]]'s third action:
     * `changes` carries one row per key (the per-batch winner) with an
@@ -2102,58 +2119,22 @@ object LakeTable {
     * the key's live row sits under a DIFFERENT layout value than the 'D'
     * row claims, so its file was carried, not rewritten — the publish is
     * blocked with the offending count instead of silently resurrecting
-    * the row. Refuses to publish a version with zero files (a full-table
-    * delete needs schema-in-table-metadata, which this layout keeps in
-    * the manifest only for non-empty versions). */
+    * the row. Empty `changes` publish nothing, as in [[mergePartial]]. */
   def applyCdcPartial(spark: SparkSession, dir: String, changes: DataFrame,
                       keys: Seq[String], layoutCol: String,
                       batch: Option[Long] = None,
                       sink: String = "")(
       check: DataFrame => Option[String]): Either[String, Long] =
-    partialRewrite(spark, dir, changes.filter(col("op") =!= "D").drop("op"),
-                   Some(changes.filter(col("op") === "D")
-                     .select(keys.map(byName): _*)),
-                   changes.drop("op"),
-                   keys, layoutCol, batch, Seq.empty, sink, "cdc")(check) match {
-      case Left(r) if r.contains("lists no files") =>
-        Left("empty table after CDC apply (full-table delete needs " +
-             "schema-in-manifest support)")
-      case other => other
-    }
+    partialRewrite(spark, dir, changes, cdc = true, keys, Some(layoutCol),
+                   batch, Seq.empty, sink)(check).flatMap(liveVersion(dir))
 
-  /** Single-pass sink MERGE (r11): [[mergePartial]] with the
-    * empty-epoch no-op riding the touched-value collect — `Right(None)`
-    * = empty batch, nothing published, watermark untouched. */
-  private[sources] def sinkMerge(spark: SparkSession, dir: String,
-                                 upserts: DataFrame, keys: Seq[String],
-                                 layoutCol: String, batch: Long,
-                                 statsBy: Seq[String], sink: String)(
-      check: DataFrame => Option[String]): Either[String, Option[Long]] =
-    partialRewrite(spark, dir, upserts, None, upserts, keys, layoutCol,
-                   Some(batch), statsBy, sink, "merge", emptyNoOp = true)(
-      check).map(v => if (v == 0L) None else Some(v))
-
-  /** Single-pass sink CDC APPLY (r11): [[applyCdcPartial]] with the
-    * empty-epoch no-op — `Right(None)` = empty batch, nothing
-    * published, watermark untouched. */
-  private[sources] def sinkCdc(spark: SparkSession, dir: String,
-                               changes: DataFrame, keys: Seq[String],
-                               layoutCol: String, batch: Long,
-                               sink: String)(
-      check: DataFrame => Option[String]): Either[String, Option[Long]] =
-    partialRewrite(spark, dir, changes.filter(col("op") =!= "D").drop("op"),
-                   Some(changes.filter(col("op") === "D")
-                     .select(keys.map(byName): _*)),
-                   changes.drop("op"),
-                   keys, layoutCol, Some(batch), Seq.empty, sink, "cdc",
-                   emptyNoOp = true)(check) match {
-      case Left(r) if r.contains("lists no files") =>
-        Left("empty table after CDC apply (full-table delete needs " +
-             "schema-in-manifest support)")
-      case Left(other) => Left(other)
-      case Right(0L) => Right(None)
-      case Right(v) => Right(Some(v))
-    }
+  /** The live version a direct upsert answers with. A no-op on a
+    * directory with no published version has no version to answer (0 is
+    * not one `read` serves), so it refuses; the streaming callers take
+    * [[partialRewrite]]'s [[Committed]] and skip the epoch instead. */
+  private def liveVersion(dir: String)(c: Committed): Either[String, Long] =
+    if (c.version > 0L) Right(c.version)
+    else Left(s"empty change set and $dir has no published version")
 
   /** DELETE WHERE via DELETION VECTORS (r11 prototype, verdict ask #9):
     * instead of rewriting every file that holds a matching row — the
@@ -2183,7 +2164,7 @@ object LakeTable {
                     predicate: org.apache.spark.sql.Column,
                     strict: Boolean = false)(
       check: DataFrame => Option[String]): Either[String, Long] = {
-    val r = commitSerialized(dir) { base =>
+    commitSerialized(dir) { base =>
       if (base == 0L) Left(s"no published version to delete from in $dir")
       else {
         val snap = readManifest(dir, base).get
@@ -2197,7 +2178,7 @@ object LakeTable {
         if (freshPos.isEmpty) {
           if (strict)
             Left(s"DELETE matched no live rows in $dir: nothing to publish")
-          else Left(DvNoop + base)
+          else Right(None)
         } else {
           val (sidecars, dvRows, dvHidden) =
             writeDvSidecars(spark, dir, freshPos, files.length)
@@ -2221,25 +2202,10 @@ object LakeTable {
             Left(s"audit failed for v${st.version}: $leak " +
                  "predicate-matching row(s) survive the deletion vector")
           else check(stagedDf)
-            .map(r => s"audit failed for v${st.version}: $r").toLeft(st)
+            .map(r => s"audit failed for v${st.version}: $r").toLeft(Some(st))
         }
       }
-    }
-    translateDvNoop(r)
-  }
-
-  /** In-band no-op channel for the DV DML ops: [[commitSerialized]]'s
-    * plan can only abort via Left, so an empty-match no-op rides a
-    * sentinel no real audit message can spell (NUL prefix) and
-    * [[translateDvNoop]] turns it back into success-with-the-live-
-    * version, publishing nothing. */
-  private val DvNoop = "\u0000dv-noop:"
-
-  private def translateDvNoop(
-      r: Either[String, Long]): Either[String, Long] = r match {
-    case Left(m) if m.startsWith(DvNoop) =>
-      Right(m.substring(DvNoop.length).toLong)
-    case other => other
+    }.map(_.version)
   }
 
   /** Shard-write a `(file, pos)` position set as `.dv` sidecar files
@@ -2350,7 +2316,7 @@ object LakeTable {
                     strict: Boolean = false)(
       check: DataFrame => Option[String]): Either[String, Long] = {
     require(set.nonEmpty, "UPDATE requires at least one assignment")
-    val r = commitSerialized(dir) { base =>
+    commitSerialized(dir) { base =>
       if (base == 0L) Left(s"no published version to update in $dir")
       else {
         val snap = readManifest(dir, base).get
@@ -2368,7 +2334,7 @@ object LakeTable {
         if (freshPos.isEmpty) {
           if (strict)
             Left(s"UPDATE matched no live rows in $dir: nothing to publish")
-          else Left(DvNoop + base)
+          else Right(None)
         } else {
           val live = liveT.drop(fCol, pCol)
           val cols = live.columns.toSeq
@@ -2408,11 +2374,10 @@ object LakeTable {
                      s"$after after")
               else check(df)
             } else check(df)
-          }
+          }.map(Some(_))
         }
       }
-    }
-    translateDvNoop(r)
+    }.map(_.version)
   }
 
   /** REPLACE WHERE via DELETION VECTORS (r12) — Delta's `replaceWhere`:
@@ -2482,9 +2447,9 @@ object LakeTable {
                    "incoming row(s)")
             else check(df)
           } else check(df)
-        }
+        }.map(Some(_))
       }
-    }
+    }.map(_.version)
   }
 
   /** MERGE-DELETE via DELETION VECTORS (r12) — `MERGE ... WHEN MATCHED
@@ -2497,7 +2462,7 @@ object LakeTable {
                       keys: Seq[String])(
       check: DataFrame => Option[String]): Either[String, Long] = {
     require(keys.nonEmpty, "deleteMatchedDv requires at least one key")
-    translateDvNoop(commitSerialized(dir) { base =>
+    commitSerialized(dir) { base =>
       if (base == 0L) Left(s"no published version to delete from in $dir")
       else {
         val snap = readManifest(dir, base).get
@@ -2509,7 +2474,7 @@ object LakeTable {
         val freshPos = liveT
           .join(srcKeys, keys, "left_semi")
           .select(col(fCol).as("file"), col(pCol).as("pos"))
-        if (freshPos.isEmpty) Left(DvNoop + base)
+        if (freshPos.isEmpty) Right(None)
         else {
           val (sidecars, dvRows, dvHidden) =
             writeDvSidecars(spark, dir, freshPos, files.length)
@@ -2527,10 +2492,10 @@ object LakeTable {
             if (leak > 0L)
               Some(s"$leak matched key row(s) survive the deletion vector")
             else check(df)
-          }
+          }.map(Some(_))
         }
       }
-    })
+    }.map(_.version)
   }
 
   /** MERGE (upsert) via DELETION VECTORS (r12) — the merge-on-read twin
@@ -2547,39 +2512,15 @@ object LakeTable {
     * re-reads the staged version through its vectors and blocks publish
     * unless the count equation holds exactly (live − matched + |source|)
     * and no source key is duplicated in the result. An empty source is
-    * a no-op success. OPTIMIZE purges as usual; the feed replays
-    * retract-matched + insert-source through the unified DV-diff rule. */
+    * a no-op success that publishes nothing (the streaming sink's empty
+    * epoch: watermark untouched). OPTIMIZE purges as usual; the feed
+    * replays retract-matched + insert-source through the unified DV-diff
+    * rule. */
   def mergeDv(spark: SparkSession, dir: String, source: DataFrame,
               keys: Seq[String],
               layoutBy: Option[String] = None,
               statsBy: Seq[String] = Seq.empty,
               batch: Option[Long] = None, sink: String = "")(
-      check: DataFrame => Option[String]): Either[String, Long] =
-    translateDvNoop(
-      mergeDvImpl(spark, dir, source, keys, layoutBy, statsBy,
-                  batch, sink)(check))
-
-  /** Single-pass sink DV-MERGE (r12): [[mergeDv]] with an empty epoch
-    * surfacing as `Right(None)` — nothing published, watermark
-    * untouched (the emptiness check rides the same one-pass source
-    * stats the merge needs anyway, no dedicated pre-pass). */
-  private[sources] def sinkMergeDv(spark: SparkSession, dir: String,
-                                   source: DataFrame, keys: Seq[String],
-                                   layoutBy: Option[String],
-                                   statsBy: Seq[String],
-                                   batch: Long, sink: String)(
-      check: DataFrame => Option[String]): Either[String, Option[Long]] =
-    mergeDvImpl(spark, dir, source, keys, layoutBy, statsBy,
-                Some(batch), sink)(check) match {
-      case Left(m) if m.startsWith(DvNoop) => Right(None)
-      case Left(other) => Left(other)
-      case Right(v) => Right(Some(v))
-    }
-
-  private def mergeDvImpl(spark: SparkSession, dir: String,
-                          source: DataFrame, keys: Seq[String],
-                          layoutBy: Option[String], statsBy: Seq[String],
-                          batch: Option[Long], sink: String)(
       check: DataFrame => Option[String]): Either[String, Long] = {
     require(keys.nonEmpty, "mergeDv requires at least one key column")
     Files.createDirectories(Paths.get(dir))
@@ -2602,7 +2543,7 @@ object LakeTable {
                org.apache.spark.sql.functions.when(col("m"), col("count"))
                  .otherwise(lit(0L))).cast("long").as("mx")).head
       val srcCount = if (kstats.isNullAt(0)) 0L else kstats.getLong(0)
-      if (srcCount == 0L) Left(DvNoop + base)
+      if (srcCount == 0L) Right(None)
       else {
         require(kstats.isNullAt(1) || kstats.getLong(1) <= 1L,
           "mergeDv source must carry each key at most once")
@@ -2613,7 +2554,7 @@ object LakeTable {
                             Seq.empty, statsBy, "dvmerge")
           val st = st0.copy(batches =
             st0.batches ++ batch.map(b => sink -> b).toMap)
-          audit(spark, st)(check)
+          audit(spark, st)(check).map(Some(_))
         } else {
           val snap = readManifest(dir, base).get
           val (files, recorded, prevDv) = (snap.files, snap.schema, snap.dv)
@@ -2679,11 +2620,11 @@ object LakeTable {
                 else check(df)
               }
             }
-          }
+          }.map(Some(_))
           }
         }
       }
-    }
+    }.map(_.version)
   }
 
   /** GENERAL conditional MERGE via DELETION VECTORS (r13) — the full SQL
@@ -2735,7 +2676,7 @@ object LakeTable {
         acc && !cTrue(prev))
     def anyOf(conds: Seq[Option[String]]): org.apache.spark.sql.Column =
       conds.map(cTrue).reduceOption(_ || _).getOrElse(lit(false))
-    translateDvNoop(commitSerialized(dir) { base =>
+    commitSerialized(dir) { base =>
       if (base == 0L) Left(s"no published version to merge into in $dir")
       else {
         val srcKeys = source.select(keys.map(byName): _*).distinct()
@@ -2871,7 +2812,7 @@ object LakeTable {
           .getOrElse((Seq.empty[String], Map.empty[String, Long],
                       Map.empty[String, Long]))
         val hiddenCount = dvRows.values.sum
-        if (hiddenCount == 0L && freshCount == 0L) Left(DvNoop + base)
+        if (hiddenCount == 0L && freshCount == 0L) Right(None)
         else {
           // the staged read is in PHYSICAL names (stageFresh writes
           // files that way forever); a declared CHECK constraint is
@@ -2917,29 +2858,43 @@ object LakeTable {
                          s"$expect, staged reads $after")
                   else check(df)
                 }
-              }
+              }.map(Some(_))
           }
         }
       }
-    })
+    }.map(_.version)
   }
 
-  /** Shared partial-rewrite engine for [[mergePartial]] /
-    * [[applyCdcPartial]]. `upserts` re-enter; `deleted` keys (CDC only)
-    * tombstone; `touching` is the frame whose layout values define the
-    * rewrite set — for CDC that is ALL change rows (a delete's claimed
-    * value must rewrite even when nothing upserts into it). All change
-    * rows anti-join the rewritten base so updates replace and deletes
-    * stay gone. */
-  private def partialRewrite(spark: SparkSession, dir: String,
-                             upserts: DataFrame, deleted: Option[DataFrame],
-                             touching: DataFrame,
-                             keys: Seq[String], layoutCol: String,
-                             batch: Option[Long], statsBy: Seq[String],
-                             sink: String, op: String,
-                             emptyNoOp: Boolean = false)(
-      check: DataFrame => Option[String]): Either[String, Long] = {
+  /** The one keyed-upsert engine: [[mergePartial]], [[applyCdcPartial]]
+    * and the foreachBatch helpers of [[graft.streaming.StreamOps]] all
+    * commit through it. `changes` carries one row per key; under `cdc`
+    * its `op` column makes 'D' rows TOMBSTONE their key and every other
+    * row upsert. The rewrite set is the live files whose `layoutCol`
+    * value the change set touches — every other file carries verbatim;
+    * with no layout column every live file rewrites (the full-table
+    * upsert for unlayouted tables). All change keys anti-join the
+    * rewritten base so updates replace and deletes stay gone. An empty
+    * change set publishes nothing (`published = false`, the live version
+    * stands), and a change set that empties the table publishes a
+    * zero-file version under the base's recorded schema (behavior 34's
+    * full truncate) — only a schema-less legacy table refuses. */
+  private[graft] def partialRewrite(spark: SparkSession, dir: String,
+                                    changes: DataFrame, cdc: Boolean,
+                                    keys: Seq[String],
+                                    layoutCol: Option[String],
+                                    batch: Option[Long],
+                                    statsBy: Seq[String], sink: String)(
+      check: DataFrame => Option[String]): Either[String, Committed] = {
     Files.createDirectories(Paths.get(dir))
+    // `touching` is the frame whose layout values define the rewrite
+    // set — for CDC that is ALL change rows (a delete's claimed value
+    // must rewrite even when nothing upserts into it)
+    val (upserts, deleted, touching) =
+      if (!cdc) (changes, None, changes)
+      else (changes.filter(col("op") =!= "D").drop("op"),
+            Some(changes.filter(col("op") === "D")
+              .select(keys.map(byName): _*)),
+            changes.drop("op"))
     // PLANNER-PLANE collect, and the lake layer's sanctioned exemption
     // from the ops-layer "no collect()" rule (OpDef.scala): what crosses
     // the driver is the DISTINCT LAYOUT VALUES the batch touches —
@@ -2953,8 +2908,9 @@ object LakeTable {
     // driver-side set. limit(cap+1) bounds the collect itself.
     // multi-column layout (r14): the spec is comma-separated; touched
     // values are TUPLES in declaration order
-    val layoutCols = layoutColsOf(Some(layoutCol))
-    require(layoutCols.nonEmpty, "partial rewrite needs a layout column")
+    val layoutCols = layoutColsOf(layoutCol)
+    require(layoutCol.isEmpty || layoutCols.nonEmpty,
+      "partial rewrite needs a layout column")
     // NOT pinned (r16, measured): persisting the change-set frames for
     // the commit's duration looked attractive (they are evaluated by the
     // touched-value collect, the change-key anti-join, the staging write
@@ -2962,30 +2918,34 @@ object LakeTable {
     // columns, so the cache defeats per-phase column pruning — the
     // touched-value collect alone went 0.2 → 0.5 s/query and the whole
     // query net-regressed ~0.3 s. Each phase re-plans pruned instead.
-    val touchedRows = graft.ops.Prof("lake.pr.touchedCollect") {
-      touching.select(layoutCols.map(byName): _*).distinct()
-        .limit(maxTouchedLayoutValues + 1).collect()
-    }
-    require(touchedRows.length <= maxTouchedLayoutValues,
-      s"partial rewrite touches more than $maxTouchedLayoutValues " +
-      s"distinct '$layoutCol' values: that is a table-scale rewrite — " +
-      "use an overwrite commit (or raise the cap) instead")
-    // single-pass sink epochs (r11): the touched-value collect above
-    // already materialized the change set once — an empty set under
-    // emptyNoOp short-circuits to the sentinel (0L is never a real
-    // version) with nothing staged and the watermark untouched, so the
-    // streaming sink needs no dedicated isEmpty pre-pass
-    if (emptyNoOp && touchedRows.isEmpty) return Right(0L)
-    // a NULL layout value would route to Hive's default-partition path
-    // while String.valueOf renders "null" — the mismatch silently carries
-    // the stale file, so refuse loudly instead (real tables make the
-    // layout column NOT NULL for the same reason)
-    require(!touchedRows.exists(r => layoutCols.indices.exists(r.isNullAt)),
-      s"partial rewrite requires a non-null layout value on every change " +
-      s"row ('$layoutCol' has nulls)")
-    val touched: Set[Seq[String]] = touchedRows
-      .map(r => layoutCols.indices.map(i => String.valueOf(r.get(i))).toSeq)
-      .toSet
+    val touched: Set[Seq[String]] =
+      if (layoutCols.isEmpty)
+        // unlayouted: every live file carries the empty tuple, so one
+        // touched empty tuple rewrites them all
+        if (touching.isEmpty) Set.empty else Set(Seq.empty)
+      else {
+        val touchedRows = graft.ops.Prof("lake.pr.touchedCollect") {
+          touching.select(layoutCols.map(byName): _*).distinct()
+            .limit(maxTouchedLayoutValues + 1).collect()
+        }
+        require(touchedRows.length <= maxTouchedLayoutValues,
+          s"partial rewrite touches more than $maxTouchedLayoutValues " +
+          s"distinct '${layoutCol.get}' values: that is a table-scale " +
+          "rewrite — use an overwrite commit (or raise the cap) instead")
+        // a NULL layout value would route to Hive's default-partition
+        // path while String.valueOf renders "null" — the mismatch
+        // silently carries the stale file, so refuse loudly instead
+        // (real tables make the layout column NOT NULL for the same
+        // reason)
+        require(!touchedRows.exists(r => layoutCols.indices.exists(r.isNullAt)),
+          "partial rewrite requires a non-null layout value on every " +
+          s"change row ('${layoutCol.get}' has nulls)")
+        touchedRows.map(r =>
+          layoutCols.indices.map(i => String.valueOf(r.get(i))).toSeq).toSet
+      }
+    // the emptiness test rides the touched-value pass (single-pass sink
+    // epochs, r11): nothing to publish, watermark untouched
+    if (touched.isEmpty) return commitSerialized(dir)(_ => Right(None))
     val changeKeys = touching.select(keys.map(byName): _*).distinct()
     // incremental re-plan cache: per layout value TUPLE, the live input
     // files the staged output was computed from, and that staged output
@@ -2994,7 +2954,8 @@ object LakeTable {
     var stagedVals = Map.empty[Seq[String], Fresh]
     var planned = false
     var prevDv: Seq[String] = null
-    val result = commitSerialized(dir) { base =>
+    commitSerialized(dir) { base =>
+      val snap = readManifest(dir, base).getOrElse(Staged(dir, 0L, Seq.empty))
       // DV-AWARE rewrite (r12, lifts the r11 refusal): rewritten files
       // are read THROUGH the base version's deletion vectors — a raw
       // read would resurrect DV-deleted rows into the rewritten output.
@@ -3004,17 +2965,15 @@ object LakeTable {
       // remains the purge, but no purge-between is required any more —
       // a table taking streaming upserts AND fine-grained deletes
       // interleaves them freely.
-      val dvNow = dvOf(dir, base)
-      if (planned && prevDv != dvNow) {
+      if (planned && prevDv != snap.dv) {
         // the base's vector set moved under a re-plan: every staged
         // output was computed against the old vectors — start over
         stagedVals = Map.empty; prevInputs = Map.empty; planned = false
       }
-      prevDv = dvNow
-      val live = filesOf(dir, base)
+      prevDv = snap.dv
       // a file rewrites when its layout tuple is touched OR it carries
       // no complete tuple (flat/legacy layout — conservative rewrite)
-      val (rewriteFiles, carried) = live.partition { f =>
+      val (rewriteFiles, carried) = snap.files.partition { f =>
         val vs = layoutValuesOf(f)
         vs.length != layoutCols.length || touched.contains(vs)
       }
@@ -3036,17 +2995,20 @@ object LakeTable {
             layoutCols.zip(t).map { case (c, v) =>
               byName(c).cast("string") === lit(v)
             }.reduce(_ && _)).reduce(_ || _))
+        // the rewritten files read under the base's RECORDED schema
+        // (readFiles): a footer-inferred schema over files written
+        // before and after an ADD COLUMNS / type widening is whichever
+        // footer Spark happens to sample
         val baseRows =
           if (staleFiles.isEmpty) ups.limit(0)
-          else toLogical(applyDv(spark, dir, spark.read
-            .parquet(staleFiles.map(f => Paths.get(dir, f).toString): _*),
-            dvNow), renamesOf(dir, base))
+          else readFiles(spark, dir, snap.copy(files = staleFiles),
+                         s"version $base")
             // the FULL change-key set anti-joins (not just the stale
             // values'): a key whose change row claims a different layout
             // value than it is stored under must still leave its old row
             .join(changeKeys, keys, "left_anti")
         val fresh = stageFresh(spark, dir, baseRows.unionByName(ups),
-                               Some(layoutCol), statsBy,
+                               layoutCol, statsBy,
                                rebalance = false) // stale-file-bounded
         val byVal = fresh.files.groupBy(f =>
           if (hasFlat) FLAT else layoutValuesOf(f) match {
@@ -3065,32 +3027,38 @@ object LakeTable {
         planned = true
       }
       val sortedVals = stagedVals.toSeq.sortBy(_._1.mkString("\u0000"))
+      // a rewrite that staged no file (every row deleted) keeps the
+      // base's recorded schema, so the emptied table still reads with
+      // its shape and the next change set repopulates it
       val freshAll = Fresh(
         sortedVals.flatMap(_._2.files),
         stagedVals.values.find(_.schema.nonEmpty)
-          .map(_.schema).getOrElse(Seq.empty),
+          .map(_.schema).getOrElse(snap.schema),
         sortedVals.flatMap(_._2.stats),
         sortedVals.flatMap(_._2.rows).toMap)
-      val st0 = assemble(dir, base, freshAll, carried, op)
+      val st0 = assemble(dir, base, freshAll, carried,
+                         if (cdc) "cdc" else "merge")
       val st = st0.copy(batches =
         st0.batches ++ batch.map(b => sink -> b).toMap)
-      if (st.files.isEmpty)
+      if (st.files.isEmpty && st.schema.isEmpty)
         Left(s"audit failed for v${st.version}: staged version lists no " +
-             s"files in $dir")
+             s"files and $dir records no schema (legacy schema-less table)")
       else audit(spark, st) { df =>
-        check(df).orElse(deleted.flatMap { d =>
+        check(df).orElse(deleted.filter(_ => layoutCol.nonEmpty).flatMap { d =>
           // ghost-undelete gate: no tombstoned key may survive anywhere
           // in the staged version (carried files included) — the failure
-          // mode when a key's layout value mutated between versions
+          // mode when a key's layout value mutated between versions, or
+          // a change set carrying a key as both upsert and delete. The
+          // unlayouted callers (StreamOps) fold the batch to one row per
+          // key and audit key uniqueness instead
           val ghosts = df.join(d, keys, "left_semi").count()
           if (ghosts == 0L) None
           else Some(s"$ghosts tombstoned key(s) still present after CDC " +
                     "apply: a 'D' row's layout value does not match the " +
                     "value its key is stored under (ghost undelete)")
         })
-      }
+      }.map(Some(_))
     }
-    result
   }
 
   /** OPTIMIZE — the compaction ACTION the q_layout_compaction planner
@@ -3122,7 +3090,7 @@ object LakeTable {
     // rows — the stalest lost update of all. On conflict the rewrite
     // re-reads the new base (data changed; nothing staged is reusable
     // by construction).
-    translateDvNoop(commitSerialized(dir) { base =>
+    commitSerialized(dir) { base =>
       val base0 = readManifest(dir, base).get
       val (files, rows, hiddenMap, prevDv, recorded) = (base0.files,
         base0.rows, base0.hidden, base0.dv, base0.schema)
@@ -3153,7 +3121,7 @@ object LakeTable {
           (compact ++ (small diff smallRewrite),
            vectored ++ smallRewrite)
         }
-      if (rewrite.isEmpty) Left(DvNoop + base) // fully compacted: no-op
+      if (rewrite.isEmpty) Right(None) // fully compacted: no-op
       else {
         // the REWRITE SET read through the base's vectors in LOGICAL
         // names — carried files are never opened
@@ -3197,9 +3165,9 @@ object LakeTable {
             else fresh.rowTotal
           if (m == n) None
           else Some(s"compaction must conserve rows: $n before, $m after")
-        }
+        }.map(Some(_))
       }
-    })
+    }.map(_.version)
 
   /** RESTORE — Delta's `RESTORE TABLE ... TO VERSION AS OF` (r9): re-
     * publish a retained version's EXACT file list, schema, and stats as
@@ -3227,11 +3195,11 @@ object LakeTable {
           // data) back, so its tombstone lifts; all other tombstones stay
           // (reuse is still unsafe for them)
           val back = old.schema.map(_.name).toSet
-          Right(old.copy(version = base + 1L, batches = batchesOf(dir, base),
-            baseVersion = base, op = "restore",
-            dropped = (old.dropped ++ droppedOf(dir, base))
-              .distinct.filterNot(back.contains)))
-        }
+          Right(Some(old.copy(version = base + 1L,
+            batches = batchesOf(dir, base), baseVersion = base,
+            op = "restore", dropped = (old.dropped ++ droppedOf(dir, base))
+              .distinct.filterNot(back.contains))))
+        }.map(_.version)
     }
   }
 
@@ -3325,12 +3293,12 @@ object LakeTable {
               try structOf(extended)
               catch { case e: Exception =>
                 return Left(s"ADD COLUMNS rejected: ${e.getMessage}") }
-              Right(snap.copy(version = base + 1L, schema = extended,
-                baseVersion = base, op = "alter"))
+              Right(Some(snap.copy(version = base + 1L, schema = extended,
+                baseVersion = base, op = "alter")))
           }
         }
       }
-    }
+    }.map(_.version)
   }
 
   /** `ALTER TABLE ... ALTER COLUMN ... TYPE` (r14, verdict ask #3) —
@@ -3387,12 +3355,12 @@ object LakeTable {
                 if (c.name == phys) c.copy(sqlType = newType.trim.toUpperCase)
                 else c
               }
-              Right(snap.copy(version = base + 1L, schema = widened,
-                baseVersion = base, op = "alter"))
+              Right(Some(snap.copy(version = base + 1L, schema = widened,
+                baseVersion = base, op = "alter")))
           }
         }
       }
-    }
+    }.map(_.version)
   }
 
   /** `ALTER TABLE ... DROP COLUMN` (r13) — METADATA-ONLY via column
@@ -3424,7 +3392,7 @@ object LakeTable {
             Left(s"DROP COLUMN: cannot drop the only column of $dir")
           else {
             val phys = physicalNameOf(renames, name)
-            Right(snap.copy(version = base + 1L,
+            Right(Some(snap.copy(version = base + 1L,
               schema = recorded.filterNot(_.name == phys),
               // defensive split (r14, ADVICE r13): statsOf tolerates
               // malformed entries with a None case — this filter must
@@ -3435,11 +3403,11 @@ object LakeTable {
               },
               baseVersion = base, op = "alter",
               renames = renames - phys,
-              dropped = (snap.dropped :+ phys).distinct))
+              dropped = (snap.dropped :+ phys).distinct)))
           }
         }
       }
-    }
+    }.map(_.version)
   }
 
   /** `ALTER TABLE ... RENAME COLUMN` (r13, verdict ask #4) — a
@@ -3478,15 +3446,15 @@ object LakeTable {
               Left(s"RENAME COLUMN: '$to' collides with an existing " +
                    s"(or dropped) column in $dir")
             else
-              Right(snap.copy(version = base + 1L, baseVersion = base,
+              Right(Some(snap.copy(version = base + 1L, baseVersion = base,
                 op = "alter",
                 renames =
                   if (renameBack) renames - phys
-                  else renames + (phys -> to)))
+                  else renames + (phys -> to))))
           }
         }
       }
-    }
+    }.map(_.version)
   }
 
   // ---- change feed (r9) -------------------------------------------------

@@ -751,52 +751,8 @@ object StreamOps {
     * so replay-skip covers them with no extra machinery. */
   def applyCdcIntoLake(spark: SparkSession, dir: String, batch: DataFrame,
                        keys: Seq[String], batchId: Long,
-                       sink: String = ""): Option[Long] = {
-    import graft.sources.LakeTable
-    // an empty micro-batch (watermark-only advance) must not re-stage
-    // the whole table as a fresh version — skip without consuming the
-    // batchId watermark (a later replay with rows applies normally)
-    if (LakeTable.appliedBatch(dir, sink).exists(_ >= batchId)
-        || batch.isEmpty) None
-    else {
-      val winner = latestPerKey(batch, keys)
-      val upserts = winner.filter(col("op") =!= "D").drop("op")
-      val touched = winner.select(keys.map(LakeTable.byName): _*)
-      // SERIALIZED (r9): the merge re-plans against the live version if a
-      // concurrent commit (another sink, a compaction, a batch writer)
-      // lands between the base read and the publish — the full-rewrite
-      // twin of the optimistic-concurrency check mergePartial carries
-      LakeTable.commitSerialized(dir) { base =>
-        val merged =
-          if (base == 0L) upserts
-          else
-            // drop EVERY touched key from the base (deletes stay gone,
-            // updates re-enter from the batch side), then add the upserts
-            LakeTable.readVersion(spark, dir, base)
-              .join(touched, keys, "left_anti")
-              .unionByName(upserts)
-        val st0 = LakeTable.stageAt(spark, dir, base, merged, None,
-                                    Seq.empty, Seq.empty, "cdc")
-        val st = st0.copy(batches = st0.batches + (sink -> batchId))
-        // FULL-TRUNCATE publishes (r15, behavior 34): a CDC epoch that
-        // tombstones every key stages zero rows — legal since the
-        // declared schema rides the manifest (Staged.schema carries the
-        // base's columns forward even with no fresh files), so the
-        // published empty version still reads with the right shape and
-        // the next epoch repopulates. Pre-r14 this refused because the
-        // layout kept schema only in data files. A truncate against an
-        // ALREADY-schema-less legacy table (base 0, empty batch upserts)
-        // still refuses — there is no schema to carry.
-        if (st.files.isEmpty && st.schema.isEmpty)
-          Left("empty table after CDC apply with no recorded schema " +
-               "(legacy schema-less table)")
-        else LakeTable.audit(spark, st)(uniqueKeys(keys, "CDC apply"))
-      } match {
-        case Right(v) => Some(v)
-        case Left(reason) => throw new IllegalStateException(reason)
-      }
-    }
-  }
+                       sink: String = ""): Option[Long] =
+    upsertEpoch(spark, dir, batch, keys, None, cdc = true, batchId, sink)
 
   /** Streaming MERGE (upsert) into a [[graft.sources.LakeTable]] —
     * behavior 30, the streaming half of the write-audit-publish sink:
@@ -825,34 +781,8 @@ object StreamOps {
     * the same manifest. */
   def mergeBatchIntoLake(spark: SparkSession, dir: String, batch: DataFrame,
                          keys: Seq[String], batchId: Long,
-                         sink: String = ""): Option[Long] = {
-    import graft.sources.LakeTable
-    // an empty micro-batch (watermark-only advance) must not re-stage
-    // the whole table as a fresh version — skip without consuming the
-    // batchId watermark (a later replay with rows applies normally)
-    if (LakeTable.appliedBatch(dir, sink).exists(_ >= batchId)
-        || batch.isEmpty) None
-    else {
-      val winner = latestPerKey(batch, keys)
-      // SERIALIZED (r9): re-plans against the live version if a
-      // concurrent commit lands between the base read and the publish
-      LakeTable.commitSerialized(dir) { base =>
-        val merged =
-          if (base == 0L) winner
-          else LakeTable.readVersion(spark, dir, base)
-            .join(winner.select(keys.map(LakeTable.byName): _*), keys,
-                  "left_anti")
-            .unionByName(winner)
-        val st0 = LakeTable.stageAt(spark, dir, base, merged, None,
-                                    Seq.empty, Seq.empty, "merge")
-        val st = st0.copy(batches = st0.batches + (sink -> batchId))
-        LakeTable.audit(spark, st)(uniqueKeys(keys, "merge"))
-      } match {
-        case Right(v) => Some(v)
-        case Left(reason) => throw new IllegalStateException(reason)
-      }
-    }
-  }
+                         sink: String = ""): Option[Long] =
+    upsertEpoch(spark, dir, batch, keys, None, cdc = false, batchId, sink)
 
   /** Streaming MERGE into a LAYOUTED lake table — behavior 33 (r8): the
     * partial-rewrite twin of [[mergeBatchIntoLake]]. The table carries a
@@ -871,32 +801,22 @@ object StreamOps {
                                 compactOver: Option[Int] = None,
                                 sink: String = ""): Option[Long] = {
     import graft.sources.LakeTable
-    if (LakeTable.appliedBatch(dir, sink).exists(_ >= batchId)
-        || batch.isEmpty) None
-    else {
-      val winner = latestPerKey(batch, keys)
-      LakeTable.mergePartial(spark, dir, winner, keys, layoutCol,
-                             Some(batchId), sink = sink)(
-          uniqueKeys(keys, "partial merge")) match {
-        case Right(v) =>
-          // auto-OPTIMIZE: continuous ingest accretes one file per
-          // touched layout value per epoch; once the live file count
-          // exceeds the threshold, compact layout-preservingly (one
-          // file per value again). The compacted version carries the
-          // applied-batch watermark, so a crash between compaction and
-          // the epoch's WAL commit still replays as a skip — exactly
-          // the auto-compaction every lakehouse runs beside its
-          // streaming writers.
-          if (compactOver.exists(LakeTable.currentFiles(dir).size > _))
-            LakeTable.optimize(spark, dir, Long.MaxValue, Seq.empty,
-                               Some(layoutCol)) match {
-              case Left(reason) => throw new IllegalStateException(reason)
-              case Right(_) => ()
-            }
-          Some(v)
+    val v = upsertEpoch(spark, dir, batch, keys, Some(layoutCol),
+                        cdc = false, batchId, sink)
+    // auto-OPTIMIZE: continuous ingest accretes one file per touched
+    // layout value per epoch; once the live file count exceeds the
+    // threshold, compact layout-preservingly (one file per value again).
+    // The compacted version carries the applied-batch watermark, so a
+    // crash between compaction and the epoch's WAL commit still replays
+    // as a skip — exactly the auto-compaction every lakehouse runs
+    // beside its streaming writers.
+    if (v.nonEmpty && compactOver.exists(LakeTable.currentFiles(dir).size > _))
+      LakeTable.optimize(spark, dir, Long.MaxValue, Seq.empty,
+                         Some(layoutCol)) match {
         case Left(reason) => throw new IllegalStateException(reason)
+        case Right(_) => ()
       }
-    }
+    v
   }
 
   /** Streaming CDC apply at the PARTIAL-REWRITE operating point —
@@ -910,18 +830,29 @@ object StreamOps {
   def applyCdcIntoLakePartial(spark: SparkSession, dir: String,
                               batch: DataFrame, keys: Seq[String],
                               layoutCol: String, batchId: Long,
-                              sink: String = ""): Option[Long] = {
+                              sink: String = ""): Option[Long] =
+    upsertEpoch(spark, dir, batch, keys, Some(layoutCol), cdc = true,
+                batchId, sink)
+
+  /** The one body of the four foreachBatch lake helpers above: skip an
+    * epoch the sink's manifest watermark already covers (replay), fold
+    * the batch to its per-key winner, and commit it through the lake's
+    * one upsert engine ([[graft.sources.LakeTable.partialRewrite]]) —
+    * rewriting only the touched layout values under `layoutCol`, the
+    * whole table without one. None = replayed or empty epoch: nothing
+    * published and the watermark untouched, so a later replay with rows
+    * applies normally. */
+  private def upsertEpoch(spark: SparkSession, dir: String,
+                          batch: DataFrame, keys: Seq[String],
+                          layoutCol: Option[String], cdc: Boolean,
+                          batchId: Long, sink: String): Option[Long] = {
     import graft.sources.LakeTable
-    if (LakeTable.appliedBatch(dir, sink).exists(_ >= batchId)
-        || batch.isEmpty) None
-    else {
-      val winner = latestPerKey(batch, keys)
-      LakeTable.applyCdcPartial(spark, dir, winner, keys, layoutCol,
-                                Some(batchId), sink = sink)(
-          uniqueKeys(keys, "CDC apply")) match {
-        case Right(v) => Some(v)
-        case Left(reason) => throw new IllegalStateException(reason)
-      }
+    if (LakeTable.appliedBatch(dir, sink).exists(_ >= batchId)) None
+    else LakeTable.partialRewrite(spark, dir, latestPerKey(batch, keys),
+        cdc, keys, layoutCol, Some(batchId), Seq.empty, sink)(
+        uniqueKeys(keys, if (cdc) "CDC apply" else "merge")) match {
+      case Right(c) => Some(c.version).filter(_ => c.published)
+      case Left(reason) => throw new IllegalStateException(reason)
     }
   }
 

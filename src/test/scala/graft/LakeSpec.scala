@@ -970,6 +970,19 @@ class LakeSpec extends SparkTestBase {
     assert(LakeTable.applyCdcPartial(spark, dir, honest,
              Seq("custkey"), "band")(gate) == Right(2L))
     assert(!readKeys(dir).contains(40L))
+    // a change set carrying one key as both upsert and delete, on a
+    // one-band table: every live file rewrites and nothing carries, and
+    // the gate (the only check here) still sees the upserted key
+    val one = Files.createTempDirectory("graft_lake_ghost1_").toString
+    assert(LakeTable.commit(spark, one,
+      Seq((1L, 0L, 10L)).toDF("k", "band", "v"), Some("band"))(_ => None)
+      == Right(1L))
+    val pair = Seq((2L, 0L, 20L, "U"), (2L, 0L, 20L, "D"))
+      .toDF("k", "band", "v", "op")
+    val r1 = LakeTable.applyCdcPartial(spark, one, pair, Seq("k"), "band")(
+      _ => None)
+    assert(r1.left.exists(_.contains("ghost undelete")), r1)
+    assert(LakeTable.versions(one) == Seq(1L))
   }
 
   test("Append evolves the schema deterministically; all-null stats don't crash") {
@@ -1987,6 +2000,75 @@ class LakeSpec extends SparkTestBase {
       .toDF("k.x", "b.y", "v", "op"))
     assert(LakeTable.currentVersion(dir).contains(4L))
     assert(state() == Map(1L -> 11L, 2L -> 21L, 4L -> 41L, 5L -> 50L))
+  }
+
+  test("an empty change set publishes nothing: mergePartial and " +
+       "applyCdcPartial return the live version") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_lake_emptyup_").toString
+    val rows = Seq((1L, 0L, 10L), (2L, 1L, 20L)).toDF("k", "band", "v")
+    assert(LakeTable.commit(spark, dir, rows, Some("band"))(_ => None)
+      == Right(1L))
+    val none = rows.filter(col("k") < 0L)
+    assert(LakeTable.mergePartial(spark, dir, none, Seq("k"), "band")(
+      _ => None) == Right(1L))
+    assert(LakeTable.applyCdcPartial(spark, dir,
+      none.withColumn("op", lit("U")), Seq("k"), "band")(_ => None)
+      == Right(1L))
+    assert(LakeTable.versions(dir) == Seq(1L),
+      "an empty upsert must not mint a data-identical version")
+    assert(LakeTable.mergePartial(spark, dir,
+      Seq((2L, 1L, 21L)).toDF("k", "band", "v"), Seq("k"), "band")(
+      _ => None) == Right(2L))
+    // with no published version there is no live version to answer
+    val fresh = Files.createTempDirectory("graft_lake_emptyup0_").toString
+    assert(LakeTable.mergePartial(spark, fresh, none, Seq("k"), "band")(
+      _ => None).isLeft)
+    assert(LakeTable.applyCdcPartial(spark, fresh,
+      none.withColumn("op", lit("U")), Seq("k"), "band")(_ => None).isLeft)
+    assert(LakeTable.currentVersion(fresh).isEmpty)
+  }
+
+  test("a partial rewrite reads its inputs under the recorded schema " +
+       "after ADD COLUMNS and after a type widening") {
+    import spark.implicits._
+    // each table holds, under one layout value, a file written before
+    // the evolution and one written after it; the rewrite of that value
+    // reads both. Which footer a footer-inferred read would sample
+    // depends on the staging uuids, so every case runs on 8 tables.
+    for (i <- 1 to 8) {
+      val dir = Files.createTempDirectory(s"graft_lake_addcol_$i").toString
+      assert(LakeTable.commit(spark, dir,
+        Seq((1L, 0L, 10L), (2L, 0L, 20L)).toDF("k", "band", "v"),
+        Some("band"))(_ => None) == Right(1L))
+      assert(LakeTable.addColumns(dir, Seq("w" -> "BIGINT")) == Right(2L))
+      assert(LakeTable.append(spark, dir,
+        Seq((3L, 0L, 30L, 300L)).toDF("k", "band", "v", "w"),
+        Some("band"))(_ => None) == Right(3L))
+      assert(LakeTable.mergePartial(spark, dir,
+        Seq((1L, 0L, 11L, 110L)).toDF("k", "band", "v", "w"), Seq("k"),
+        "band")(_ => None) == Right(4L), s"table $i")
+      val got = LakeTable.read(spark, dir).collect().map(r =>
+        (r.getLong(0), r.getLong(2), Option(r.get(3)))).toSet
+      assert(got == Set((1L, 11L, Some(110L)), (2L, 20L, None),
+                        (3L, 30L, Some(300L))), s"table $i: $got")
+    }
+    for (i <- 1 to 8) {
+      val dir = Files.createTempDirectory(s"graft_lake_widen_$i").toString
+      assert(LakeTable.commit(spark, dir,
+        Seq((1L, 0L, 10), (2L, 0L, 20)).toDF("k", "band", "v"),
+        Some("band"))(_ => None) == Right(1L))
+      assert(LakeTable.alterColumnType(dir, "v", "BIGINT") == Right(2L))
+      assert(LakeTable.append(spark, dir,
+        Seq((3L, 0L, 30L)).toDF("k", "band", "v"),
+        Some("band"))(_ => None) == Right(3L))
+      assert(LakeTable.mergePartial(spark, dir,
+        Seq((1L, 0L, 11L)).toDF("k", "band", "v"), Seq("k"), "band")(
+        _ => None) == Right(4L), s"table $i")
+      val got = LakeTable.read(spark, dir).collect()
+        .map(r => r.getLong(0) -> r.getLong(2)).toMap
+      assert(got == Map(1L -> 11L, 2L -> 20L, 3L -> 30L), s"table $i: $got")
+    }
   }
 
   private def readKeys2(dir: String): Set[Long] =

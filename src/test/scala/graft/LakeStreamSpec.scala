@@ -557,6 +557,29 @@ class LakeStreamSpec extends SparkTestBase {
       .withColumn("band", col("custkey") % 4).filter(col("custkey") < 0L))
     assert(LakeTable.currentVersion(mdir).contains(1L))
     assert(LakeTable.appliedBatch(mdir, "graft-lake-stream").contains(0L))
+
+    // every keyed mode: an empty epoch publishes nothing either, on a
+    // fresh directory too (merge/cdc ride the touched-value collect,
+    // dvmerge its key-stats pass)
+    for ((mode, extra) <- Seq("merge" -> Seq.empty, "cdc" -> Seq("op"),
+                              "dvmerge" -> Seq.empty)) {
+      val d = Files.createTempDirectory(s"graft_lakesink_1pass$mode").toString
+      val s = new graft.sources.LakeStreamSink(d, mode, Some("band"),
+        Seq.empty, Seq("custkey"), "graft-lake-stream")
+      def epoch(keep: org.apache.spark.sql.Column) =
+        Seq((1L, 10L, "U")).toDF("custkey", "cents", "op")
+          .withColumn("band", col("custkey") % 4).filter(keep)
+          .select((Seq("custkey", "cents", "band") ++ extra).map(col): _*)
+      s.addBatch(0L, epoch(col("custkey") < 0L))
+      assert(LakeTable.currentVersion(d).isEmpty, mode)
+      s.addBatch(1L, epoch(lit(true)))
+      assert(LakeTable.currentVersion(d).contains(1L), mode)
+      s.addBatch(2L, epoch(col("custkey") < 0L))
+      assert(LakeTable.currentVersion(d).contains(1L),
+        s"an empty $mode epoch must not mint a version")
+      assert(LakeTable.appliedBatch(d, "graft-lake-stream").contains(1L),
+        s"an empty $mode epoch must not consume the watermark")
+    }
   }
 
   test("getOffset probes only the window above the last offset, " +

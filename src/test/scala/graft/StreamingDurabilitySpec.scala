@@ -414,6 +414,38 @@ class StreamingDurabilitySpec extends SparkTestBase {
       .map(r => (r.getLong(0), r.getDouble(1))).toSet
     assert(revived == Set((7L, 5.0)),
       s"the epoch after a truncate must repopulate: $revived")
+    // the LAYOUTED twin (applyCdcIntoLakePartial) takes the same wipe
+    // through the partial-rewrite engine: an empty version under the
+    // declared schema, a skipped replay, then a repopulating epoch
+    val lakeP = Files.createTempDirectory("graft_lake_cdc_wipep").toString
+    def banded(es: Event*) = es.toDF()
+      .withColumn("op", org.apache.spark.sql.functions.col("event_type"))
+      .withColumn("band", org.apache.spark.sql.functions.col("user_id") % 2L)
+    assert(StreamOps.applyCdcIntoLakePartial(spark, lakeP,
+      banded(ev(1, "2024-01-01 10:00:00", 1, "ins", 1.0),
+             ev(2, "2024-01-01 10:00:10", 2, "ins", 2.0)),
+      Seq("user_id"), "band", 0L).contains(1L))
+    val schemaP = graft.sources.LakeTable.read(spark, lakeP).schema
+    val wipeP = banded(ev(3, "2024-01-01 10:01:00", 1, "D", 0.0),
+                       ev(4, "2024-01-01 10:01:10", 2, "D", 0.0))
+    assert(StreamOps.applyCdcIntoLakePartial(spark, lakeP, wipeP,
+      Seq("user_id"), "band", 1L).contains(2L),
+      "a layouted full wipe must publish an empty version")
+    val emptyP = graft.sources.LakeTable.read(spark, lakeP)
+    assert(emptyP.count() == 0L, "the wiped layouted table is empty")
+    assert(emptyP.schema.fields.map(f => (f.name, f.dataType)).toSeq
+      == schemaP.fields.map(f => (f.name, f.dataType)).toSeq,
+      "the empty layouted version must keep the declared schema")
+    assert(StreamOps.applyCdcIntoLakePartial(spark, lakeP, wipeP,
+      Seq("user_id"), "band", 1L).isEmpty, "a replayed wipe must be skipped")
+    assert(StreamOps.applyCdcIntoLakePartial(spark, lakeP,
+      banded(ev(5, "2024-01-01 10:02:00", 7, "ins", 5.0)),
+      Seq("user_id"), "band", 2L).contains(3L))
+    val revivedP = graft.sources.LakeTable.read(spark, lakeP)
+      .select("user_id", "value").collect()
+      .map(r => (r.getLong(0), r.getDouble(1))).toSet
+    assert(revivedP == Set((7L, 5.0)),
+      s"the layouted epoch after a truncate must repopulate: $revivedP")
   }
 
   test("foreachBatch lake helpers select a key named k.x by its exact name") {
