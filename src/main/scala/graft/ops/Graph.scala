@@ -210,21 +210,38 @@ object Graph {
     * (consumers go through the memoized [[PurchaseGraph.triangle]]).
     * Returns (deg, corners, scaffold): per-node degree of the
     * thresholded graph (columns s, d), per-node triangle memberships
-    * (s, n_tri), and the internal cached edge set the CALLER must
-    * unpersist once both outputs are materialized (the memo builder
-    * does; the r6 shape leaked it from every consumer but labelprop).
+    * (s, n_tri), and the builder's three internal caches (the edge set,
+    * deg, and the oriented edges) that the CALLER must unpersist once
+    * both outputs are materialized (the memo builder does; the r6 shape
+    * leaked the edge cache from every consumer but labelprop).
     * The edge set keeps supplier pairs whose shared-part support exceeds
-    * mean + 2σ (both moments exact integer sums); triangles enumerate
-    * via the degree-orientation trick (each triangle found exactly once
-    * from its lowest-degree corner — the standard O(E^1.5) bound). */
+    * mean + 2σ (both moments exact integer sums); the enumeration on top
+    * of it is [[orientedTriangles]].
+    *
+    * One shuffle builds the part buckets, deg and the oriented edges are
+    * cached once each, and wedges expand from sorted adjacency arrays.
+    * Against a distinct → count → join-back bucket chain and an oe ⋈ oe
+    * wedge self-join over an uncached oe, on a 4-CPU VM (interleaved
+    * warm builds, deg + corners checkpointed as the memo does): sf0.01
+    * 56 → 26 stages, 224 → 89 tasks, median 6.65 → 2.80 s (8 builds
+    * each); sf0.1 56 → 26 stages, 238 → 97 tasks, median 11.75 → 5.94 s
+    * (4 each); deg and corners identical at sf0.001, sf0.01 and sf0.1. */
   private[graft] def triangleCorners(
       s: org.apache.spark.sql.SparkSession,
-      d: String): (DataFrame, DataFrame, DataFrame) = {
-    val ps0 = lineitem(s, d).select(col("l_partkey"), col("l_suppkey"))
+      d: String): (DataFrame, DataFrame, Seq[DataFrame]) = {
+    // part buckets in ONE shuffle on l_partkey: the distinct, the ≤64
+    // count and the supplier list all run on that one hash layout. The
+    // cap is a count window over the distinct (part, supplier) rows
+    // (the q_dedup_soft shape), so no part's supplier list is collected
+    // before its size is known ≤ 64 (the count-first bound)
+    val buckets = lineitem(s, d)
+      .select(col("l_partkey"), col("l_suppkey"))
+      .repartition(col("l_partkey"))
       .distinct()
-    val pc = ps0.groupBy("l_partkey").agg(count(lit(1)).as("c"))
-    val ps = ps0.join(pc.filter(col("c") <= 64).select("l_partkey"),
-                      Seq("l_partkey"))
+      .withColumn("c", count(lit(1)).over(Window.partitionBy("l_partkey")))
+      .filter(col("c") <= 64)
+      .groupBy("l_partkey")
+      .agg(sort_array(collect_list(col("l_suppkey"))).as("ss"))
     // pairs expand MAP-SIDE from each part's sorted in-row supplier array
     // (the cooccur discipline — and the shape the oracle's grp/UNNEST
     // CTEs always spelled): the join formulation double-shuffled the
@@ -235,8 +252,6 @@ object Graph {
     // one physical plan where ReusedExchange already dedupes the work —
     // cache boundaries only added job barriers (measured neutral-to-
     // worse).
-    val buckets = ps.groupBy("l_partkey")
-      .agg(sort_array(collect_list(col("l_suppkey"))).as("ss"))
     val pairs = buckets
       .select(posexplode(col("ss")).as(Seq("i", "s1")), col("ss"))
       .select(col("s1"),
@@ -249,20 +264,38 @@ object Graph {
                      + lit(2) * sqrt((col("sq") - col("s_") * lit(1.0)
                                       * col("s_") / col("n")) / col("n")))
                     * lit(1000000.0) + lit(0.5)).cast("long").as("t"))
-    // cache the sparsified edge set: e feeds deg, the orientation join,
-    // and (via deg) the clustercoeff ratio, and the consumers mix
-    // broadcast- and shuffle-exchange shapes that AQE's runtime stage
-    // reuse cannot always unify. A stats-bearing InMemoryRelation keeps
-    // the 17 k-row e broadcastable; an RDD checkpoint instead LOSES the
-    // stats and demoted every downstream join to sort-merge (measured
-    // 2.3 → 4.5 s for triangles). Variants with an eager materializing
-    // count, extra deg/oe caches, or lineage cuts all measured within
-    // ambient-load noise of this form — kept simplest.
+    // cache the sparsified edge set: e feeds deg and the orientation
+    // join, whose broadcast- and shuffle-exchange shapes AQE's runtime
+    // stage reuse cannot always unify. A stats-bearing InMemoryRelation
+    // keeps the 17 k-row e broadcastable; an RDD checkpoint instead LOSES
+    // the stats and demoted every downstream join to sort-merge
+    // (measured 2.3 → 4.5 s for triangles)
     val e = pairs.crossJoin(broadcast(thr))
       .filter(col("support") * lit(1000000L) > col("t"))
       .select("s1", "s2").cache()
+    val (deg, corners, caches) = orientedTriangles(e)
+    (deg, corners, e +: caches)
+  }
+
+  /** Degree-oriented triangle enumeration over an undirected edge frame
+    * `e` (columns s1, s2; each edge once, in either direction, no
+    * self-loops). Returns (deg, corners, caches): per-node degree (s, d),
+    * per-node triangle memberships (s, n_tri; nodes on no triangle are
+    * absent), and the two caches (deg and the oriented edges) the caller
+    * unpersists once both outputs are materialized.
+    *
+    * Each edge points from its lower to its higher (degree, id) end, so
+    * every triangle is found exactly once, from its lowest corner, and a
+    * node's out-degree is at most √(2E) (the standard O(E^1.5) bound).
+    * Wedges expand MAP-SIDE from each node's out-neighbour array sorted
+    * by (degree, id) — the posexplode/slice step of the pair expansion
+    * above — and close with one equi-join on the oriented edge. deg and
+    * oe are cached once each, so the e ⋈ deg ⋈ deg orientation runs
+    * once for both of oe's readers. */
+  private[graft] def orientedTriangles(e: DataFrame)
+      : (DataFrame, DataFrame, Seq[DataFrame]) = {
     val deg = e.select(col("s1").as("s")).unionAll(e.select(col("s2")))
-      .groupBy("s").agg(count(lit(1)).as("d"))
+      .groupBy("s").agg(count(lit(1)).as("d")).cache()
     val fwd = col("d1") < col("d2") || (col("d1") === col("d2")
                                         && col("s1") < col("s2"))
     val oe = e
@@ -271,21 +304,25 @@ object Graph {
       .select(when(fwd, col("s1")).otherwise(col("s2")).as("u"),
               when(fwd, col("s2")).otherwise(col("s1")).as("v"),
               when(fwd, col("d2")).otherwise(col("d1")).as("dv"))
-    val oe2 = oe.select(col("u").as("u2"), col("v").as("v2"),
-                        col("dv").as("dv2"))
-    val w = oe
-      .join(oe2,
-            col("u") === col("u2")
-              && (col("dv") < col("dv2")
-                  || (col("dv") === col("dv2") && col("v") < col("v2"))))
-      .select(col("u"), col("v").as("a"), col("v2").as("b"))
-    val tri = w.join(oe.select(col("u").as("a"), col("v").as("b")),
-                     Seq("a", "b"))
+      .cache()
+    // (dv, v) order is the orientation order, so in every wedge (u, a, b)
+    // taken from the sorted array a precedes b, and the closing edge, if
+    // present, is the oriented a → b
+    val wedges = oe.groupBy("u")
+      .agg(sort_array(collect_list(struct(col("dv"), col("v")))).as("out"))
+      .select(col("u"), posexplode(col("out")).as(Seq("i", "x")),
+              col("out"))
+      .select(col("u"), col("x.v").as("a"),
+              explode(slice(col("out"), col("i") + lit(2), size(col("out"))))
+                .as("y"))
+      .select(col("u"), col("a"), col("y.v").as("b"))
+    val tri = wedges.join(oe.select(col("u").as("a"), col("v").as("b")),
+                          Seq("a", "b"))
     val corners = tri.select(col("u").as("s"))
       .unionAll(tri.select(col("a")))
       .unionAll(tri.select(col("b")))
       .groupBy("s").agg(count(lit(1)).as("n_tri"))
-    (deg, corners, e)
+    (deg, corners, Seq(deg, oe))
   }
 
   /** q_graph_labelprop's fixed round count (see the op's docstring for

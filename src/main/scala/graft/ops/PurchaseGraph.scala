@@ -132,8 +132,9 @@ object PurchaseGraph {
 
   /** (deg, corners) of the sparsified co-supply triangle machinery —
     * shared by q_graph_triangles and q_graph_clustercoeff. Built in one
-    * pass (corners needs deg anyway); the builder's internal edge cache
-    * is released after both artifacts materialize. */
+    * pass (corners needs deg anyway); the builder's internal caches (the
+    * edge set, deg and the oriented edges) are released after both
+    * artifacts materialize. */
   def triangle(s: SparkSession, d: String): (DataFrame, DataFrame) =
     memo.synchronized {
       val dKey = s"triDeg:$d"
@@ -144,7 +145,7 @@ object PurchaseGraph {
         val (deg, corners, scaffold) = Graph.triangleCorners(s, d)
         m(dKey) = deg.localCheckpoint(true)
         m(cKey) = corners.localCheckpoint(true)
-        scaffold.unpersist()
+        scaffold.foreach(_.unpersist())
       }
       (m(dKey), m(cKey))
     }

@@ -1951,9 +1951,14 @@ object LakeTable {
     // the read schema: the live logical schema, or (unborn tables) the
     // declared pending schema the caller passes
     val logical = currentLogicalSchema(dir)
+    // self-describing sources merge EVERY file's footer schema: the
+    // default infers it from one sampled footer, so a column only some
+    // source files carry slipped past the schema gate below and was
+    // silently dropped
+    val footers = spark.read.option("mergeSchema", "true")
     val df = fmt match {
-      case "parquet" => spark.read.parquet(paths: _*)
-      case "orc" => spark.read.orc(paths: _*)
+      case "parquet" => footers.parquet(paths: _*)
+      case "orc" => footers.orc(paths: _*)
       case other =>
         val s = (if (logical.nonEmpty) Some(structOf(logical))
                  else declaredSchema).getOrElse(

@@ -2071,6 +2071,31 @@ class LakeSpec extends SparkTestBase {
     }
   }
 
+  test("COPY INTO gates on every source file's columns: a column only " +
+       "one file carries is refused without mergeSchema and lands with it") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_lake_copyms_").toString
+    assert(LakeTable.append(spark, dir, Seq((1L, 10L)).toDF("a", "b"))(
+      _ => None) == Right(1L))
+    val src = Files.createTempDirectory("graft_copyms_src_").toString
+    Seq((2L, 20L)).toDF("a", "b").coalesce(1).write.parquet(s"$src/f1")
+    Seq((3L, 30L, 300L)).toDF("a", "b", "c")
+      .coalesce(1).write.parquet(s"$src/f2")
+    val refused = LakeTable.copyInto(spark, dir, src)(_ => None)
+    assert(refused.left.exists(m =>
+      m.startsWith("COPY INTO schema mismatch") && m.contains("column(s) c")),
+      s"f2's extra column must reach the schema gate: $refused")
+    assert(LakeTable.versions(dir) == Seq(1L),
+      "the refused copy must publish nothing")
+    assert(LakeTable.copyInto(spark, dir, src, mergeSchema = true)(
+      _ => None) == Right((2L, 2L, 2L)))
+    val t = LakeTable.read(spark, dir)
+    assert(t.columns.toSeq == Seq("a", "b", "c"))
+    assert(t.orderBy("a").collect().map(r =>
+      (r.getLong(0), r.getLong(1), Option(r.get(2)))).toSeq
+      == Seq((1L, 10L, None), (2L, 20L, None), (3L, 30L, Some(300L))))
+  }
+
   private def readKeys2(dir: String): Set[Long] =
     LakeTable.read(spark, dir).collect().map(_.getAs[Long]("k")).toSet
 }

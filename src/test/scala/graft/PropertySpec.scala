@@ -531,4 +531,101 @@ class PropertySpec extends SparkTestBase {
         == Seq(10L, 20L, 30L), s"rename to $name")
     }
   }
+
+  /** Brute-force (deg, corners) of an undirected edge list: degree per
+    * node, and per node the number of triangles it lies on. */
+  private def bruteTriangles(edges: Seq[(Long, Long)])
+      : (Map[Long, Long], Map[Long, Long]) = {
+    val und = edges.map { case (a, b) => (a min b, a max b) }
+    val adj = und.flatMap { case (a, b) => Seq(a -> b, b -> a) }
+      .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).toSet }
+    val tris = for {
+      (a, b) <- und
+      c <- adj(a).intersect(adj(b)) if c > b
+    } yield Seq(a, b, c)
+    (adj.map { case (k, vs) => k -> vs.size.toLong },
+     tris.flatten.groupBy(identity).map { case (k, v) => k -> v.size.toLong })
+  }
+
+  /** Runs `f` (a triangle builder) to collected (deg, corners) maps,
+    * releases the caches it returns and checks it registered no other. */
+  private def collectTriangles(
+      f: => (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
+             Seq[org.apache.spark.sql.DataFrame]))
+      : (Map[Long, Long], Map[Long, Long]) = {
+    spark.catalog.clearCache()
+    val (deg, corners, caches) = f
+    def pairs(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val got = (pairs(deg), pairs(corners))
+    caches.foreach(_.unpersist(true))
+    assert(spark.sharedState.cacheManager.isEmpty, "a builder cache leaked")
+    got
+  }
+
+  test("oriented triangle enumeration == brute force on generated graphs") {
+    import spark.implicits._
+    val named: Seq[Seq[(Long, Long)]] = {
+      def complete(n: Int) =
+        for (i <- 1 to n; j <- i + 1 to n) yield (i.toLong, j.toLong)
+      // circulant C_n(1..k): every node has degree 2k, so the id
+      // tie-break alone orients every edge
+      def circulant(n: Int, k: Int) =
+        for (i <- 0 until n; j <- 1 to k) yield (i.toLong, ((i + j) % n).toLong)
+      Seq((1L to 8L).map(i => (0L, i)), // a star
+          complete(4), complete(5),
+          circulant(3, 1), circulant(4, 1), circulant(6, 1),
+          circulant(8, 2), circulant(11, 3),
+          // two triangles sharing the edge 2-3
+          Seq((1L, 2L), (1L, 3L), (2L, 3L), (2L, 4L), (3L, 4L)))
+    }
+    val genGraph = for {
+      n <- Gen.choose(3, 12)
+      p <- Gen.choose(0.2, 0.9)
+      keep <- Gen.listOfN(n * (n - 1) / 2, Gen.choose(0.0, 1.0))
+      flip <- Gen.listOfN(n * (n - 1) / 2, Gen.oneOf(true, false))
+    } yield {
+      val all = for (i <- 0 until n; j <- i + 1 until n)
+        yield (i.toLong, j.toLong)
+      all.zip(keep.zip(flip)).collect {
+        case ((a, b), (u, f)) if u < p => if (f) (b, a) else (a, b)
+      }
+    }
+    // one run over the disjoint union (graph g's node v is g*1000 + v):
+    // degrees and triangles are per component, and the offset keeps every
+    // graph's id order, so each graph's tie-breaks are its own
+    val graphs = named ++ samples(genGraph, 24)
+    val union = graphs.zipWithIndex.flatMap { case (es, g) =>
+      es.map { case (a, b) => (g * 1000L + a, g * 1000L + b) }
+    }
+    val got = collectTriangles(graft.ops.Graph.orientedTriangles(
+      union.toDF("s1", "s2")))
+    assert(got == bruteTriangles(union))
+    assert(got._2.nonEmpty && got._2.size < got._1.size,
+      "the generated graphs must hold nodes on and off triangles")
+    assert(collectTriangles(graft.ops.Graph.orientedTriangles(
+      Seq.empty[(Long, Long)].toDF("s1", "s2"))) == ((Map.empty, Map.empty)))
+  }
+
+  test("triangle part buckets: a part with 64 suppliers contributes pairs, " +
+       "one with 65 contributes none") {
+    import spark.implicits._
+    // parts 1, 2: suppliers 1..64 (a duplicate row must not count toward
+    // the cap); parts 3, 4: suppliers 101..165; their pairs have support
+    // 2. 20k two-supplier parts add support-1 pairs, putting the
+    // mean + 2σ threshold at ~1.67, so every surviving bucket pair
+    // passes it and no filler pair does
+    val rows = Seq((1L, 1L)) ++
+      (for (p <- 1L to 2L; sp <- 1L to 64L) yield (p, sp)) ++
+      (for (p <- 3L to 4L; sp <- 101L to 165L) yield (p, sp)) ++
+      (0L until 20000L).flatMap(k =>
+        Seq((1000L + k, 10000L + 2 * k), (1000L + k, 10001L + 2 * k)))
+    val d = java.nio.file.Files.createTempDirectory("graft_prop_tri_").toString
+    rows.toDF("l_partkey", "l_suppkey").write.parquet(s"$d/lineitem.parquet")
+    val (deg, corners) = collectTriangles(
+      graft.ops.Graph.triangleCorners(spark, d))
+    assert(deg == (1L to 64L).map(_ -> 63L).toMap,
+      "K64 over the 64-supplier part, nothing from the 65-supplier one")
+    assert(corners == (1L to 64L).map(_ -> 63L * 62L / 2L).toMap)
+  }
 }

@@ -99,19 +99,23 @@ class ScaleSpec extends SparkTestBase {
     }
   }
 
-  test("triangle wedge/closing joins are equi joins; only the 1-row threshold broadcasts") {
+  test("triangle corners plan has no cross or non-threshold nested-loop " +
+       "join, and releasing the scaffold unregisters every builder cache") {
     // inspect the RAW builder, not the registry op: the op reads the
     // memoized checkpoint (a LogicalRDD scan that would pass these
     // asserts vacuously); the machinery under test lives in the builder
+    // start from an empty CacheManager, so "empty after the release"
+    // means the scaffold held every cache the builder registered
+    spark.catalog.clearCache()
     val (_, corners, scaffold) = graft.ops.Graph.triangleCorners(spark, sf)
     val plan = corners.queryExecution.executedPlan.toString
-    scaffold.unpersist()
+    scaffold.foreach(_.unpersist())
     assert(!plan.contains("CartesianProduct"),
       s"triangle counting must never cross-join the corpus:\n$plan")
     // the only sanctioned nested-loop join is the 1-row mean+2σ threshold
     // frame broadcast against the pair table (its condition references
-    // `support`). The wedge join (on the oriented source) and the closing
-    // join (on the target pair) must both be hash/sort-merge equi joins.
+    // `support`). The orientation joins (on the edge ends) and the
+    // closing join (on the oriented target pair) must be equi joins.
     // (Count lines, not occurrences — the plan STRING duplicates shared
     // subtrees per reference, so the one BNLJ prints many times.)
     val rogue = plan.linesIterator
@@ -120,6 +124,8 @@ class ScaleSpec extends SparkTestBase {
       .toSeq
     assert(rogue.isEmpty,
       s"non-threshold nested-loop join in triangle plan:\n${rogue.mkString("\n")}")
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "a builder cache is still registered after the scaffold's release")
   }
 
   test("lateral join decorrelates to a rank-limit window, not per-row re-execution") {
